@@ -19,7 +19,20 @@ the `functionPath` equivalent.
         event_source="myapp",
     )
     events = pipe.events(records_df)               # batch
+    dead   = pipe.quarantine(records_df)           # same pass as events
     query  = pipe.run_stream(stream_df, sink_path=..., checkpoint_path=...)
+
+On the dynamic lane, ``events(records)`` and ``quarantine(records)`` on
+the same ``records`` DataFrame are projections of one persisted,
+disposition-tagged frame, so the Python unmarshall + diff runs once per
+record for both. The pipeline holds at most one such frame and
+unpersists it when another ``records`` frame arrives, on ``close()``
+(or at the end of a ``with pipe:`` block), and when the pipeline is
+garbage-collected. Until then Spark's cache answers every identical
+plan from it, other pipelines and the free functions over the same
+source included, so close the pipeline before re-reading changed input.
+The typed lane's quarantine() tags its records unpersisted: nothing
+shares that frame.
 """
 
 from __future__ import annotations
@@ -30,9 +43,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from cdk_dynamodb_cdc_spark.operators.pipeline import (
-    cdc_change_events,
+    pk_filter,
+    project,
     publish,
-    quarantine,
+    tag_records,
 )
 from cdk_dynamodb_cdc_spark.operators.reconstruct import (
     reconstruct_old_images,
@@ -58,6 +72,8 @@ class CdcPipeline:
         presign_secret: str | None = None,
         presign_ttl_hours: int = 24,
     ) -> None:
+        # (records, its persisted tagged frame) of the last dynamic-lane call
+        self._cached: tuple[DataFrame, DataFrame] | None = None
         self.pk_filters = pk_filters
         self.item_schema = item_schema
         self.reconstruct_missing_old = reconstruct_missing_old
@@ -84,15 +100,56 @@ class CdcPipeline:
 
     # -- batch lane -------------------------------------------------------
 
+    def _tag(self, records: DataFrame) -> DataFrame:
+        """The dynamic lane's disposition-tagged frame of `records`,
+        after old-image reconstruction when enabled."""
+        if self.reconstruct_missing_old:
+            records = reconstruct_old_images(records)
+        return tag_records(records, self.pk_filters)
+
+    def _shared(self, records: DataFrame) -> DataFrame:
+        """`_tag(records)`, persisted once per `records` DataFrame and
+        shared by the dynamic lane's events() and quarantine()."""
+        if self._cached is None or self._cached[0] is not records:
+            self.close()
+            self._cached = (records, self._tag(records).persist())
+        return self._cached[1]
+
+    def close(self) -> None:
+        """Unpersist the shared frame, if any."""
+        if self._cached is not None:
+            tagged = self._cached[1]
+            self._cached = None
+            tagged.unpersist()
+
+    def __enter__(self) -> CdcPipeline:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
+
+    def __del__(self) -> None:
+        try:
+            self.close()
+        except Exception:  # the session may already be stopped
+            pass
+
     def events(self, records: DataFrame) -> DataFrame:
         """records (CDC_RECORD_SCHEMA) -> change events.
 
         Typed lane when `item_schema` is declared (pure JVM), dynamic
         lane otherwise; optional old-image reconstruction first; the
         custom transform last."""
+        schema = self.item_schema
+        if schema is None:
+            return self._finish(project(
+                self._shared(records),
+                "event",
+                claim_check_base=self.claim_check_base,
+                claim_check_threshold=self.claim_check_threshold,
+            ))
         if self.reconstruct_missing_old:
             records = reconstruct_old_images(records)
-        schema = self.item_schema
         if schema == "infer":
             # drift-profile schema inference (operators/monitor.py):
             # one profiling pass over THIS batch, then the zero-Python
@@ -105,27 +162,30 @@ class CdcPipeline:
             )
 
             schema = infer_item_schema(records)
-        if schema is not None:
-            from cdk_dynamodb_cdc_spark.operators.pipeline import pk_filter
-
-            out = cdc_change_events_typed(
-                pk_filter(records, self.pk_filters),
-                schema,
-                claim_check_base=self.claim_check_base,
-                claim_check_threshold=self.claim_check_threshold,
-            )
-        else:
-            out = cdc_change_events(
-                records,
-                pk_filters=self.pk_filters,
-                claim_check_base=self.claim_check_base,
-                claim_check_threshold=self.claim_check_threshold,
-            )
+        out = cdc_change_events_typed(
+            pk_filter(records, self.pk_filters),
+            schema,
+            claim_check_base=self.claim_check_base,
+            claim_check_threshold=self.claim_check_threshold,
+        )
         return self._finish(out)
 
     def quarantine(self, records: DataFrame) -> DataFrame:
-        """Rows that failed per-record processing (A3 dead letters)."""
-        return quarantine(records, pk_filters=self.pk_filters)
+        """Rows that failed per-record processing (A3 dead letters).
+
+        On the dynamic lane this projects the frame events() shares; on
+        the typed lane, whose events() does not tag, it tags `records`
+        on its own, unpersisted."""
+        tagged = (
+            self._shared(records) if self.item_schema is None
+            else self._tag(records)
+        )
+        return project(
+            tagged,
+            "error",
+            claim_check_base=self.claim_check_base,
+            claim_check_threshold=self.claim_check_threshold,
+        )
 
     def published(self, records: DataFrame) -> DataFrame:
         """Change events wrapped in the publish envelope (A11)."""

@@ -30,7 +30,8 @@ engine's behavior, not reference output.
 
 Two implementations:
   1. :func:`compare_images` — pure Python on parsed JSON (dynamic lane),
-     wrapped Arrow-vectorized in :func:`diff_udf`.
+     called per record by the one ``mapInPandas`` pass in
+     ``operators/pipeline.py``.
   2. :func:`struct_diff_exprs` (in ``operators/typed_diff.py``) — generated
      Column expressions for a known StructType: fully JVM-side, codegen'd.
 """
@@ -40,10 +41,6 @@ from __future__ import annotations
 import json
 from decimal import Decimal
 from typing import Any
-
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from cdk_dynamodb_cdc_spark.functions.dynamo import dumps_canonical
 
@@ -126,15 +123,6 @@ def compare_images(
     return changed, before, after
 
 
-DIFF_RESULT_TYPE = T.StructType(
-    [
-        T.StructField("attributes_changed", T.ArrayType(T.StringType()), False),
-        T.StructField("before", T.StringType(), False),
-        T.StructField("after", T.StringType(), False),
-    ]
-)
-
-
 def diff_json_strings(new_json: str | None, old_json: str | None) -> tuple:
     # parse_float=Decimal keeps the dynamic lane exact end-to-end: the
     # canonical JSON images carry arbitrary-precision numbers written by
@@ -148,21 +136,3 @@ def diff_json_strings(new_json: str | None, old_json: str | None) -> tuple:
     )
     changed, before, after = compare_images(new_image, old_image)
     return changed, dumps_canonical(before), dumps_canonical(after)
-
-
-@F.pandas_udf(DIFF_RESULT_TYPE)
-def diff_udf(new_json: pd.Series, old_json: pd.Series) -> pd.DataFrame:
-    """Dynamic-lane diff: two plain-JSON string columns in, struct out.
-
-    Arrow-batched; the per-row work is dict traversal over already-parsed
-    JSON, the dominant cost is the parse itself. For known schemas prefer
-    the typed lane (pure Column expressions, whole-stage codegen).
-    """
-    out = [
-        diff_json_strings(
-            None if pd.isna(n) else n,
-            None if pd.isna(o) else o,
-        )
-        for n, o in zip(new_json, old_json)
-    ]
-    return pd.DataFrame(out, columns=["attributes_changed", "before", "after"])

@@ -7,21 +7,43 @@ and inside a Structured Streaming micro-batch (``streaming/stream.py``).
 Stage map to the reference (``/root/reference/lib/lambda/dynamo-stream-handler.ts``):
 
   null-guards (:92-97)          -> declarative ``filter`` (A4)
-  unmarshall (:101-110)         -> Arrow-vectorized pandas UDF, fused with
-  compareJSON (:29-87,112-116)  -> the diff into ONE Python exchange (A5+A6)
-  per-record try/catch (:20-26) -> error column + quarantine split (A3)
-  event construction (:118-125) -> ``select`` (A8)
-  no-op MODIFY drop (:126-128)  -> ``filter`` on array size (A7)
+  unmarshall (:101-110)         -> one Arrow-batched ``mapInPandas`` pass
+  compareJSON (:29-87,112-116)  -> per record: unmarshall, diff and tag
+  per-record try/catch (:20-26) -> ``error`` column, disposition ``error`` (A3)
+  no-op MODIFY drop (:126-128)  -> disposition ``noop`` (A7)
+  event construction (:118-125) -> ``select`` of disposition ``event`` (A8)
   conditional images (:134-138) -> ``when``/``otherwise`` (A9)
   claim check (:139-166)        -> size split + side write (A10, claim_check.py)
 
-Scale notes: the only Python in the plan is one fused pandas UDF over the
-two image columns (unavoidable for dynamic schemas — the diff is defined
-over arbitrary nested JSON). Everything before it (pk filters, null
-guards, column pruning) is Catalyst-visible and pushes into the source
-scan, so at 100 TB filtered records never reach Python. The UDF is
-embarrassingly parallel and partition-local: no shuffle anywhere in this
-pipeline — output partitioning == source partitioning.
+Scale notes: the only Python in the plan is one pass
+(:func:`tag_records`) that runs the reference's per-record try/catch
+once: unmarshall, diff, and the record's disposition — ``event``,
+``noop`` or ``error`` — decided together. Events and dead letters are
+both projections of that disposition-tagged frame. Python is unavoidable
+for dynamic schemas (the diff is defined over arbitrary nested JSON), so
+it sees as little as possible:
+
+* Everything before it (pk filters, null guards, column pruning) is
+  Catalyst-visible and pushes into the source scan, so at 100 TB
+  filtered records never reach Python.
+* Into Python go the two raw images, the keys (``pk``, ``sk``, optional
+  ``keys_json``) and ``event_id, seq, ts, operation, size_bytes``, which
+  ride through unchanged. Out come the keys, the diff (``attributes_changed``,
+  ``before``, ``after``), the canonical images, ``error`` and
+  ``disposition``; the raw images are not sent back. Images are
+  serialized only where an event can carry them: never for no-ops or
+  failures, and the old image only for REMOVEs.
+* The pass is embarrassingly parallel and partition-local: no shuffle
+  anywhere in this pipeline — output partitioning == source
+  partitioning.
+
+The free functions :func:`cdc_change_events` and :func:`quarantine` each
+build the tagged frame, so calling both runs the pass twice.
+``CdcPipeline`` (``api.py``) persists it instead: ``events(records)``
+and ``quarantine(records)`` on the same ``records`` DataFrame share one
+pass, and the pipeline releases the frame when a different ``records``
+frame arrives, on ``close()`` (or at the end of a ``with`` block), or
+when it is garbage-collected.
 """
 
 from __future__ import annotations
@@ -37,8 +59,15 @@ from cdk_dynamodb_cdc_spark.functions.diff import compare_images
 from cdk_dynamodb_cdc_spark.functions.dynamo import dumps_canonical, unmarshall
 from cdk_dynamodb_cdc_spark.schemas import CLAIM_CHECK_THRESHOLD
 
-_DIFF_COLS = "attributes_changed array<string>, before string, after string, " \
-    "u_pk string, u_sk string, u_new_image string, u_old_image string, error string"
+# Columns the projections read that ride through the Python pass as they
+# are; the raw images and keys go in, only their results come out.
+_PASS_THROUGH = ["event_id", "seq", "ts", "operation", "size_bytes"]
+_KERNEL_IN = ["new_image", "old_image", "keys_json", "pk", "sk", "operation"]
+_KERNEL_OUT = {
+    "pk": "string", "sk": "string", "attributes_changed": "array<string>",
+    "before": "string", "after": "string", "new_image": "string",
+    "old_image": "string", "error": "string", "disposition": "string",
+}
 
 
 def pk_filter(df: DataFrame, pk_filters: list[str] | None) -> DataFrame:
@@ -85,8 +114,10 @@ def null_guards(df: DataFrame) -> DataFrame:
     )
 
 
-def _diff_record(new_raw, old_raw, keys_raw, pk, sk) -> tuple:
-    """unmarshall + diff + key extraction for one record; errors isolate."""
+def _diff_record(new_raw, old_raw, keys_raw, pk, sk, operation) -> tuple:
+    """unmarshall + diff + key extraction + disposition for one record;
+    errors isolate. Images are serialized only where an event can carry
+    them: not for no-ops, and the old image only for REMOVEs (A9)."""
     try:
         new_img = unmarshall(json.loads(new_raw)) if new_raw is not None else None
         old_img = unmarshall(json.loads(old_raw)) if old_raw is not None else None
@@ -94,71 +125,75 @@ def _diff_record(new_raw, old_raw, keys_raw, pk, sk) -> tuple:
             keys = unmarshall(json.loads(keys_raw)) or {}
             pk, sk = keys.get("pk"), keys.get("sk")
         changed, before, after = compare_images(new_img, old_img)
+        if operation == "MODIFY" and not changed:  # A7 (:126-128)
+            return (pk, sk, changed, None, None, None, None, None, "noop")
         return (
+            pk,
+            sk,
             changed,
             dumps_canonical(before),
             dumps_canonical(after),
-            pk,
-            sk,
             dumps_canonical(new_img) if new_img is not None else None,
-            dumps_canonical(old_img) if old_img is not None else None,
+            dumps_canonical(old_img)
+            if old_img is not None and operation == "REMOVE" else None,
             None,
+            "event",
         )
     except Exception as exc:  # row-level fault isolation (A3, :20-26)
-        return (None, None, None, None, None, None, None, f"{type(exc).__name__}: {exc}")
+        return (None, None, None, None, None, None, None,
+                f"{type(exc).__name__}: {exc}", "error")
 
 
-def _col_or_none(pdf: pd.DataFrame, name: str) -> list:
-    if name in pdf.columns:
-        return [None if pd.isna(v) else v for v in pdf[name]]
-    return [None] * len(pdf)
+def _column(pdf: pd.DataFrame, name: str) -> list:
+    # Arrow hands string columns over as object arrays with None for null
+    return pdf[name].tolist() if name in pdf.columns else [None] * len(pdf)
 
 
 def _diff_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [
-        "attributes_changed", "before", "after",
-        "u_pk", "u_sk", "u_new_image", "u_old_image", "error",
-    ]
     for pdf in batches:
-        rows = zip(
-            _col_or_none(pdf, "new_image"),
-            _col_or_none(pdf, "old_image"),
-            _col_or_none(pdf, "keys_json"),
-            _col_or_none(pdf, "pk"),
-            _col_or_none(pdf, "sk"),
-        )
+        rows = zip(*(_column(pdf, c) for c in _KERNEL_IN))
         out = pd.DataFrame(
-            [_diff_record(*r) for r in rows], columns=cols, index=pdf.index
+            [_diff_record(*r) for r in rows], columns=list(_KERNEL_OUT),
+            index=pdf.index,
         )
-        yield pd.concat([pdf, out], axis=1)
+        yield pd.concat([pdf[_PASS_THROUGH], out], axis=1)
 
 
-def cdc_change_events(
-    records: DataFrame,
-    *,
-    pk_filters: list[str] | None = None,
-    claim_check_base: str | None = None,
-    claim_check_threshold: int = CLAIM_CHECK_THRESHOLD,
-    keep_errors: bool = False,
-) -> DataFrame:
-    """Full record->event transform. Input: CDC_RECORD_SCHEMA (+ optional
-    ``keys_json``). Output: CHANGE_EVENT_SCHEMA (+ ``error`` when
-    ``keep_errors``); no-op MODIFYs dropped; large payloads carry an
-    ``images_url`` pointer instead of inlined images (side write is the
-    caller's job via :mod:`claim_check` — this stage only computes columns).
+def tag_records(records: DataFrame, pk_filters: list[str] | None = None) -> DataFrame:
+    """The one Python pass of the dynamic lane: pk filter, null guards,
+    then unmarshall + diff per record, tagged with its ``disposition``
+    (``event``, ``noop`` or ``error``). Change events and dead letters
+    are projections of this frame (:func:`project`), so a caller that
+    persists it runs the Python once for both.
+
+    Input: CDC_RECORD_SCHEMA (+ optional ``keys_json``). Output: the
+    pass-through columns ``event_id, seq, ts, operation, size_bytes``
+    plus ``pk, sk, attributes_changed, before, after, new_image,
+    old_image, error, disposition`` — images as canonical plain JSON.
     """
     src = null_guards(pk_filter(records, pk_filters))
+    src = src.select(*dict.fromkeys(
+        [*_PASS_THROUGH, *(c for c in _KERNEL_IN if c in src.columns)]))
+    schema = {c: src.schema[c].dataType.simpleString() for c in _PASS_THROUGH}
+    schema.update(_KERNEL_OUT)
+    return src.mapInPandas(
+        _diff_batches, schema=", ".join(f"{c} {t}" for c, t in schema.items())
+    )
 
-    in_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in src.schema)
-    diffed = src.mapInPandas(_diff_batches, schema=f"{in_schema}, {_DIFF_COLS}")
 
-    ok = diffed.filter(F.col("error").isNull()) if not keep_errors else diffed
-
-    # A7: drop MODIFYs whose diff is empty (:126-128); error rows (null
-    # diff) pass through so the quarantine split sees them.
-    noop = (F.col("operation") == "MODIFY") & (F.size("attributes_changed") == 0)
-    ok = ok.filter(F.col("error").isNotNull() | ~F.coalesce(noop, F.lit(False)))
-
+def project(
+    tagged: DataFrame,
+    disposition: str,
+    *,
+    claim_check_base: str | None = None,
+    claim_check_threshold: int = CLAIM_CHECK_THRESHOLD,
+) -> DataFrame:
+    """One disposition of a :func:`tag_records` frame, as events
+    (CHANGE_EVENT_SCHEMA): ``"event"`` gives the change events,
+    ``"error"`` the dead letters (A3), which add the ``error`` column.
+    Large payloads carry an ``images_url`` pointer instead of inlined
+    images (side write is the caller's job via :mod:`claim_check` — this
+    stage only computes columns)."""
     # Reference: `if (size && size < SIZE_THRESHOLD)` (:134) — a missing or
     # zero SizeBytes is falsy in JS and takes the claim-check branch.
     small = (
@@ -173,32 +208,53 @@ def cdc_change_events(
                      F.col("event_id"), F.lit(".json")),
         )
     )
-    out_cols = [
-        F.col("event_id"),
-        F.col("seq"),
-        F.col("ts"),
-        F.col("operation"),
-        F.col("u_pk").alias("pk"),
-        F.col("u_sk").alias("sk"),
-        F.col("attributes_changed"),
-        F.col("before"),
-        F.col("after"),
+    cols = [
+        "event_id", "seq", "ts", "operation", "pk", "sk",
+        "attributes_changed", "before", "after",
         # A9 (:134-138): new image inlined when small; old image only for
-        # small REMOVEs; neither when claim-checked.
-        F.when(small, F.col("u_new_image")).alias("new_image"),
-        F.when(small & (F.col("operation") == "REMOVE"), F.col("u_old_image"))
-        .alias("old_image"),
+        # small REMOVEs (the kernel serializes it for REMOVEs alone);
+        # neither when claim-checked.
+        F.when(small, F.col("new_image")).alias("new_image"),
+        F.when(small, F.col("old_image")).alias("old_image"),
         images_url.alias("images_url"),
     ]
-    if keep_errors:
-        out_cols.append(F.col("error"))
-    return ok.select(*out_cols)
+    if disposition == "error":
+        cols.append("error")
+    return tagged.filter(F.col("disposition") == disposition).select(*cols)
 
 
-def quarantine(records: DataFrame, **kwargs) -> DataFrame:
-    """The dead-letter side of A3: rows whose processing raised."""
-    ev = cdc_change_events(records, keep_errors=True, **kwargs)
-    return ev.filter(F.col("error").isNotNull())
+def cdc_change_events(
+    records: DataFrame,
+    *,
+    pk_filters: list[str] | None = None,
+    claim_check_base: str | None = None,
+    claim_check_threshold: int = CLAIM_CHECK_THRESHOLD,
+) -> DataFrame:
+    """Full record->event transform: the ``"event"`` projection of
+    :func:`tag_records`; no-op MODIFYs and failed records dropped."""
+    return project(
+        tag_records(records, pk_filters),
+        "event",
+        claim_check_base=claim_check_base,
+        claim_check_threshold=claim_check_threshold,
+    )
+
+
+def quarantine(
+    records: DataFrame,
+    *,
+    pk_filters: list[str] | None = None,
+    claim_check_base: str | None = None,
+    claim_check_threshold: int = CLAIM_CHECK_THRESHOLD,
+) -> DataFrame:
+    """Rows whose processing raised: the ``"error"`` projection of
+    :func:`tag_records`."""
+    return project(
+        tag_records(records, pk_filters),
+        "error",
+        claim_check_base=claim_check_base,
+        claim_check_threshold=claim_check_threshold,
+    )
 
 
 def publish(events: DataFrame, event_source: str) -> DataFrame:

@@ -206,3 +206,105 @@ def test_observation_metrics_piggyback_single_pass(spark):
     expected_pass = sum(1 for i in range(300) if 10 + i % 50 >= 30)
     assert survivors == expected_pass
     assert got["chars_in"] == sum(10 + i % 50 for i in range(300))
+
+
+# -- one Python pass per batch: events() and quarantine() share a frame --
+
+
+def _rows(df):
+    return sorted(
+        (tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in df.collect()),
+        key=lambda r: r[0],
+    )
+
+
+def _plan_nodes(plan):
+    """Names of the executed plan's operators (a cached relation's own
+    plan is not a child of its scan)."""
+    kids = plan.children()
+    return [plan.nodeName()] + [
+        n for i in range(kids.size()) for n in _plan_nodes(kids.apply(i))
+    ]
+
+
+def _cache_empty(spark):
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_pipeline_matches_free_functions(spark):
+    from cdk_dynamodb_cdc_spark.operators.pipeline import (
+        cdc_change_events,
+        quarantine,
+    )
+
+    records = cdc_fixture_df(spark)
+    # free functions first: while a pipeline holds its frame, Spark would
+    # answer their identical plans from that cache
+    events, dead = _rows(cdc_change_events(records)), _rows(quarantine(records))
+    pipe = CdcPipeline()
+    assert _rows(pipe.events(records)) == events
+    assert _rows(pipe.quarantine(records)) == dead
+    pipe.close()
+    assert [r[0] for r in dead] == ["ev-malformed"]
+
+
+def test_quarantine_reads_the_events_pass(spark, tmp_path):
+    spark.catalog.clearCache()  # isolate from frames other tests left cached
+    records = cdc_fixture_df(spark)
+    pipe = CdcPipeline()
+    pipe.events(records).write.parquet(str(tmp_path / "events"))
+    nodes = _plan_nodes(pipe.quarantine(records)._jdf.queryExecution().executedPlan())
+    assert "InMemoryTableScan" in nodes
+    assert not any("InPandas" in n for n in nodes), nodes
+    pipe.close()
+    assert _cache_empty(spark)
+    # released: the same projection, uncached, runs its own pass again
+    from cdk_dynamodb_cdc_spark.operators.pipeline import quarantine
+
+    nodes = _plan_nodes(quarantine(records)._jdf.queryExecution().executedPlan())
+    assert "MapInPandas" in nodes and "InMemoryTableScan" not in nodes
+
+
+def test_shared_frame_released(spark):
+    import gc
+
+    spark.catalog.clearCache()
+    first, second = cdc_fixture_df(spark), cdc_fixture_df(spark)
+
+    pipe = CdcPipeline()
+    pipe.events(first).count()
+    shared = pipe._cached[1]
+    assert shared.storageLevel.useMemory
+    pipe.quarantine(first).count()
+    assert pipe._cached[1] is shared  # same records frame: no second pass
+    # a different records frame releases the first one's pass
+    pipe.events(second).count()
+    assert not shared.storageLevel.useMemory
+    pipe.close()
+    assert _cache_empty(spark)
+
+    pipe = CdcPipeline()  # dropped without close()
+    pipe.quarantine(first).count()
+    assert not _cache_empty(spark)
+    del pipe
+    gc.collect()
+    assert _cache_empty(spark)
+
+    with CdcPipeline() as pipe:  # released when the block ends
+        pipe.events(first).count()
+        assert not _cache_empty(spark)
+    assert _cache_empty(spark)
+
+
+def test_typed_lane_quarantine_persists_nothing(spark):
+    from cdk_dynamodb_cdc_spark.operators.pipeline import quarantine
+
+    spark.catalog.clearCache()
+    records = cdc_fixture_df(spark)
+    typed = CdcPipeline(
+        item_schema=T.StructType([T.StructField("name", T.StringType())])
+    )
+    dead = typed.quarantine(records)
+    typed.events(records).count()
+    assert _rows(dead) == _rows(quarantine(records))
+    assert _cache_empty(spark)
