@@ -25,12 +25,17 @@ the `functionPath` equivalent.
 On the dynamic lane, ``events(records)`` and ``quarantine(records)`` on
 the same ``records`` DataFrame are projections of one persisted,
 disposition-tagged frame, so the Python unmarshall + diff runs once per
-record for both. The pipeline holds at most one such frame and
-unpersists it when another ``records`` frame arrives, on ``close()``
-(or at the end of a ``with pipe:`` block), and when the pipeline is
-garbage-collected. Until then Spark's cache answers every identical
-plan from it, other pipelines and the free functions over the same
-source included, so close the pipeline before re-reading changed input.
+record for both. ``claim_check.write_side_store(records, path)`` tags
+``records`` with no pk filter, no reconstruction and the default
+threshold; on a pipeline configured the same way it reads that frame
+too. The streaming lane persists the same tagged frame per micro-batch
+and writes the side store and then the events from it. The pipeline
+holds at most one such frame and unpersists it when another
+``records`` frame arrives, on ``close()`` (or at the end of a
+``with pipe:`` block), and when the pipeline is garbage-collected.
+Until then Spark's cache answers every identical plan from it, other
+pipelines and the free functions over the same source included, so
+close the pipeline before re-reading changed input.
 The typed lane's quarantine() tags its records unpersisted: nothing
 shares that frame.
 """
@@ -105,7 +110,7 @@ class CdcPipeline:
         after old-image reconstruction when enabled."""
         if self.reconstruct_missing_old:
             records = reconstruct_old_images(records)
-        return tag_records(records, self.pk_filters)
+        return tag_records(records, self.pk_filters, self.claim_check_threshold)
 
     def _shared(self, records: DataFrame) -> DataFrame:
         """`_tag(records)`, persisted once per `records` DataFrame and
@@ -143,10 +148,8 @@ class CdcPipeline:
         schema = self.item_schema
         if schema is None:
             return self._finish(project(
-                self._shared(records),
-                "event",
+                self._shared(records), "event",
                 claim_check_base=self.claim_check_base,
-                claim_check_threshold=self.claim_check_threshold,
             ))
         if self.reconstruct_missing_old:
             records = reconstruct_old_images(records)
@@ -180,12 +183,7 @@ class CdcPipeline:
             self._shared(records) if self.item_schema is None
             else self._tag(records)
         )
-        return project(
-            tagged,
-            "error",
-            claim_check_base=self.claim_check_base,
-            claim_check_threshold=self.claim_check_threshold,
-        )
+        return project(tagged, "error")
 
     def published(self, records: DataFrame) -> DataFrame:
         """Change events wrapped in the publish envelope (A11)."""
@@ -208,10 +206,13 @@ class CdcPipeline:
         runs with per-key state instead of a batch window; presign and
         the custom transform run per micro-batch exactly as in the
         batch lane, and `sink_writer` swaps the parquet sink for a
-        custom (e.g. transactional) writer. (The streaming lane always
-        runs the dynamic-lane record transform — same output schema
-        and semantics as the typed lane, which remains a batch-side
-        throughput optimization.)"""
+        custom (e.g. transactional) writer. The side store is
+        `side_store_path`, else `claim_check_base`; claim-checked events
+        point into it by the same rule as the batch lane, so with only
+        `claim_check_base` both lanes emit the same pointers. (The
+        streaming lane always runs the dynamic-lane record transform —
+        same output schema and semantics as the typed lane, which
+        remains a batch-side throughput optimization.)"""
         from cdk_dynamodb_cdc_spark.streaming.stream import run_cdc_stream
 
         if self.reconstruct_missing_old:

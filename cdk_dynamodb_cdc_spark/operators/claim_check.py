@@ -3,12 +3,23 @@
 Large payloads are offloaded to a blob side-store keyed by ``event_id``
 and the main row carries only a pointer (``images_url``) — the Spark
 analogue of the reference's S3 put + 24 h presigned URL. The side-store
-here is a JSON dataset under ``base_path`` (any Hadoop-compatible URI:
-``s3a://``, ``hdfs://``, ``file://``), rows keyed by ``event_id``. The
-streaming path writes ``dt=<d>/batch_id=<n>/`` partitions with dynamic
-partition overwrite, so a replayed micro-batch overwrites its own
-partitions — exactly-once across checkpoint retries, same recipe as the
-main sink (streaming/stream.py).
+here is a parquet dataset under ``base_path`` (any Hadoop-compatible URI:
+``s3a://``, ``hdfs://``, ``file://``), rows keyed by ``event_id``.
+
+Its rows are a projection of the same disposition-tagged frame the
+change events come from (``operators/pipeline.py:tag_records``): one row
+per claim-checked *event*, holding the canonical ``{old_image,
+new_image}`` that a small event would inline (the reference's object
+body, :140-148). No-op MODIFYs, failed records and small events have no
+blob. The claim decision is the frame's ``claim`` column, so the event's
+pointer and the blob cannot disagree.
+
+The streaming path (``streaming/stream.py:run_cdc_stream``) writes its
+blobs from the micro-batch's tagged frame BEFORE the events, under
+``dt=<d>/batch_id=<n>/`` partitions with dynamic partition overwrite:
+a committed event never points at a missing blob, and a replayed
+micro-batch overwrites its own partitions — exactly-once across
+checkpoint retries, same recipe as the main sink.
 
 Retention (reference A13: 24 h S3 lifecycle, ``dynamo.ts:111-116``) is
 :func:`vacuum_side_store` — a partition-drop by write date.
@@ -25,25 +36,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cdk_dynamodb_cdc_spark.operators.pipeline import tag_records
 from cdk_dynamodb_cdc_spark.schemas import CLAIM_CHECK_THRESHOLD
 
 
-def side_store_writes(
-    records: DataFrame, threshold: int = CLAIM_CHECK_THRESHOLD
-) -> DataFrame:
-    """Rows whose images must be offloaded, projected to the side-store
-    schema ``(event_id, old_image, new_image, dt)``.
+def side_store_writes(tagged: DataFrame) -> DataFrame:
+    """The side-store projection of a :func:`tag_records` frame: its
+    claim-checked events as ``(event_id, old_image, new_image, dt)``.
 
-    Mirrors the reference's ``{oldImage, newImage}`` S3 object body
-    (:140-148); ``dt`` partitions the store so retention is a cheap
-    partition drop instead of a per-object scan.
+    ``dt`` partitions the store so retention is a cheap partition drop
+    instead of a per-object scan.
     """
-    big = records.filter(
-        F.col("size_bytes").isNull()
-        | (F.col("size_bytes") == 0)
-        | (F.col("size_bytes") >= threshold)
-    )
-    return big.select(
+    return tagged.filter(
+        (F.col("disposition") == "event") & F.col("claim")
+    ).select(
         "event_id",
         "old_image",
         "new_image",
@@ -51,36 +57,43 @@ def side_store_writes(
     )
 
 
+def write_batch(df: DataFrame, path: str, batch_id: int, *partition_by: str) -> None:
+    """Write ``df`` as parquet under ``<partition_by>/batch_id=<n>/``,
+    replacing only the partitions it writes (per-write dynamic partition
+    overwrite): a replay of the same batch overwrites its own output
+    instead of appending a second copy."""
+    (
+        df.withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_by, "batch_id")
+        .parquet(path)
+    )
+
+
 def write_side_store(records: DataFrame, base_path: str,
                      threshold: int = CLAIM_CHECK_THRESHOLD,
                      batch_id: int | None = None) -> None:
-    """Write offloaded images to the side store, partitioned by date.
+    """Write the claim-checked images of ``records`` (CDC_RECORD_SCHEMA)
+    to the side store, partitioned by date.
 
-    With a ``batch_id`` (the streaming path), rows land under
-    ``dt=<d>/batch_id=<n>/`` via DYNAMIC partition overwrite — a
-    checkpoint replay of the same micro-batch overwrites its own
-    partitions instead of appending duplicates, matching the main
-    sink's exactly-once recipe (streaming/stream.py). `dt` stays the
-    LEADING partition key so :func:`vacuum_side_store`'s top-level
-    date-partition drop is unchanged. Without a batch_id (one-shot
-    batch use) the write is a plain append.
+    The rows come from ``tag_records(records)``, so while a
+    ``CdcPipeline`` holds the persisted pass of the same ``records``
+    (same threshold, no pk filter or reconstruction), Spark answers
+    this write from that cache and no second Python pass runs.
+
+    With a ``batch_id``, rows land under ``dt=<d>/batch_id=<n>/`` via
+    :func:`write_batch`, so a replay of the same batch overwrites its
+    own partitions. `dt` stays the LEADING partition key so
+    :func:`vacuum_side_store`'s top-level date-partition drop is
+    unchanged. Without a batch_id (one-shot batch use) the write is a
+    plain append.
     """
-    out = side_store_writes(records, threshold)
+    out = side_store_writes(tag_records(records, claim_check_threshold=threshold))
     if batch_id is None:
         out.write.mode("append").partitionBy("dt").parquet(base_path)
-        return
-    spark = records.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            out.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("dt", "batch_id")
-            .parquet(base_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    else:
+        write_batch(out, base_path, batch_id, "dt")
 
 
 def _keyed_hash(msg, secret: str):

@@ -132,9 +132,6 @@ def maintain_aggregate_stream(
     and pins that totals do not move.
     """
     from cdk_dynamodb_cdc_spark.operators.pipeline import cdc_change_events
-    from cdk_dynamodb_cdc_spark.streaming.stream import (
-        _dynamic_partition_overwrite,
-    )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -216,12 +213,12 @@ def maintain_aggregate_stream(
             F.lit(batch_id).cast("long").alias("applied_batch_id"),
             "bucket",
         )
-        with _dynamic_partition_overwrite(spark):
-            (
-                out.write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(state_path)
-            )
+        (
+            out.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .parquet(state_path)
+        )
 
     writer = records.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_path

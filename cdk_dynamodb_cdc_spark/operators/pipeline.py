@@ -13,26 +13,27 @@ Stage map to the reference (``/root/reference/lib/lambda/dynamo-stream-handler.t
   no-op MODIFY drop (:126-128)  -> disposition ``noop`` (A7)
   event construction (:118-125) -> ``select`` of disposition ``event`` (A8)
   conditional images (:134-138) -> ``when``/``otherwise`` (A9)
-  claim check (:139-166)        -> size split + side write (A10, claim_check.py)
+  claim check (:139-166)        -> ``claim`` column + side write (A10, claim_check.py)
 
 Scale notes: the only Python in the plan is one pass
 (:func:`tag_records`) that runs the reference's per-record try/catch
 once: unmarshall, diff, and the record's disposition — ``event``,
-``noop`` or ``error`` — decided together. Events and dead letters are
-both projections of that disposition-tagged frame. Python is unavoidable
-for dynamic schemas (the diff is defined over arbitrary nested JSON), so
-it sees as little as possible:
+``noop`` or ``error`` — decided together. Events, dead letters and the
+claim-check side store are all projections of that disposition-tagged
+frame. Python is unavoidable for dynamic schemas (the diff is defined
+over arbitrary nested JSON), so it sees as little as possible:
 
-* Everything before it (pk filters, null guards, column pruning) is
-  Catalyst-visible and pushes into the source scan, so at 100 TB
-  filtered records never reach Python.
+* Everything before it (pk filters, null guards, column pruning, the
+  claim decision) is Catalyst-visible; the filters push into the
+  source scan, so at 100 TB filtered records never reach Python.
 * Into Python go the two raw images, the keys (``pk``, ``sk``, optional
-  ``keys_json``) and ``event_id, seq, ts, operation, size_bytes``, which
+  ``keys_json``) and ``event_id, seq, ts, operation, claim``, which
   ride through unchanged. Out come the keys, the diff (``attributes_changed``,
   ``before``, ``after``), the canonical images, ``error`` and
   ``disposition``; the raw images are not sent back. Images are
-  serialized only where an event can carry them: never for no-ops or
-  failures, and the old image only for REMOVEs.
+  serialized only where an event or its side-store blob can carry
+  them: never for no-ops or failures, and the old image only for
+  REMOVEs and claim-checked events.
 * The pass is embarrassingly parallel and partition-local: no shuffle
   anywhere in this pipeline — output partitioning == source
   partitioning.
@@ -43,7 +44,8 @@ build the tagged frame, so calling both runs the pass twice.
 and ``quarantine(records)`` on the same ``records`` DataFrame share one
 pass, and the pipeline releases the frame when a different ``records``
 frame arrives, on ``close()`` (or at the end of a ``with`` block), or
-when it is garbage-collected.
+when it is garbage-collected. The streaming lane persists it for the
+length of one micro-batch (``streaming/stream.py:run_cdc_stream``).
 """
 
 from __future__ import annotations
@@ -61,8 +63,8 @@ from cdk_dynamodb_cdc_spark.schemas import CLAIM_CHECK_THRESHOLD
 
 # Columns the projections read that ride through the Python pass as they
 # are; the raw images and keys go in, only their results come out.
-_PASS_THROUGH = ["event_id", "seq", "ts", "operation", "size_bytes"]
-_KERNEL_IN = ["new_image", "old_image", "keys_json", "pk", "sk", "operation"]
+_PASS_THROUGH = ["event_id", "seq", "ts", "operation", "claim"]
+_KERNEL_IN = ["new_image", "old_image", "keys_json", "pk", "sk", "operation", "claim"]
 _KERNEL_OUT = {
     "pk": "string", "sk": "string", "attributes_changed": "array<string>",
     "before": "string", "after": "string", "new_image": "string",
@@ -114,10 +116,33 @@ def null_guards(df: DataFrame) -> DataFrame:
     )
 
 
-def _diff_record(new_raw, old_raw, keys_raw, pk, sk, operation) -> tuple:
+def claim_checked(threshold: int) -> Column:
+    """A10's claim decision, ``if (size && size < SIZE_THRESHOLD)``
+    (:134) negated: a record is offloaded when ``size_bytes`` is missing,
+    zero (falsy in JS) or at least ``threshold``. The one copy of the
+    rule; the dynamic lane computes it as :func:`tag_records`' ``claim``
+    column, the typed lane as its own ``claim`` column."""
+    size = F.col("size_bytes")
+    return size.isNull() | (size == 0) | (size >= threshold)
+
+
+def images_url(claim_check_base: str | None) -> Column:
+    """The pointer of a row whose ``claim`` column is true, else null:
+    ``<base>/<event_id>.json``. The base gains a ``/`` unless it ends in
+    one, so a lane given a store path and a lane given a pointer prefix
+    build the same pointer."""
+    base = claim_check_base or "claim-check://images/"
+    base += "" if base.endswith("/") else "/"
+    return F.when(
+        F.col("claim"), F.concat(F.lit(base), F.col("event_id"), F.lit(".json"))
+    )
+
+
+def _diff_record(new_raw, old_raw, keys_raw, pk, sk, operation, claim) -> tuple:
     """unmarshall + diff + key extraction + disposition for one record;
-    errors isolate. Images are serialized only where an event can carry
-    them: not for no-ops, and the old image only for REMOVEs (A9)."""
+    errors isolate. Images are serialized only where an event or its
+    side-store blob can carry them: not for no-ops, and the old image
+    only for REMOVEs (A9) and claim-checked events (A10)."""
     try:
         new_img = unmarshall(json.loads(new_raw)) if new_raw is not None else None
         old_img = unmarshall(json.loads(old_raw)) if old_raw is not None else None
@@ -135,7 +160,7 @@ def _diff_record(new_raw, old_raw, keys_raw, pk, sk, operation) -> tuple:
             dumps_canonical(after),
             dumps_canonical(new_img) if new_img is not None else None,
             dumps_canonical(old_img)
-            if old_img is not None and operation == "REMOVE" else None,
+            if old_img is not None and (claim or operation == "REMOVE") else None,
             None,
             "event",
         )
@@ -159,19 +184,25 @@ def _diff_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.concat([pdf[_PASS_THROUGH], out], axis=1)
 
 
-def tag_records(records: DataFrame, pk_filters: list[str] | None = None) -> DataFrame:
+def tag_records(
+    records: DataFrame,
+    pk_filters: list[str] | None = None,
+    claim_check_threshold: int = CLAIM_CHECK_THRESHOLD,
+) -> DataFrame:
     """The one Python pass of the dynamic lane: pk filter, null guards,
-    then unmarshall + diff per record, tagged with its ``disposition``
-    (``event``, ``noop`` or ``error``). Change events and dead letters
-    are projections of this frame (:func:`project`), so a caller that
-    persists it runs the Python once for both.
+    the claim decision, then unmarshall + diff per record, tagged with
+    its ``disposition`` (``event``, ``noop`` or ``error``). Change
+    events, dead letters (:func:`project`) and the claim-check side
+    store (``claim_check.side_store_writes``) are projections of this
+    frame, so a caller that persists it runs the Python once for all.
 
     Input: CDC_RECORD_SCHEMA (+ optional ``keys_json``). Output: the
-    pass-through columns ``event_id, seq, ts, operation, size_bytes``
-    plus ``pk, sk, attributes_changed, before, after, new_image,
-    old_image, error, disposition`` — images as canonical plain JSON.
+    pass-through columns ``event_id, seq, ts, operation, claim`` plus
+    ``pk, sk, attributes_changed, before, after, new_image, old_image,
+    error, disposition`` — images as canonical plain JSON.
     """
-    src = null_guards(pk_filter(records, pk_filters))
+    src = null_guards(pk_filter(records, pk_filters)).withColumn(
+        "claim", claim_checked(claim_check_threshold))
     src = src.select(*dict.fromkeys(
         [*_PASS_THROUGH, *(c for c in _KERNEL_IN if c in src.columns)]))
     schema = {c: src.schema[c].dataType.simpleString() for c in _PASS_THROUGH}
@@ -182,41 +213,25 @@ def tag_records(records: DataFrame, pk_filters: list[str] | None = None) -> Data
 
 
 def project(
-    tagged: DataFrame,
-    disposition: str,
-    *,
-    claim_check_base: str | None = None,
-    claim_check_threshold: int = CLAIM_CHECK_THRESHOLD,
+    tagged: DataFrame, disposition: str, *, claim_check_base: str | None = None
 ) -> DataFrame:
     """One disposition of a :func:`tag_records` frame, as events
     (CHANGE_EVENT_SCHEMA): ``"event"`` gives the change events,
     ``"error"`` the dead letters (A3), which add the ``error`` column.
-    Large payloads carry an ``images_url`` pointer instead of inlined
-    images (side write is the caller's job via :mod:`claim_check` — this
-    stage only computes columns)."""
-    # Reference: `if (size && size < SIZE_THRESHOLD)` (:134) — a missing or
-    # zero SizeBytes is falsy in JS and takes the claim-check branch.
-    small = (
-        F.col("size_bytes").isNotNull()
-        & (F.col("size_bytes") != 0)
-        & (F.col("size_bytes") < F.lit(claim_check_threshold))
-    )
-    images_url = (
-        F.when(
-            ~small,
-            F.concat(F.lit(claim_check_base or "claim-check://images/"),
-                     F.col("event_id"), F.lit(".json")),
-        )
-    )
+    Claim-checked events carry an ``images_url`` pointer instead of
+    inlined images (the side write is ``claim_check.py``'s, from the
+    same frame); a dead letter has no side-store blob, so no pointer."""
+    url = (images_url(claim_check_base) if disposition == "event"
+           else F.lit(None).cast("string"))
     cols = [
         "event_id", "seq", "ts", "operation", "pk", "sk",
         "attributes_changed", "before", "after",
         # A9 (:134-138): new image inlined when small; old image only for
-        # small REMOVEs (the kernel serializes it for REMOVEs alone);
-        # neither when claim-checked.
-        F.when(small, F.col("new_image")).alias("new_image"),
-        F.when(small, F.col("old_image")).alias("old_image"),
-        images_url.alias("images_url"),
+        # small REMOVEs (the kernel serializes it for REMOVEs and
+        # claim-checked events alone); neither when claim-checked.
+        F.when(~F.col("claim"), F.col("new_image")).alias("new_image"),
+        F.when(~F.col("claim"), F.col("old_image")).alias("old_image"),
+        url.alias("images_url"),
     ]
     if disposition == "error":
         cols.append("error")
@@ -233,28 +248,16 @@ def cdc_change_events(
     """Full record->event transform: the ``"event"`` projection of
     :func:`tag_records`; no-op MODIFYs and failed records dropped."""
     return project(
-        tag_records(records, pk_filters),
+        tag_records(records, pk_filters, claim_check_threshold),
         "event",
         claim_check_base=claim_check_base,
-        claim_check_threshold=claim_check_threshold,
     )
 
 
-def quarantine(
-    records: DataFrame,
-    *,
-    pk_filters: list[str] | None = None,
-    claim_check_base: str | None = None,
-    claim_check_threshold: int = CLAIM_CHECK_THRESHOLD,
-) -> DataFrame:
+def quarantine(records: DataFrame, *, pk_filters: list[str] | None = None) -> DataFrame:
     """Rows whose processing raised: the ``"error"`` projection of
     :func:`tag_records`."""
-    return project(
-        tag_records(records, pk_filters),
-        "error",
-        claim_check_base=claim_check_base,
-        claim_check_threshold=claim_check_threshold,
-    )
+    return project(tag_records(records, pk_filters), "error")
 
 
 def publish(events: DataFrame, event_source: str) -> DataFrame:

@@ -48,6 +48,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cdk_dynamodb_cdc_spark.operators.pipeline import claim_checked, images_url
 from cdk_dynamodb_cdc_spark.schemas import CLAIM_CHECK_THRESHOLD
 
 
@@ -251,7 +252,7 @@ def cdc_change_events_typed(
         F.col("operation").isNotNull()
         & F.col("event_id").isNotNull()
         & (F.col("new_image").isNotNull() | F.col("old_image").isNotNull())
-    )
+    ).withColumn("claim", claim_checked(claim_check_threshold))
     # Parse each image in its own projection and reference the parsed
     # structs as column refs below. The split alone is NOT enough
     # protection: the optimizer inlines these aliases when it merges
@@ -293,19 +294,7 @@ def cdc_change_events_typed(
         all_equal = all_equal & fe
     noop = (F.col("operation") == "MODIFY") & all_equal
     ok = base.filter(~noop)
-    small = (
-        F.col("size_bytes").isNotNull()
-        & (F.col("size_bytes") != 0)
-        & (F.col("size_bytes") < F.lit(claim_check_threshold))
-    )
-    images_url = F.when(
-        ~small,
-        F.concat(
-            F.lit(claim_check_base or "claim-check://images/"),
-            F.col("event_id"),
-            F.lit(".json"),
-        ),
-    )
+    small = ~F.col("claim")
     return ok.select(
         "event_id",
         "seq",
@@ -319,5 +308,5 @@ def cdc_change_events_typed(
         F.when(small, F.to_json("__new_t")).alias("new_image"),
         F.when(small & (F.col("operation") == "REMOVE"), F.to_json("__old_t"))
         .alias("old_image"),
-        images_url.alias("images_url"),
+        images_url(claim_check_base).alias("images_url"),
     )

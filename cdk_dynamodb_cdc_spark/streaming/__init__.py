@@ -1,6 +1,5 @@
 from cdk_dynamodb_cdc_spark.streaming.stream import (  # noqa: F401
     dedup_within_watermark,
-    delta_sink_writer,
     initialize_latest_checkpoint,
     interval_join_streams,
     maintain_snapshot_stream,

@@ -14,12 +14,13 @@ view at `dynamo.ts:69`). This module is the Spark-native equivalent:
                           checkpoint without reading it (zero-scan
                           `latest` start; read_cdc_stream calls it on
                           first subscription when given the checkpoint)
-    run_cdc_stream      — the batch-tested `cdc_change_events` transform
-                          applied per micro-batch via `foreachBatch`,
-                          with the claim-check side write and an
-                          IDEMPOTENT main-sink write (dynamic partition
-                          overwrite keyed by batch_id), checkpointed;
-                          `availableNow` for backlog-then-stop runs
+    run_cdc_stream      — the batch-tested record transform applied per
+                          micro-batch via `foreachBatch`: one persisted
+                          `tag_records` pass, projected to the claim-check
+                          side store and then to an IDEMPOTENT main-sink
+                          write (dynamic partition overwrite keyed by
+                          batch_id), checkpointed; `availableNow` for
+                          backlog-then-stop runs
     dedup_within_watermark — at-least-once -> exactly-once semantics on
                           a keyed stream (`dropDuplicatesWithinWatermark`)
     windowed_change_counts — event-time tumbling-window aggregation with
@@ -31,11 +32,13 @@ view at `dynamo.ts:69`). This module is the Spark-native equivalent:
 
 Exactly-once story: the checkpoint tracks source offsets per micro
 batch; the main sink writes `batch_id=<n>` partitions with DYNAMIC
-partition overwrite, so a replayed batch overwrites its own partition
-instead of appending duplicates; the claim-check side store does the
-same under `dt=<d>/batch_id=<n>` partitions. This is the standard
-file-sink exactly-once recipe when a transactional table format isn't
-available.
+partition overwrite (a per-write option; the session conf is never
+touched), so a replayed batch overwrites its own partition instead of
+appending duplicates; the claim-check side store does the same under
+`dt=<d>/batch_id=<n>` partitions and is written first, so a committed
+event never points at a missing blob. Both are projections of one read
+of the micro-batch. This is the standard file-sink exactly-once recipe
+when a transactional table format isn't available.
 
 Scale: the pipeline transform is shuffle-free (see operators/pipeline.py)
 so each micro-batch is embarrassingly parallel; stateful operators
@@ -45,14 +48,15 @@ state size is bounded by (keys active within the watermark horizon).
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
-from cdk_dynamodb_cdc_spark.operators.claim_check import write_side_store
-from cdk_dynamodb_cdc_spark.operators.pipeline import cdc_change_events
+from cdk_dynamodb_cdc_spark.operators.claim_check import (
+    side_store_writes,
+    write_batch,
+)
+from cdk_dynamodb_cdc_spark.operators.pipeline import project, tag_records
 from cdk_dynamodb_cdc_spark.schemas import CDC_RECORD_SCHEMA, CLAIM_CHECK_THRESHOLD
 
 
@@ -116,9 +120,9 @@ def read_cdc_kafka_stream(
     Requires the spark-sql-kafka connector jars, which this container
     does not ship — the source lookup fails at `.load()` and is
     re-raised with guidance (documented environment stub, pytest-
-    pinned, same policy as delta_sink_writer). The value-decoding
-    logic is :func:`parse_cdc_kafka_records`, which IS tested, on
-    batch frames of Kafka shape.
+    pinned). The value-decoding logic is
+    :func:`parse_cdc_kafka_records`, which IS tested, on batch frames
+    of Kafka shape.
     """
     if starting_position not in ("latest", "trim_horizon"):
         raise ValueError(
@@ -202,42 +206,6 @@ def read_cdc_stream(
     return reader.json(source_path)
 
 
-def delta_sink_writer(sink_path: str, app_id: str):
-    """A transactional (Delta Lake) `sink_writer` for
-    :func:`run_cdc_stream` — the lane that subsumes the
-    batch_id-partition recipe with a real ACID boundary (and gives the
-    A13 vacuum genuine `VACUUM` semantics).
-
-    Requires the `delta-spark` package, which this container does not
-    ship (documented environment stub, like llm/multimodal's real
-    codecs): idempotence comes from Delta's transactional
-    `txnAppId`/`txnVersion` options — a replayed micro-batch presents
-    the same (app_id, batch_id) pair and the commit is skipped, so the
-    sink is append-only with no partition-overwrite contortions.
-    """
-    try:
-        import delta  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - exercised in pytest
-        raise ModuleNotFoundError(
-            "delta_sink_writer needs the delta-spark package (absent in "
-            "this environment); use the default parquet sink_writer — "
-            "the batch_id dynamic-partition-overwrite recipe gives the "
-            "same exactly-once guarantee — or install delta-spark"
-        ) from exc
-
-    def write(events: DataFrame, batch_id: int) -> None:
-        (
-            events.withColumn("batch_id", F.lit(batch_id))
-            .write.format("delta")
-            .option("txnAppId", app_id)
-            .option("txnVersion", batch_id)
-            .mode("append")
-            .save(sink_path)
-        )
-
-    return write
-
-
 def run_cdc_stream(
     records: DataFrame,
     *,
@@ -253,52 +221,43 @@ def run_cdc_stream(
     """Run the CDC pipeline over a record stream into a parquet sink.
 
     Returns the started StreamingQuery; callers `awaitTermination()`.
-    `transform` (DataFrame -> DataFrame, the reference's `functionPath`
-    hook) runs on the change events of each micro-batch before the
-    sink. Each micro-batch applies the SAME pure transform the batch
-    path uses (operators/pipeline.py), then:
+    Each micro-batch reads its input ONCE: it persists
+    `tag_records(batch_df, pk_filters)` (operators/pipeline.py, the same
+    pass the batch lane runs), then, as projections of that frame,
 
-      1. writes oversized images to the side store (idempotent by
-         event_id),
-      2. writes change events to `sink_path/batch_id=<n>/` with
-         dynamic partition overwrite — replays overwrite, never
-         duplicate.
+      1. writes the claim-checked events' images to the side store
+         under `dt=<d>/batch_id=<n>/` (when `side_store_path` is set),
+      2. writes the change events to `sink_path/batch_id=<n>/`,
+
+    and unpersists it. Both writes use dynamic partition overwrite, so
+    replays overwrite, never duplicate; the side store goes first, so
+    a committed event never points at a missing blob. Claim-checked
+    events point at `<side_store_path>/<event_id>.json`.
+    `transform` (DataFrame -> DataFrame, the reference's `functionPath`
+    hook) runs on the change events before the sink.
 
     `sink_writer` swaps step 2 for a custom `(events_df, batch_id) ->
     None` writer while keeping the pipeline, side store, and
     checkpointing — the hook a transactional table format plugs into
-    (:func:`delta_sink_writer` when delta-spark is installed; any
-    writer must stay idempotent per batch_id, because the checkpoint
-    replays the last uncommitted batch after a crash).
+    (storage/txlog.py:txlog_sink_writer); any writer must stay
+    idempotent per batch_id, because the checkpoint replays the last
+    uncommitted batch after a crash.
     """
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        events = cdc_change_events(
-            batch_df,
-            pk_filters=pk_filters,
-            claim_check_base=(
-                f"{side_store_path}/" if side_store_path else None
-            ),
-            claim_check_threshold=claim_check_threshold,
-        )
-        if side_store_path is not None:
-            write_side_store(
-                batch_df, side_store_path, claim_check_threshold,
-                batch_id=batch_id,
-            )
-        if transform is not None:
-            events = transform(events)
-        if sink_writer is not None:
-            sink_writer(events, batch_id)
-            return
-        with _dynamic_partition_overwrite(spark):
-            (
-                events.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(sink_path)
-            )
+        tagged = tag_records(batch_df, pk_filters, claim_check_threshold).persist()
+        try:
+            if side_store_path is not None:
+                write_batch(side_store_writes(tagged), side_store_path, batch_id, "dt")
+            events = project(tagged, "event", claim_check_base=side_store_path)
+            if transform is not None:
+                events = transform(events)
+            if sink_writer is not None:
+                sink_writer(events, batch_id)
+            else:
+                write_batch(events, sink_path, batch_id)
+        finally:
+            tagged.unpersist()
 
     writer = (
         records.writeStream.foreachBatch(process_batch)
@@ -494,18 +453,6 @@ def interval_join_streams(
     return lw.join(rw, cond, how)
 
 
-@contextmanager
-def _dynamic_partition_overwrite(spark: SparkSession):
-    """Scoped spark.sql.sources.partitionOverwriteMode=dynamic (shared
-    by every partition-overwrite sink in this module)."""
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
 def read_snapshot_store(spark: SparkSession, state_path: str) -> DataFrame:
     """Live rows of a :func:`maintain_snapshot_stream` store (filters
     the physical REMOVE tombstones the writer retains so that
@@ -623,12 +570,12 @@ def maintain_snapshot_stream(
             )
         else:
             out = fresh
-        with _dynamic_partition_overwrite(spark):
-            (
-                out.write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(state_path)
-            )
+        (
+            out.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .parquet(state_path)
+        )
 
     writer = records.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_path

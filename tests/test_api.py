@@ -65,6 +65,14 @@ def test_presign_and_transform_apply_in_both_lanes(spark, tmp_path):
         ~validate_claim_url(F.col("images_url"), "k3y")
     ).count() == 0
 
+    # one pointer rule: both lanes point at the same paths
+    def paths(df):
+        return {r.images_url.split("?")[0] for r in df.collect()}
+
+    assert paths(s_signed) == paths(batch_signed) == {
+        f"{tmp_path}/store/{eid}.json" for eid in ("ev-big", "ev-zero-size")
+    }
+
 
 def test_pk_filter_applies_in_both_lanes(spark):
     records = cdc_fixture_df(spark)
@@ -263,6 +271,31 @@ def test_quarantine_reads_the_events_pass(spark, tmp_path):
 
     nodes = _plan_nodes(quarantine(records)._jdf.queryExecution().executedPlan())
     assert "MapInPandas" in nodes and "InMemoryTableScan" not in nodes
+
+
+def test_side_store_reads_the_events_pass(spark, tmp_path, monkeypatch):
+    """The benchmark's call sequence: write_side_store on the raw records
+    after pipe.events() is answered from the pipeline's persisted pass."""
+    from pyspark.sql import DataFrameWriter
+
+    from cdk_dynamodb_cdc_spark.operators.claim_check import write_side_store
+
+    spark.catalog.clearCache()
+    records = cdc_fixture_df(spark)
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        written.append(_plan_nodes(self._df._jdf.queryExecution().executedPlan()))
+        return parquet(self, path, *args, **kwargs)
+
+    with CdcPipeline() as pipe:
+        pipe.events(records).write.parquet(str(tmp_path / "events"))
+        monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+        write_side_store(records, str(tmp_path / "side"))
+    (nodes,) = written
+    assert "InMemoryTableScan" in nodes
+    assert not any("InPandas" in n for n in nodes), nodes
 
 
 def test_shared_frame_released(spark):

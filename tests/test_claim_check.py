@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import datetime
+import json
 import os
 
 from pyspark.sql import functions as F
@@ -12,16 +13,36 @@ from cdk_dynamodb_cdc_spark.operators.claim_check import (
     vacuum_side_store,
     write_side_store,
 )
-from cdk_dynamodb_cdc_spark.sources.fixtures import cdc_fixture_df
+from cdk_dynamodb_cdc_spark.schemas import CDC_RECORD_SCHEMA
+from cdk_dynamodb_cdc_spark.sources.fixtures import cdc_fixture_df, fixture_rows
 
 UTC = datetime.timezone.utc
 
 
 def test_side_store_selects_oversized_and_sizeless(spark):
-    records = cdc_fixture_df(spark)
-    ids = {r.event_id for r in side_store_writes(records).collect()}
-    # >=64 KiB and size 0 take the claim-check branch (JS falsy size)
-    assert ids == {"ev-big", "ev-zero-size"}
+    from cdk_dynamodb_cdc_spark.operators.pipeline import project, tag_records
+
+    by_id = {r[0]: r for r in fixture_rows()}
+    big = 64 * 1024
+    extra = [  # oversized records that emit no event
+        ("ev-big-noop", *by_id["ev-noop"][1:-1], big),
+        ("ev-big-malformed", *by_id["ev-malformed"][1:-1], big),
+    ]
+    records = spark.createDataFrame(fixture_rows() + extra, CDC_RECORD_SCHEMA)
+    tagged = tag_records(records)
+    side = {r.event_id: r for r in side_store_writes(tagged).collect()}
+    # >=64 KiB and size 0 take the claim-check branch (JS falsy size);
+    # no-ops and failed records have no blob
+    assert set(side) == {"ev-big", "ev-zero-size"}
+    dead = {r.event_id: r for r in project(tagged, "error").collect()}
+    assert set(dead) == {"ev-malformed", "ev-big-malformed"}
+    assert dead["ev-big-malformed"].images_url is None
+    # blobs hold the canonical images events inline: ev-big has ev-scalar's
+    # images, and its old image is ev-remove's
+    events = {r.event_id: r for r in project(tagged, "event").collect()}
+    assert side["ev-big"].new_image == events["ev-scalar"].new_image
+    assert side["ev-big"].old_image == events["ev-remove"].old_image
+    assert json.loads(side["ev-big"].old_image)["name"] == "alice"
 
 
 def test_vacuum_drops_only_expired_partitions(spark, tmp_path):

@@ -14,6 +14,7 @@ from cdk_dynamodb_cdc_spark.operators.pipeline import (
     publish,
     quarantine,
     route,
+    tag_records,
 )
 from cdk_dynamodb_cdc_spark.sources.fixtures import cdc_fixture_df
 
@@ -84,7 +85,7 @@ def test_claim_check_branches(spark):
 
 def test_claim_check_side_store(spark, tmp_path):
     src = cdc_fixture_df(spark)
-    offl = {r["event_id"] for r in side_store_writes(src).collect()}
+    offl = {r["event_id"] for r in side_store_writes(tag_records(src)).collect()}
     assert "ev-big" in offl and "ev-zero-size" in offl and "ev-scalar" not in offl
     path = str(tmp_path / "side-store")
     write_side_store(src, path)

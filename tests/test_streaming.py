@@ -236,6 +236,34 @@ def test_side_store_replay_overwrites_instead_of_duplicating(spark, tmp_path):
     assert {"ev-big", "ev-zero-size"} <= set(ids)
 
 
+def test_stream_reads_each_batch_once(spark, tmp_path):
+    """One read per micro-batch: each trigger's numInputRows is its
+    file's record count, and the side store written from the same
+    tagged frame holds exactly the sink's claim-checked events."""
+    src = tmp_path / "src"
+    src.mkdir()
+    rows = fixture_rows()
+    _write_records_file(src / "a.json", rows[:9])
+    _write_records_file(src / "b.json", rows[9:])
+    sink, side = str(tmp_path / "sink"), str(tmp_path / "side")
+    stream = read_cdc_stream(
+        spark, str(src), starting_position="trim_horizon", max_files_per_trigger=1
+    )
+    q = run_cdc_stream(
+        stream, sink_path=sink, checkpoint_path=str(tmp_path / "ckpt"),
+        side_store_path=side,
+    )
+    _run_until_done(q)
+    counts = [json.loads(p.json)["numInputRows"] for p in q.recentProgress]
+    assert sorted(counts) == [6, 9]
+    claimed = {
+        r.event_id
+        for r in spark.read.parquet(sink).filter(F.col("images_url").isNotNull()).collect()
+    }
+    side_ids = {r.event_id for r in spark.read.parquet(side).collect()}
+    assert side_ids == claimed == {"ev-big", "ev-zero-size"}
+
+
 def test_kafka_value_decoding_roundtrips_cdc_records(spark):
     """The Kafka lane's value decoder must round-trip the same JSON
     wire format the file lane reads — tested on a batch frame of Kafka
@@ -310,15 +338,6 @@ def test_custom_sink_writer_replaces_default_sink(spark, tmp_path):
     import os
 
     assert not os.path.exists(sink)  # default sink fully replaced
-
-
-def test_delta_sink_writer_is_honestly_stubbed():
-    """delta-spark is absent in this container: the transactional lane
-    must fail loudly at construction with guidance, not at write time."""
-    from cdk_dynamodb_cdc_spark.streaming import delta_sink_writer
-
-    with pytest.raises(ModuleNotFoundError, match="delta-spark"):
-        delta_sink_writer("/tmp/x", "app")
 
 
 def test_dedup_within_watermark_collapses_redelivery(spark, tmp_path):
