@@ -7,13 +7,12 @@ swap in a custom handler. This builder is the Spark analogue: declare
 the source shape once, get the batch lane (oracle-testable) and the
 streaming lane (production) from the SAME configuration, and inject a
 custom `DataFrame -> DataFrame` transform between diff and publish —
-the `functionPath` equivalent.
+the `functionPath` equivalent. `run_stream` is the one entry point of
+the record -> event stream.
 
     pipe = CdcPipeline(
         pk_filters=["USER#*"],
         item_schema=my_struct_type,        # optional: typed (no-Python) lane
-                                           # (or "infer": drift-profile
-                                           # schema inference, then typed)
         reconstruct_missing_old=True,      # NEW_IMAGE-only sources
         transform=lambda df: df.filter(...),
         event_source="myapp",
@@ -28,16 +27,18 @@ disposition-tagged frame, so the Python unmarshall + diff runs once per
 record for both. ``claim_check.write_side_store(records, path)`` tags
 ``records`` with no pk filter, no reconstruction and the default
 threshold; on a pipeline configured the same way it reads that frame
-too. The streaming lane persists the same tagged frame per micro-batch
-and writes the side store and then the events from it. The pipeline
-holds at most one such frame and unpersists it when another
-``records`` frame arrives, on ``close()`` (or at the end of a
+too. The pipeline holds at most one such frame and unpersists it when
+another ``records`` frame arrives, on ``close()`` (or at the end of a
 ``with pipe:`` block), and when the pipeline is garbage-collected.
 Until then Spark's cache answers every identical plan from it, other
 pipelines and the free functions over the same source included, so
 close the pipeline before re-reading changed input.
 The typed lane's quarantine() tags its records unpersisted: nothing
 shares that frame.
+
+``run_stream`` persists the same tagged frame per micro-batch, writes
+the side store and then the events from it, and unpersists it when the
+micro-batch ends; it never touches the batch lane's frame.
 """
 
 from __future__ import annotations
@@ -47,6 +48,11 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from cdk_dynamodb_cdc_spark.operators.claim_check import (
+    presign_claim_urls,
+    side_store_writes,
+    write_batch,
+)
 from cdk_dynamodb_cdc_spark.operators.pipeline import (
     pk_filter,
     project,
@@ -68,7 +74,7 @@ class CdcPipeline:
         self,
         *,
         pk_filters: list[str] | None = None,
-        item_schema: T.StructType | str | None = None,
+        item_schema: T.StructType | None = None,
         reconstruct_missing_old: bool = False,
         transform: Callable[[DataFrame], DataFrame] | None = None,
         event_source: str = "cdk_dynamodb_cdc_spark",
@@ -94,10 +100,6 @@ class CdcPipeline:
         claim-check pointers (when a secret is configured), then the
         user transform — the reference's `functionPath` hook."""
         if self.presign_secret is not None:
-            from cdk_dynamodb_cdc_spark.operators.claim_check import (
-                presign_claim_urls,
-            )
-
             events = presign_claim_urls(
                 events, self.presign_secret, ttl_hours=self.presign_ttl_hours
             )
@@ -105,12 +107,17 @@ class CdcPipeline:
 
     # -- batch lane -------------------------------------------------------
 
-    def _tag(self, records: DataFrame) -> DataFrame:
-        """The dynamic lane's disposition-tagged frame of `records`,
-        after old-image reconstruction when enabled."""
+    def _records(self, records: DataFrame) -> DataFrame:
+        """`records`, after old-image reconstruction when enabled."""
         if self.reconstruct_missing_old:
-            records = reconstruct_old_images(records)
-        return tag_records(records, self.pk_filters, self.claim_check_threshold)
+            return reconstruct_old_images(records)
+        return records
+
+    def _tag(self, records: DataFrame) -> DataFrame:
+        """The dynamic lane's disposition-tagged frame of `records`."""
+        return tag_records(
+            self._records(records), self.pk_filters, self.claim_check_threshold
+        )
 
     def _shared(self, records: DataFrame) -> DataFrame:
         """`_tag(records)`, persisted once per `records` DataFrame and
@@ -145,32 +152,18 @@ class CdcPipeline:
         Typed lane when `item_schema` is declared (pure JVM), dynamic
         lane otherwise; optional old-image reconstruction first; the
         custom transform last."""
-        schema = self.item_schema
-        if schema is None:
-            return self._finish(project(
+        if self.item_schema is None:
+            out = project(
                 self._shared(records), "event",
                 claim_check_base=self.claim_check_base,
-            ))
-        if self.reconstruct_missing_old:
-            records = reconstruct_old_images(records)
-        if schema == "infer":
-            # drift-profile schema inference (operators/monitor.py):
-            # one profiling pass over THIS batch, then the zero-Python
-            # typed lane — the auto-typed composition
-            # cdc_change_stats_autotyped pins against the dynamic lane.
-            # Inference is per-call; cache the result (pipe.item_schema
-            # = inferred) when processing many batches of one stream.
-            from cdk_dynamodb_cdc_spark.operators.monitor import (
-                infer_item_schema,
             )
-
-            schema = infer_item_schema(records)
-        out = cdc_change_events_typed(
-            pk_filter(records, self.pk_filters),
-            schema,
-            claim_check_base=self.claim_check_base,
-            claim_check_threshold=self.claim_check_threshold,
-        )
+        else:
+            out = cdc_change_events_typed(
+                pk_filter(self._records(records), self.pk_filters),
+                self.item_schema,
+                claim_check_base=self.claim_check_base,
+                claim_check_threshold=self.claim_check_threshold,
+            )
         return self._finish(out)
 
     def quarantine(self, records: DataFrame) -> DataFrame:
@@ -201,33 +194,63 @@ class CdcPipeline:
         available_now: bool = True,
         sink_writer=None,
     ):
-        """Start the checkpointed streaming pipeline (A1/A11); returns
-        the StreamingQuery. Old-image reconstruction, when enabled,
-        runs with per-key state instead of a batch window; presign and
-        the custom transform run per micro-batch exactly as in the
-        batch lane, and `sink_writer` swaps the parquet sink for a
-        custom (e.g. transactional) writer. The side store is
-        `side_store_path`, else `claim_check_base`; claim-checked events
-        point into it by the same rule as the batch lane, so with only
-        `claim_check_base` both lanes emit the same pointers. (The
-        streaming lane always runs the dynamic-lane record transform —
-        same output schema and semantics as the typed lane, which
-        remains a batch-side throughput optimization.)"""
-        from cdk_dynamodb_cdc_spark.streaming.stream import run_cdc_stream
+        """Start the checkpointed streaming pipeline (A1/A11) over a
+        record stream; returns the StreamingQuery, callers
+        `awaitTermination()`.
 
+        Each micro-batch reads its input ONCE: it persists the same
+        `tag_records` pass the batch lane runs (this pipeline's pk
+        filters and claim threshold), then, as projections of it,
+
+          1. writes the claim-checked events' images to the side store
+             under `dt=<d>/batch_id=<n>/` (when there is a side store),
+          2. writes the change events, after presign and the custom
+             transform exactly as in the batch lane, to
+             `sink_path/batch_id=<n>/`,
+
+        and unpersists it. Both writes use dynamic partition overwrite,
+        so replays overwrite, never duplicate; the side store goes
+        first, so a committed event never points at a missing blob.
+        The side store is `side_store_path`, else `claim_check_base`;
+        claim-checked events point into it by the same rule as the
+        batch lane, so with only `claim_check_base` both lanes emit the
+        same pointers.
+
+        Old-image reconstruction, when enabled, runs with per-key state
+        instead of a batch window. `sink_writer` swaps step 2 for a
+        custom `(events_df, batch_id) -> None` writer while keeping the
+        pipeline, side store and checkpointing — the hook a
+        transactional table format plugs into
+        (storage/txlog.py:txlog_sink_writer); any writer must stay
+        idempotent per batch_id, because the checkpoint replays the
+        last uncommitted batch after a crash. The stream always runs
+        the dynamic lane: same output schema and semantics as the typed
+        lane, which remains a batch-side option."""
         if self.reconstruct_missing_old:
             records = reconstruct_old_images_stream(records)
-        needs_finish = (
-            self.presign_secret is not None or self.transform is not None
+        side_store = side_store_path or self.claim_check_base
+
+        def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+            tagged = tag_records(
+                batch_df, self.pk_filters, self.claim_check_threshold
+            ).persist()
+            try:
+                if side_store is not None:
+                    write_batch(side_store_writes(tagged), side_store, batch_id, "dt")
+                events = self._finish(
+                    project(tagged, "event", claim_check_base=side_store)
+                )
+                if sink_writer is not None:
+                    sink_writer(events, batch_id)
+                else:
+                    write_batch(events, sink_path, batch_id)
+            finally:
+                tagged.unpersist()
+
+        writer = (
+            records.writeStream.foreachBatch(process_batch)
+            .option("checkpointLocation", checkpoint_path)
         )
-        return run_cdc_stream(
-            records,
-            sink_path=sink_path,
-            checkpoint_path=checkpoint_path,
-            side_store_path=side_store_path or self.claim_check_base,
-            pk_filters=self.pk_filters,
-            claim_check_threshold=self.claim_check_threshold,
-            available_now=available_now,
-            sink_writer=sink_writer,
-            transform=self._finish if needs_finish else None,
-        )
+        if available_now:
+            writer = writer.trigger(availableNow=True)
+        return writer.start()

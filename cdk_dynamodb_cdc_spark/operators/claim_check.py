@@ -14,7 +14,7 @@ body, :140-148). No-op MODIFYs, failed records and small events have no
 blob. The claim decision is the frame's ``claim`` column, so the event's
 pointer and the blob cannot disagree.
 
-The streaming path (``streaming/stream.py:run_cdc_stream``) writes its
+The streaming path (``api.py:CdcPipeline.run_stream``) writes its
 blobs from the micro-batch's tagged frame BEFORE the events, under
 ``dt=<d>/batch_id=<n>/`` partitions with dynamic partition overwrite:
 a committed event never points at a missing blob, and a replayed
@@ -37,7 +37,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cdk_dynamodb_cdc_spark.operators.pipeline import tag_records
-from cdk_dynamodb_cdc_spark.schemas import CLAIM_CHECK_THRESHOLD
 
 
 def side_store_writes(tagged: DataFrame) -> DataFrame:
@@ -71,29 +70,20 @@ def write_batch(df: DataFrame, path: str, batch_id: int, *partition_by: str) -> 
     )
 
 
-def write_side_store(records: DataFrame, base_path: str,
-                     threshold: int = CLAIM_CHECK_THRESHOLD,
-                     batch_id: int | None = None) -> None:
-    """Write the claim-checked images of ``records`` (CDC_RECORD_SCHEMA)
+def write_side_store(records: DataFrame, base_path: str) -> None:
+    """Append the claim-checked images of ``records`` (CDC_RECORD_SCHEMA)
     to the side store, partitioned by date.
 
     The rows come from ``tag_records(records)``, so while a
     ``CdcPipeline`` holds the persisted pass of the same ``records``
-    (same threshold, no pk filter or reconstruction), Spark answers
-    this write from that cache and no second Python pass runs.
-
-    With a ``batch_id``, rows land under ``dt=<d>/batch_id=<n>/`` via
-    :func:`write_batch`, so a replay of the same batch overwrites its
-    own partitions. `dt` stays the LEADING partition key so
-    :func:`vacuum_side_store`'s top-level date-partition drop is
-    unchanged. Without a batch_id (one-shot batch use) the write is a
-    plain append.
+    (default threshold, no pk filter or reconstruction), Spark answers
+    this write from that cache and no second Python pass runs. The
+    stream writes its side store per micro-batch with
+    :func:`write_batch` instead, so a replay overwrites its own
+    partitions.
     """
-    out = side_store_writes(tag_records(records, claim_check_threshold=threshold))
-    if batch_id is None:
-        out.write.mode("append").partitionBy("dt").parquet(base_path)
-    else:
-        write_batch(out, base_path, batch_id, "dt")
+    out = side_store_writes(tag_records(records))
+    out.write.mode("append").partitionBy("dt").parquet(base_path)
 
 
 def _keyed_hash(msg, secret: str):

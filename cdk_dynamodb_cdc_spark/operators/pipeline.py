@@ -45,7 +45,7 @@ and ``quarantine(records)`` on the same ``records`` DataFrame share one
 pass, and the pipeline releases the frame when a different ``records``
 frame arrives, on ``close()`` (or at the end of a ``with`` block), or
 when it is garbage-collected. The streaming lane persists it for the
-length of one micro-batch (``streaming/stream.py:run_cdc_stream``).
+length of one micro-batch (``api.py:CdcPipeline.run_stream``).
 """
 
 from __future__ import annotations

@@ -10,13 +10,11 @@ Batch lane: `lag(new_image)` over the per-key version window — one
 shuffle on (pk, sk), which the reference's per-item-key stream ordering
 guarantee maps to exactly (SURVEY.md §4 "per-key ordering").
 
-Streaming lanes: per-key state holding the last seen image, as either
-`applyInPandasWithState` (the GroupState API) or
-`transformWithStateInPandas` (Spark 4's StatefulProcessor API, which
-adds composable typed state and requires the RocksDB state store) —
-identical semantics, so a continuous stream needs no window over
-unbounded history: state is one image per live item key, the same
-cache a DynamoDB shard consumer would keep.
+Streaming lane: per-key state holding the last seen image, via
+`applyInPandasWithState` (the GroupState API), with the batch lane's
+semantics, so a continuous stream needs no window over unbounded
+history: state is one image per live item key, the same cache a
+DynamoDB shard consumer would keep.
 """
 
 from __future__ import annotations
@@ -81,51 +79,4 @@ def reconstruct_old_images_stream(records: DataFrame) -> DataFrame:
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-class _ReconstructProcessor:
-    """StatefulProcessor for `transformWithStateInPandas`: same
-    semantics as :func:`_reconstruct_group`, expressed in Spark 4's
-    typed-state API (a ValueState cell holding the last image)."""
-
-    def init(self, handle) -> None:
-        self._last = handle.getValueState("last_image", _STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timer_values):
-        last_image = self._last.get()[0] if self._last.exists() else None
-        for pdf in rows:
-            pdf = pdf.sort_values("seq")
-            old_out = []
-            for old, new in zip(pdf["old_image"], pdf["new_image"]):
-                old_out.append(old if isinstance(old, str) else last_image)
-                # REMOVE (null new_image) clears — see _reconstruct_group
-                last_image = new if isinstance(new, str) else None
-            yield pdf.assign(old_image=pd.array(old_out, dtype=object))
-        self._last.update((last_image,))
-
-    def close(self) -> None:
-        pass
-
-
-def reconstruct_old_images_tws(records: DataFrame) -> DataFrame:
-    """Streaming reconstruction via `transformWithStateInPandas`.
-
-    Functionally identical to :func:`reconstruct_old_images_stream`;
-    use this lane on Spark 4+ clusters where the RocksDB state store is
-    configured (`spark.sql.streaming.stateStore.providerClass` =
-    `...RocksDBStateStoreProvider`, required by transformWithState) —
-    RocksDB keeps per-key state off-heap and incrementally
-    checkpointed, the right trade at 100 TB-scale key cardinalities.
-    """
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    proc = type(
-        "ReconstructProcessor", (_ReconstructProcessor, StatefulProcessor), {}
-    )()
-    return records.groupBy("pk", "sk").transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=RECONSTRUCTED_SCHEMA,
-        outputMode="append",
-        timeMode="None",
     )

@@ -5,18 +5,19 @@ Arrow exchange and per-row Python for unmarshall + diff because the
 item schema is unknown. When the user DECLARES a StructType, this
 module generates the whole unmarshall -> diff path as pure Column
 expressions — `from_json` + field comparisons, fully JVM-side and
-whole-stage-codegen'd. At 100 TB this is the difference between
-interpreter-bound and scan-bound CDC.
+whole-stage-codegen'd, with no Python in the plan.
 
-Measured at local[32]: the two lanes tie at 100k records (both
-overhead-dominated, ~1s) and the typed lane wins ~2x at 1M records
-(4.7s vs 10.2s lane-only) — the gap keeps widening with volume because
-the dynamic lane's per-row Python is the part that scales linearly.
-The plan shows ~14 `from_json` occurrences; that is NOT 14 full
-parses — Catalyst's OptimizeJsonExprs prunes each occurrence to the
-fields it feeds (verified: pruning makes duplicated pruned parses
-cheaper than one unpruned parse plus struct reuse), so no manual
-parse-once restructuring is warranted.
+That does not make it the faster lane today. Over the benchmark's
+21-field items (perfbench/lanes.py:ITEM_SCHEMA) the optimized plan of
+:func:`cdc_change_events_typed` holds 44 `from_json`: 2 in the output
+projection and 42 in the pushed no-op `Filter`, where
+`PushDownPredicates` inlines the let-bound parse once per field
+comparison. The traced benchmark run (seed 3, 9000 records, 4-core
+x86-64 VM) read `operators.typed_diff.events_s` 6.2 s against
+`operators.pipeline.events_s` 0.6 s on backfill_dynamic, and 5.1 s
+against 1.1 s on stream_trickle: the typed lane is 4-10x slower than
+the dynamic lane at this width. ROADMAP direction B holds the
+measurement and the plan (one parse per image) to fix it.
 
 Semantics match the dynamic lane (functions/diff.py, which mirrors the
 reference's `compareJSON`, `dynamo-stream-handler.ts:29-87`) with ONE
@@ -48,7 +49,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from cdk_dynamodb_cdc_spark.operators.pipeline import claim_checked, images_url
+from cdk_dynamodb_cdc_spark.operators.pipeline import (
+    claim_checked,
+    images_url,
+    null_guards,
+)
 from cdk_dynamodb_cdc_spark.schemas import CLAIM_CHECK_THRESHOLD
 
 
@@ -246,13 +251,10 @@ def cdc_change_events_typed(
     same input (CDC_RECORD_SCHEMA) and output columns, zero Python.
 
     `.explain()` shows one WholeStageCodegen span from scan to output:
-    no exchange, no BatchEvalPython — THE plan to run when the item
-    schema is declared."""
-    src = records.filter(
-        F.col("operation").isNotNull()
-        & F.col("event_id").isNotNull()
-        & (F.col("new_image").isNotNull() | F.col("old_image").isNotNull())
-    ).withColumn("claim", claim_checked(claim_check_threshold))
+    no exchange, no BatchEvalPython; the module docstring gives its
+    measured cost against the dynamic lane."""
+    src = null_guards(records).withColumn(
+        "claim", claim_checked(claim_check_threshold))
     # Parse each image in its own projection and reference the parsed
     # structs as column refs below. The split alone is NOT enough
     # protection: the optimizer inlines these aliases when it merges

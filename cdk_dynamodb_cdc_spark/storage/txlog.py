@@ -575,8 +575,8 @@ def txlog_sink_writer(
     expectations: list[dict] | None = None,
     dead_letter_path: str | None = None,
 ):
-    """Transactional ``sink_writer`` for ``run_cdc_stream``, with no
-    external package: each micro-batch is one atomic, idempotent
+    """Transactional ``sink_writer`` for ``CdcPipeline.run_stream``, with
+    no external package: each micro-batch is one atomic, idempotent
     ``TxTable.commit`` keyed by ``(app_id, batch_id)``, so replays
     after a crash publish nothing twice and readers never observe a
     half-written batch.

@@ -7,6 +7,5 @@ from cdk_dynamodb_cdc_spark.streaming.stream import (  # noqa: F401
     read_cdc_kafka_stream,
     read_cdc_stream,
     read_snapshot_store,
-    run_cdc_stream,
     windowed_change_counts,
 )

@@ -4,7 +4,11 @@ streaming rows).
 The reference is a *stream* processor: a Lambda subscribed to a
 DynamoDB change stream (`/root/reference/lib/constructs/dynamo.ts:153-155,193`
 — `DynamoEventSource`, `StartingPosition.LATEST`, NEW_AND_OLD_IMAGES
-view at `dynamo.ts:69`). This module is the Spark-native equivalent:
+view at `dynamo.ts:69`). This module holds the Spark-native sources
+and stateful stream operators; the record -> event stream itself is
+`CdcPipeline.run_stream` (api.py), which runs the batch-tested record
+transform per micro-batch via `foreachBatch`, configured by the same
+pipeline as the batch lane:
 
     read_cdc_stream     — `readStream` over a file/CDC-record source
                           (A1; `latest` start maps to processing only
@@ -14,13 +18,6 @@ view at `dynamo.ts:69`). This module is the Spark-native equivalent:
                           checkpoint without reading it (zero-scan
                           `latest` start; read_cdc_stream calls it on
                           first subscription when given the checkpoint)
-    run_cdc_stream      — the batch-tested record transform applied per
-                          micro-batch via `foreachBatch`: one persisted
-                          `tag_records` pass, projected to the claim-check
-                          side store and then to an IDEMPOTENT main-sink
-                          write (dynamic partition overwrite keyed by
-                          batch_id), checkpointed; `availableNow` for
-                          backlog-then-stop runs
     dedup_within_watermark — at-least-once -> exactly-once semantics on
                           a keyed stream (`dropDuplicatesWithinWatermark`)
     windowed_change_counts — event-time tumbling-window aggregation with
@@ -30,10 +27,10 @@ view at `dynamo.ts:69`). This module is the Spark-native equivalent:
                           partitioned parquet state store (dynamic
                           partition overwrite of touched buckets only)
 
-Exactly-once story: the checkpoint tracks source offsets per micro
-batch; the main sink writes `batch_id=<n>` partitions with DYNAMIC
-partition overwrite (a per-write option; the session conf is never
-touched), so a replayed batch overwrites its own partition instead of
+Exactly-once story (`run_stream`): the checkpoint tracks source
+offsets per micro batch; the main sink writes `batch_id=<n>` partitions
+with DYNAMIC partition overwrite (a per-write option; the session conf
+is never touched), so a replayed batch overwrites its own partition instead of
 appending duplicates; the claim-check side store does the same under
 `dt=<d>/batch_id=<n>` partitions and is written first, so a committed
 event never points at a missing blob. Both are projections of one read
@@ -52,12 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
-from cdk_dynamodb_cdc_spark.operators.claim_check import (
-    side_store_writes,
-    write_batch,
-)
-from cdk_dynamodb_cdc_spark.operators.pipeline import project, tag_records
-from cdk_dynamodb_cdc_spark.schemas import CDC_RECORD_SCHEMA, CLAIM_CHECK_THRESHOLD
+from cdk_dynamodb_cdc_spark.schemas import CDC_RECORD_SCHEMA
 
 
 def initialize_latest_checkpoint(
@@ -165,7 +157,7 @@ def read_cdc_stream(
     existed BEFORE subscription never reach the pipeline. Two cuts:
 
     * With `checkpoint_path` (pass the SAME path to
-      :func:`run_cdc_stream`): on FIRST subscription — no checkpoint
+      ``CdcPipeline.run_stream``): on FIRST subscription — no checkpoint
       on disk yet — the backlog is committed into the checkpoint by
       :func:`initialize_latest_checkpoint` without being read, and the
       returned stream carries no row filter; the source itself skips
@@ -204,68 +196,6 @@ def read_cdc_stream(
             f"got {starting_position!r}"
         )
     return reader.json(source_path)
-
-
-def run_cdc_stream(
-    records: DataFrame,
-    *,
-    sink_path: str,
-    checkpoint_path: str,
-    side_store_path: str | None = None,
-    pk_filters: list[str] | None = None,
-    claim_check_threshold: int = CLAIM_CHECK_THRESHOLD,
-    available_now: bool = True,
-    sink_writer=None,
-    transform=None,
-):
-    """Run the CDC pipeline over a record stream into a parquet sink.
-
-    Returns the started StreamingQuery; callers `awaitTermination()`.
-    Each micro-batch reads its input ONCE: it persists
-    `tag_records(batch_df, pk_filters)` (operators/pipeline.py, the same
-    pass the batch lane runs), then, as projections of that frame,
-
-      1. writes the claim-checked events' images to the side store
-         under `dt=<d>/batch_id=<n>/` (when `side_store_path` is set),
-      2. writes the change events to `sink_path/batch_id=<n>/`,
-
-    and unpersists it. Both writes use dynamic partition overwrite, so
-    replays overwrite, never duplicate; the side store goes first, so
-    a committed event never points at a missing blob. Claim-checked
-    events point at `<side_store_path>/<event_id>.json`.
-    `transform` (DataFrame -> DataFrame, the reference's `functionPath`
-    hook) runs on the change events before the sink.
-
-    `sink_writer` swaps step 2 for a custom `(events_df, batch_id) ->
-    None` writer while keeping the pipeline, side store, and
-    checkpointing — the hook a transactional table format plugs into
-    (storage/txlog.py:txlog_sink_writer); any writer must stay
-    idempotent per batch_id, because the checkpoint replays the last
-    uncommitted batch after a crash.
-    """
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        tagged = tag_records(batch_df, pk_filters, claim_check_threshold).persist()
-        try:
-            if side_store_path is not None:
-                write_batch(side_store_writes(tagged), side_store_path, batch_id, "dt")
-            events = project(tagged, "event", claim_check_base=side_store_path)
-            if transform is not None:
-                events = transform(events)
-            if sink_writer is not None:
-                sink_writer(events, batch_id)
-            else:
-                write_batch(events, sink_path, batch_id)
-        finally:
-            tagged.unpersist()
-
-    writer = (
-        records.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def dedup_within_watermark(
@@ -502,8 +432,8 @@ def maintain_snapshot_stream(
 
     Exactly-once: replaying a batch recomputes the identical bucket
     contents (winners are keyed by seq, unaffected by replay) and
-    overwrites the same partitions — idempotent, like run_cdc_stream's
-    sink. At scale, bucket count bounds rewrite amplification: a batch
+    overwrites the same partitions — idempotent, like
+    ``CdcPipeline.run_stream``'s sink. At scale, bucket count bounds rewrite amplification: a batch
     touching k keys rewrites at most min(k, buckets) partitions;
     untouched buckets are never written, and the carry-forward read is
     partition-PRUNED to the touched buckets (the batch's bucket ids —

@@ -21,15 +21,28 @@ def test_batch_events_with_transform_hook(spark):
     assert ops == {"INSERT"}
 
 
-def test_presign_and_transform_apply_in_both_lanes(spark, tmp_path):
-    """presign_secret and the functionPath-style transform must shape
-    the output identically whether the pipeline runs as a batch or as
-    a checkpointed stream."""
-    from cdk_dynamodb_cdc_spark.operators.claim_check import validate_claim_url
+def _stream_of(spark, records, src):
+    """`records` written as one JSON-lines file under `src`, read back
+    as a record stream from the start."""
     from cdk_dynamodb_cdc_spark.streaming import read_cdc_stream
+
+    src.mkdir()
+    with open(src / "b.json", "w") as fh:
+        for r in (r.asDict() for r in records.collect()):
+            r["ts"] = r["ts"].strftime("%Y-%m-%dT%H:%M:%S.%f+0000")
+            fh.write(json.dumps(r) + "\n")
+    return read_cdc_stream(spark, str(src), starting_position="trim_horizon")
+
+
+def test_presign_and_transform_apply_in_both_lanes(spark, tmp_path):
+    """presign_secret, the functionPath-style transform and a
+    non-default claim threshold must shape the output identically
+    whether the pipeline runs as a batch or as a checkpointed stream."""
+    from cdk_dynamodb_cdc_spark.operators.claim_check import validate_claim_url
 
     pipe = CdcPipeline(
         claim_check_base=str(tmp_path / "store") + "/",
+        claim_check_threshold=512,
         presign_secret="k3y",
         transform=lambda df: df.withColumn("tenant", F.lit("t0")),
     )
@@ -43,16 +56,9 @@ def test_presign_and_transform_apply_in_both_lanes(spark, tmp_path):
     ).count() == 0
     assert {r.tenant for r in batch.collect()} == {"t0"}
 
-    src = tmp_path / "src"
-    src.mkdir()
-    rows = [r.asDict() for r in records.collect()]
-    with open(src / "b.json", "w") as fh:
-        for r in rows:
-            r["ts"] = r["ts"].strftime("%Y-%m-%dT%H:%M:%S.%f+0000")
-            fh.write(json.dumps(r) + "\n")
     sink = str(tmp_path / "sink")
     q = pipe.run_stream(
-        read_cdc_stream(spark, str(src), starting_position="trim_horizon"),
+        _stream_of(spark, records, tmp_path / "src"),
         sink_path=sink,
         checkpoint_path=str(tmp_path / "ckpt"),
     )
@@ -65,16 +71,21 @@ def test_presign_and_transform_apply_in_both_lanes(spark, tmp_path):
         ~validate_claim_url(F.col("images_url"), "k3y")
     ).count() == 0
 
-    # one pointer rule: both lanes point at the same paths
+    # one claim rule and one pointer rule: both lanes claim-check the
+    # same events (size >= 512 or 0) and point at the same paths
     def paths(df):
         return {r.images_url.split("?")[0] for r in df.collect()}
 
+    claimed = {
+        "ev-insert", "ev-scalar", "ev-nested", "ev-array", "ev-add",
+        "ev-remove-attr", "ev-remove", "ev-big", "ev-zero-size",
+    }
     assert paths(s_signed) == paths(batch_signed) == {
-        f"{tmp_path}/store/{eid}.json" for eid in ("ev-big", "ev-zero-size")
+        f"{tmp_path}/store/{eid}.json" for eid in claimed
     }
 
 
-def test_pk_filter_applies_in_both_lanes(spark):
+def test_pk_filter_applies_in_both_lanes(spark, tmp_path):
     records = cdc_fixture_df(spark)
     dynamic = CdcPipeline(pk_filters=["ORDER#*"])
     typed = CdcPipeline(
@@ -91,6 +102,15 @@ def test_pk_filter_applies_in_both_lanes(spark):
     typ_pks = {r.pk for r in typed.events(records).collect()}
     assert dyn_pks and all(pk.startswith("ORDER#") for pk in dyn_pks)
     assert typ_pks and all(pk.startswith("ORDER#") for pk in typ_pks)
+
+    sink = str(tmp_path / "sink")
+    dynamic.run_stream(
+        _stream_of(spark, records, tmp_path / "src"),
+        sink_path=sink,
+        checkpoint_path=str(tmp_path / "ckpt"),
+    ).awaitTermination(120)
+    stream_pks = {r.pk for r in spark.read.parquet(sink).collect()}
+    assert stream_pks == dyn_pks
 
 
 def test_reconstruction_wired_into_batch_lane(spark):
@@ -156,33 +176,6 @@ def test_source_format_round_trips(spark, tmp_path):
             for r in got.collect()
         }
         assert rows == want
-
-
-def test_pipeline_infer_schema_lane_matches_dynamic(spark):
-    """CdcPipeline(item_schema="infer"): the drift-profile inference
-    feeds the typed lane and reproduces the dynamic lane's events."""
-    import datetime
-
-    from cdk_dynamodb_cdc_spark.api import CdcPipeline
-
-    old = '{"a":{"N":"1"},"name":{"S":"x"}}'
-    new = '{"a":{"N":"2"},"name":{"S":"x"},"fresh":{"BOOL":true}}'
-    records = spark.createDataFrame(
-        [
-            ("e1", 1, datetime.datetime(2024, 1, 1), "MODIFY",
-             "PK#1", "SK", old, new, 64),
-            ("e2", 2, datetime.datetime(2024, 1, 1, 0, 1), "MODIFY",
-             "PK#1", "SK", new, new, 64),  # no-op
-        ],
-        "event_id string, seq long, ts timestamp, operation string, "
-        "pk string, sk string, old_image string, new_image string, "
-        "size_bytes long",
-    )
-    dyn = CdcPipeline().events(records)
-    inf = CdcPipeline(item_schema="infer").events(records)
-    d = {r.event_id: sorted(r.attributes_changed) for r in dyn.collect()}
-    i = {r.event_id: sorted(r.attributes_changed) for r in inf.collect()}
-    assert d == i == {"e1": ["a", "fresh"]}
 
 
 def test_observation_metrics_piggyback_single_pass(spark):

@@ -135,129 +135,3 @@ def test_stream_reconstruction_carries_state_across_batches(spark, tmp_path):
     # a3 arrives in the SECOND micro-batch: its old image must come
     # from state written by the first batch
     assert got == {"a1": None, "a2": _img(1), "a3": _img(2), "b1": None}
-
-
-def test_tws_reconstruction_carries_state_across_batches(spark, tmp_path):
-    """transformWithStateInPandas lane: same cross-batch state contract
-    as the applyInPandasWithState lane (requires RocksDB state store).
-
-    Skipped where the TWS Python driver worker's protobuf dependency
-    is absent (this container) — the processor logic itself is the
-    same code path the applyInPandasWithState test pins."""
-    import os
-    import time
-
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("google.protobuf unavailable: TWS driver worker "
-                    "cannot start in this environment")
-
-    from cdk_dynamodb_cdc_spark.operators.reconstruct import (
-        reconstruct_old_images_tws,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-
-    def write_batch(name, rows, mtime):
-        p = src / name
-        with open(p, "w") as fh:
-            for (eid, seq, ts, op, pk, sk, old, new, size) in rows:
-                fh.write(json.dumps({
-                    "event_id": eid, "seq": seq,
-                    "ts": ts.strftime("%Y-%m-%dT%H:%M:%S.%f%z"),
-                    "operation": op, "pk": pk, "sk": sk,
-                    "old_image": old, "new_image": new, "size_bytes": size,
-                }) + "\n")
-        os.utime(p, (mtime, mtime))
-
-    now = time.time()
-    write_batch("b0.json", [_rec("a1", 1, "A", _img(1)),
-                            _rec("a2", 2, "A", _img(2))], now - 60)
-    write_batch("b1.json", [_rec("a3", 3, "A", _img(3)),
-                            _rec("b1", 1, "B", _img(9))], now)
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(CDC_RECORD_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .json(str(src))
-        )
-        out = reconstruct_old_images_tws(stream)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("recon_tws_out")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        assert not q.isActive
-        got = {
-            r.event_id: r.old_image
-            for r in spark.sql(
-                "SELECT event_id, old_image FROM recon_tws_out"
-            ).collect()
-        }
-        assert got == {"a1": None, "a2": _img(1), "a3": _img(2), "b1": None}
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
-def test_tws_processor_logic_without_streaming_runtime():
-    """Drive _ReconstructProcessor directly with fake state: the
-    per-row semantics (fill-from-state, REMOVE clears) are pinned even
-    where the TWS streaming runtime can't start."""
-    import pandas as pd
-
-    from cdk_dynamodb_cdc_spark.operators.reconstruct import (
-        _ReconstructProcessor,
-    )
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class FakeHandle:
-        def __init__(self):
-            self.state = FakeValueState()
-
-        def getValueState(self, name, schema):
-            return self.state
-
-    proc = _ReconstructProcessor()
-    handle = FakeHandle()
-    proc.init(handle)
-    pdf = pd.DataFrame({
-        "event_id": ["a1", "a2", "a3"],
-        "seq": [1, 2, 3],
-        "old_image": [None, _img(1), None],   # a2: source-provided wins
-        "new_image": [_img(1), None, _img(7)],  # a2 is a REMOVE
-    })
-    (out,) = list(proc.handleInputRows(("A", "SK"), iter([pdf]), None))
-    got = dict(zip(out["event_id"], out["old_image"]))
-    assert got["a1"] is None
-    assert got["a2"] == _img(1)
-    assert got["a3"] is None            # REMOVE cleared the state
-    assert handle.state.get() == (_img(7),)  # state carries a3's image

@@ -14,12 +14,12 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from cdk_dynamodb_cdc_spark import CdcPipeline
 from cdk_dynamodb_cdc_spark.schemas import CDC_RECORD_SCHEMA
 from cdk_dynamodb_cdc_spark.sources.fixtures import fixture_rows
 from cdk_dynamodb_cdc_spark.streaming import (
     dedup_within_watermark,
     read_cdc_stream,
-    run_cdc_stream,
     windowed_change_counts,
 )
 
@@ -68,7 +68,7 @@ def test_stream_processes_backlog_and_is_exactly_once_across_restart(
 
     stream = read_cdc_stream(spark, str(src), starting_position="trim_horizon")
     _run_until_done(
-        run_cdc_stream(
+        CdcPipeline().run_stream(
             stream, sink_path=sink, checkpoint_path=ckpt, side_store_path=side
         )
     )
@@ -82,7 +82,7 @@ def test_stream_processes_backlog_and_is_exactly_once_across_restart(
     _write_records_file(src / "batch1.json", rows[9:])
     stream2 = read_cdc_stream(spark, str(src), starting_position="trim_horizon")
     _run_until_done(
-        run_cdc_stream(
+        CdcPipeline().run_stream(
             stream2, sink_path=sink, checkpoint_path=ckpt, side_store_path=side
         )
     )
@@ -102,24 +102,33 @@ def test_stream_processes_backlog_and_is_exactly_once_across_restart(
 
 
 def test_replayed_batch_overwrites_instead_of_duplicating(spark, tmp_path):
-    """Simulate a sink replay: rerunning a batch with the same batch_id
-    must overwrite its own partition (dynamic partition overwrite), the
-    idempotence the checkpoint relies on after a mid-write crash."""
+    """Simulate a replay: rerunning a batch with the same batch_id must
+    overwrite its own sink and side-store partitions (dynamic partition
+    overwrite), the idempotence the checkpoint relies on after a
+    mid-write crash."""
     src = tmp_path / "src"
     src.mkdir()
-    sink = str(tmp_path / "sink")
+    sink, side = str(tmp_path / "sink"), str(tmp_path / "side")
 
-    rows = fixture_rows()[:3]
-    _write_records_file(src / "b.json", rows)
+    _write_records_file(src / "b.json", fixture_rows())
 
     for _ in range(2):  # same data, same checkpoint-less rerun -> batch_id 0 twice
         ckpt = str(tmp_path / f"ckpt{_}")
         stream = read_cdc_stream(spark, str(src), starting_position="trim_horizon")
         _run_until_done(
-            run_cdc_stream(stream, sink_path=sink, checkpoint_path=ckpt)
+            CdcPipeline().run_stream(
+                stream, sink_path=sink, checkpoint_path=ckpt, side_store_path=side
+            )
         )
-    ids = [r.event_id for r in spark.read.parquet(sink).select("event_id").collect()]
+    events = spark.read.parquet(sink)
+    ids = [r.event_id for r in events.select("event_id").collect()]
     assert sorted(ids) == sorted(set(ids))
+    side_ids = [r.event_id for r in spark.read.parquet(side).collect()]
+    claimed = {
+        r.event_id for r in events.filter(F.col("images_url").isNotNull()).collect()
+    }
+    assert sorted(side_ids) == sorted(set(side_ids))
+    assert set(side_ids) == claimed == {"ev-big", "ev-zero-size"}
 
 
 def test_latest_skips_backlog_trim_horizon_reads_it(spark, tmp_path):
@@ -141,7 +150,9 @@ def test_latest_skips_backlog_trim_horizon_reads_it(spark, tmp_path):
     time.sleep(0.2)  # file mtime must exceed the subscription timestamp
     _write_records_file(src / "fresh.json", fresh)
     sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-    _run_until_done(run_cdc_stream(stream, sink_path=sink, checkpoint_path=ckpt))
+    _run_until_done(
+        CdcPipeline().run_stream(stream, sink_path=sink, checkpoint_path=ckpt)
+    )
     ids = {r.event_id for r in spark.read.parquet(sink).select("event_id").collect()}
     backlog_ids = {r[0] for r in backlog}
     assert ids == {"ev-add", "ev-remove-attr", "ev-remove"}
@@ -150,7 +161,9 @@ def test_latest_skips_backlog_trim_horizon_reads_it(spark, tmp_path):
     # same directory, trim_horizon: the backlog IS processed
     stream2 = read_cdc_stream(spark, str(src), starting_position="trim_horizon")
     sink2, ckpt2 = str(tmp_path / "sink2"), str(tmp_path / "ckpt2")
-    _run_until_done(run_cdc_stream(stream2, sink_path=sink2, checkpoint_path=ckpt2))
+    _run_until_done(
+        CdcPipeline().run_stream(stream2, sink_path=sink2, checkpoint_path=ckpt2)
+    )
     ids2 = {r.event_id for r in spark.read.parquet(sink2).select("event_id").collect()}
     assert "ev-insert" in ids2 and "ev-scalar" in ids2
 
@@ -186,7 +199,9 @@ def test_latest_checkpoint_init_skips_backlog_without_reading_it(
     )
     _write_records_file(src / "fresh.json", fresh)
     sink = str(tmp_path / "sink")
-    _run_until_done(run_cdc_stream(stream, sink_path=sink, checkpoint_path=ckpt))
+    _run_until_done(
+        CdcPipeline().run_stream(stream, sink_path=sink, checkpoint_path=ckpt)
+    )
     ids = {r.event_id for r in spark.read.parquet(sink).select("event_id").collect()}
     assert ids == {"ev-add", "ev-remove-attr", "ev-remove"}
     assert not ids & {r[0] for r in backlog}
@@ -206,7 +221,9 @@ def test_latest_checkpoint_restart_keeps_unprocessed_files(spark, tmp_path):
         spark, str(src), starting_position="latest", checkpoint_path=ckpt
     )
     sink = str(tmp_path / "sink")
-    _run_until_done(run_cdc_stream(stream, sink_path=sink, checkpoint_path=ckpt))
+    _run_until_done(
+        CdcPipeline().run_stream(stream, sink_path=sink, checkpoint_path=ckpt)
+    )
 
     # consumer goes down; records arrive meanwhile
     _write_records_file(src / "while_down.json", rows[6:9])
@@ -215,25 +232,11 @@ def test_latest_checkpoint_restart_keeps_unprocessed_files(spark, tmp_path):
     stream2 = read_cdc_stream(
         spark, str(src), starting_position="latest", checkpoint_path=ckpt
     )
-    _run_until_done(run_cdc_stream(stream2, sink_path=sink, checkpoint_path=ckpt))
+    _run_until_done(
+        CdcPipeline().run_stream(stream2, sink_path=sink, checkpoint_path=ckpt)
+    )
     ids = {r.event_id for r in spark.read.parquet(sink).select("event_id").collect()}
     assert ids == {"ev-add", "ev-remove-attr", "ev-remove"}
-
-
-def test_side_store_replay_overwrites_instead_of_duplicating(spark, tmp_path):
-    """A replayed micro-batch (same batch_id) must overwrite its own
-    side-store partition, not append a second copy of every image."""
-    from cdk_dynamodb_cdc_spark.operators.claim_check import write_side_store
-    from cdk_dynamodb_cdc_spark.sources.fixtures import cdc_fixture_df
-
-    records = cdc_fixture_df(spark)
-    side = str(tmp_path / "side")
-    for _ in range(2):  # crash-and-replay of batch 7
-        write_side_store(records, side, batch_id=7)
-    out = spark.read.parquet(side)
-    ids = [r.event_id for r in out.select("event_id").collect()]
-    assert sorted(ids) == sorted(set(ids))
-    assert {"ev-big", "ev-zero-size"} <= set(ids)
 
 
 def test_stream_reads_each_batch_once(spark, tmp_path):
@@ -249,7 +252,7 @@ def test_stream_reads_each_batch_once(spark, tmp_path):
     stream = read_cdc_stream(
         spark, str(src), starting_position="trim_horizon", max_files_per_trigger=1
     )
-    q = run_cdc_stream(
+    q = CdcPipeline().run_stream(
         stream, sink_path=sink, checkpoint_path=str(tmp_path / "ckpt"),
         side_store_path=side,
     )
@@ -327,7 +330,7 @@ def test_custom_sink_writer_replaces_default_sink(spark, tmp_path):
 
     stream = read_cdc_stream(spark, str(src), starting_position="trim_horizon")
     _run_until_done(
-        run_cdc_stream(
+        CdcPipeline().run_stream(
             stream,
             sink_path=sink,
             checkpoint_path=str(tmp_path / "ckpt"),

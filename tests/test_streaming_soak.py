@@ -28,16 +28,14 @@ def _n_commits(ckpt: str) -> int:
         return 0
     return len([f for f in os.listdir(d) if not f.startswith(".")])
 
+from cdk_dynamodb_cdc_spark import CdcPipeline
 from cdk_dynamodb_cdc_spark.operators.ivm import (
     maintain_aggregate_stream,
     read_aggregate_store,
 )
 from cdk_dynamodb_cdc_spark.storage import TxTable, txlog_sink_writer
 from cdk_dynamodb_cdc_spark.storage.txlog import read_txlog_feed
-from cdk_dynamodb_cdc_spark.streaming import (
-    read_cdc_stream,
-    run_cdc_stream,
-)
+from cdk_dynamodb_cdc_spark.streaming import read_cdc_stream
 from cdk_dynamodb_cdc_spark.streaming.stream import (
     maintain_snapshot_stream,
     read_snapshot_store,
@@ -277,7 +275,7 @@ def run_scenario(spark, tmp_path, *, kill: bool = True) -> dict:
         _await(q)
 
     def run_txlog():
-        q = run_cdc_stream(
+        q = CdcPipeline().run_stream(
             read_cdc_stream(
                 spark, str(staged), starting_position="trim_horizon",
                 max_files_per_trigger=20,

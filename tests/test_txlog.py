@@ -9,6 +9,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from cdk_dynamodb_cdc_spark import CdcPipeline
 from cdk_dynamodb_cdc_spark.storage import TxTable, txlog_sink_writer
 
 
@@ -115,7 +116,6 @@ def test_streaming_sink_is_exactly_once_across_restart(spark, tmp_path):
         append_cdc_records,
         read_cdc_shards_stream,
     )
-    from cdk_dynamodb_cdc_spark.streaming import run_cdc_stream
 
     shards = str(tmp_path / "shards")
     sink = str(tmp_path / "sink")
@@ -138,7 +138,7 @@ def test_streaming_sink_is_exactly_once_across_restart(spark, tmp_path):
     writer = txlog_sink_writer(spark, sink, app_id="cdc-test")
 
     def run_once():
-        q = run_cdc_stream(
+        q = CdcPipeline().run_stream(
             read_cdc_shards_stream(
                 spark, shards, starting_position="trim_horizon"
             ),
@@ -453,7 +453,6 @@ def test_streaming_contract_quarantines_to_dead_letter_table(
         append_cdc_records,
         read_cdc_shards_stream,
     )
-    from cdk_dynamodb_cdc_spark.streaming import run_cdc_stream
 
     shards = str(tmp_path / "shards")
     sink = str(tmp_path / "sink")
@@ -488,7 +487,7 @@ def test_streaming_contract_quarantines_to_dead_letter_table(
     )
 
     def run_once():
-        q = run_cdc_stream(
+        q = CdcPipeline().run_stream(
             read_cdc_shards_stream(
                 spark, shards, starting_position="trim_horizon"
             ),

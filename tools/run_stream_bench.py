@@ -10,7 +10,10 @@ The engine runs the SAME semantic work (unmarshall -> recursive diff ->
 no-op suppression -> event construction -> claim-check branch) as a
 columnar Spark plan; this harness records what that is worth in
 records/sec on one node, and is the absolute-throughput companion to
-the lane-relative note in SCALING.md ("typed ~2x dynamic").
+the lane-relative note in SCALING.md. Its typed lane declares two
+fields; on the benchmark's 21-field items (perfbench/) the typed lane
+is 4-10x slower than the dynamic lane (SCALING.md, ROADMAP direction B),
+so a typed win here does not carry to wide items.
 
 Method: synthesize the marshalled CDC record corpus from the events
 table (untimed), replicate it with disjoint pk spaces to a target row
@@ -20,7 +23,7 @@ parquet once), then time:
   * dynamic lane  — cdc_change_events (fused Arrow mapInPandas diff)
   * typed lane    — cdc_change_events_typed (pure Column codegen)
   * streaming e2e — JSON-shard source -> read_cdc_stream(trim_horizon,
-    maxFilesPerTrigger) -> run_cdc_stream availableNow -> parquet sink
+    maxFilesPerTrigger) -> CdcPipeline.run_stream availableNow -> parquet sink
     with dynamic-partition-overwrite idempotence + checkpoint commits
 
 Best-of-N wall per lane; /proc/stat steal sampled around each lane so
@@ -67,10 +70,8 @@ def main() -> int:
         cdc_change_events_typed,
     )
     from cdk_dynamodb_cdc_spark.queries import synthesize_cdc_records
-    from cdk_dynamodb_cdc_spark.streaming.stream import (
-        read_cdc_stream,
-        run_cdc_stream,
-    )
+    from cdk_dynamodb_cdc_spark.api import CdcPipeline
+    from cdk_dynamodb_cdc_spark.streaming.stream import read_cdc_stream
 
     spark = get_spark("stream_bench")
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # warm-up
@@ -148,7 +149,7 @@ def main() -> int:
             starting_position="trim_horizon",
             max_files_per_trigger=4,
         )
-        q = run_cdc_stream(
+        q = CdcPipeline().run_stream(
             stream,
             sink_path=sink,
             checkpoint_path=ckpt,
