@@ -131,6 +131,26 @@ def test_replayed_batch_overwrites_instead_of_duplicating(spark, tmp_path):
     assert set(side_ids) == claimed == {"ev-big", "ev-zero-size"}
 
 
+def test_side_store_replay_overwrites_instead_of_duplicating(spark, tmp_path):
+    """A replayed micro-batch (same batch_id) must overwrite its own
+    side-store partition, not append a second copy of every image."""
+    from cdk_dynamodb_cdc_spark.operators.claim_check import (
+        side_store_writes,
+        write_batch,
+    )
+    from cdk_dynamodb_cdc_spark.operators.pipeline import tag_records
+    from cdk_dynamodb_cdc_spark.sources.fixtures import cdc_fixture_df
+
+    records = cdc_fixture_df(spark)
+    side = str(tmp_path / "side")
+    for _ in range(2):  # crash-and-replay of batch 7
+        write_batch(side_store_writes(tag_records(records)), side, 7, "dt")
+    out = spark.read.parquet(side)
+    ids = [r.event_id for r in out.select("event_id").collect()]
+    assert sorted(ids) == sorted(set(ids))
+    assert {"ev-big", "ev-zero-size"} <= set(ids)
+
+
 def test_latest_skips_backlog_trim_horizon_reads_it(spark, tmp_path):
     """StartingPosition.LATEST semantics (`dynamo.ts:154,193`): records
     present BEFORE subscription must never reach the sink under
