@@ -14,10 +14,24 @@ and ``spark.readStream`` (production shape). All relational operators are
 thin declarative compositions of Spark built-ins so Catalyst handles
 pushdown / pruning / join selection; Python only runs in Arrow-vectorized
 batches where semantics genuinely require it (the dynamic-schema diff).
+
+``CdcPipeline`` and ``get_spark`` load on first use (PEP 562), so
+importing a submodule imports no pyspark on its own: the worker daemon
+(``worker_daemon.py``) must set ``sys.path`` before pyspark loads.
 """
 
-from cdk_dynamodb_cdc_spark.api import CdcPipeline
-from cdk_dynamodb_cdc_spark.session import get_spark
+from __future__ import annotations
+
+import importlib
 
 __all__ = ["CdcPipeline", "get_spark"]
 __version__ = "0.2.0"
+
+_EXPORTS = {"CdcPipeline": "api", "get_spark": "session"}
+
+
+def __getattr__(name: str):
+    if name in _EXPORTS:
+        module = importlib.import_module(f"{__name__}.{_EXPORTS[name]}")
+        return getattr(module, name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -36,8 +36,9 @@ close the pipeline before re-reading changed input.
 The typed lane's quarantine() tags its records unpersisted: nothing
 shares that frame.
 
-``run_stream`` persists the same tagged frame per micro-batch, writes
-the side store and then the events from it, and unpersists it when the
+``run_stream`` runs the same tagging inside the streaming plan, planned
+once per stream: each micro-batch arrives tagged, is persisted, gives
+the side store and then the events, and is unpersisted when the
 micro-batch ends; it never touches the batch lane's frame.
 """
 
@@ -50,12 +51,13 @@ from pyspark.sql import types as T
 
 from cdk_dynamodb_cdc_spark.operators.claim_check import (
     presign_claim_urls,
-    side_store_writes,
+    side_store_projection,
     write_batch,
 )
 from cdk_dynamodb_cdc_spark.operators.pipeline import (
     pk_filter,
     project,
+    projection,
     publish,
     tag_records,
 )
@@ -198,19 +200,26 @@ class CdcPipeline:
         record stream; returns the StreamingQuery, callers
         `awaitTermination()`.
 
-        Each micro-batch reads its input ONCE: it persists the same
+        The stream is tagged in its own plan, once: the same
         `tag_records` pass the batch lane runs (this pipeline's pk
-        filters and claim threshold), then, as projections of it,
+        filters and claim threshold), after old-image reconstruction
+        when that is enabled. Each micro-batch therefore arrives tagged
+        and is read ONCE: it is persisted, and as projections of it,
+        built once per stream,
 
-          1. writes the claim-checked events' images to the side store
+          1. the claim-checked events' images go to the side store
              under `dt=<d>/batch_id=<n>/` (when there is a side store),
-          2. writes the change events, after presign and the custom
-             transform exactly as in the batch lane, to
-             `sink_path/batch_id=<n>/`,
+          2. the change events, after presign and the custom transform
+             exactly as in the batch lane, go to
+             `sink_path/batch_id=<n>/`;
 
-        and unpersists it. Both writes use dynamic partition overwrite,
-        so replays overwrite, never duplicate; the side store goes
-        first, so a committed event never points at a missing blob.
+        then it is unpersisted. A trigger's `numInputRows` is the
+        records it read, guard-dropped ones included, while the
+        session's JSON filter pushdown is off (get_spark's default);
+        with it on, Spark's JSON reader drops them while parsing and
+        counts only the rest. Both writes use dynamic partition
+        overwrite, so replays overwrite, never duplicate; the side store
+        goes first, so a committed event never points at a missing blob.
         The side store is `side_store_path`, else `claim_check_base`;
         claim-checked events point into it by the same rule as the
         batch lane, so with only `claim_check_base` both lanes emit the
@@ -228,27 +237,26 @@ class CdcPipeline:
         lane, which remains a batch-side option."""
         if self.reconstruct_missing_old:
             records = reconstruct_old_images_stream(records)
+        tagged = tag_records(records, self.pk_filters, self.claim_check_threshold)
         side_store = side_store_path or self.claim_check_base
+        side_rows = side_store_projection()
+        event_rows = projection("event", claim_check_base=side_store)
 
-        def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-            tagged = tag_records(
-                batch_df, self.pk_filters, self.claim_check_threshold
-            ).persist()
+        def process_batch(batch: DataFrame, batch_id: int) -> None:
+            batch.persist()
             try:
                 if side_store is not None:
-                    write_batch(side_store_writes(tagged), side_store, batch_id, "dt")
-                events = self._finish(
-                    project(tagged, "event", claim_check_base=side_store)
-                )
+                    write_batch(side_rows(batch), side_store, batch_id, "dt")
+                events = self._finish(event_rows(batch))
                 if sink_writer is not None:
                     sink_writer(events, batch_id)
                 else:
                     write_batch(events, sink_path, batch_id)
             finally:
-                tagged.unpersist()
+                batch.unpersist()
 
         writer = (
-            records.writeStream.foreachBatch(process_batch)
+            tagged.writeStream.foreachBatch(process_batch)
             .option("checkpointLocation", checkpoint_path)
         )
         if available_now:

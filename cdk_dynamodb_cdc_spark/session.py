@@ -3,7 +3,9 @@
 Local testing runs ``local[N]`` (single JVM), but every knob here is chosen
 to also be the right default on a 1000-executor cluster: AQE for runtime
 re-planning (skew joins, partition coalescing), UTC session timezone so
-results are oracle-comparable, Arrow for any Python exchange.
+results are oracle-comparable, Arrow for any Python exchange. Local
+masters also start their Python workers through ``worker_daemon.py``,
+which keeps Spark's zip archives off the workers' import path.
 """
 
 from __future__ import annotations
@@ -37,7 +39,20 @@ def engine_env(spark: SparkSession | None = None) -> dict[str, str]:
     if spark is not None:
         env["session_tz"] = spark.conf.get("spark.sql.session.timeZone")
         env["ansi"] = spark.conf.get("spark.sql.ansi.enabled")
+        # the worker set-up the numbers came from: one Python task reports
+        # where it imported pyspark from
+        env["python_daemon"] = spark.conf.get(
+            "spark.python.daemon.module", "pyspark.daemon")
+        env["worker_pyspark"] = (
+            spark.sparkContext.parallelize([0], 1).map(_pyspark_file).first()
+        )
     return env
+
+
+def _pyspark_file(_) -> str:
+    import pyspark
+
+    return pyspark.__file__
 
 
 def get_spark(
@@ -82,6 +97,12 @@ def get_spark(
         # physical int64 as long and let the table loader convert
         # (losslessly — corpus values are µs-precision) to TimestampType.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # The JSON reader would otherwise evaluate pushed filters while
+        # parsing and emit only the rows that pass, so a record stream
+        # tagged in its own plan (CdcPipeline.run_stream) would report
+        # its guard-dropped records in no count: numInputRows would read
+        # 4 for a 6-record file. Filters still run right after the scan.
+        .config("spark.sql.json.filterPushdown.enabled", "false")
         .config("spark.ui.enabled", "false")
         # Modest heap on purpose: measured on the 32-core/128 GiB test
         # VM, a 64g heap runs the allocation-heavy interpreted
@@ -92,6 +113,11 @@ def get_spark(
         # SPARK_DRIVER_MEMORY for bigger local corpora.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
+    if master.startswith("local"):
+        # workers import the driver's pyspark, not Spark's zip archives
+        builder = builder.config(
+            "spark.python.daemon.module", "cdk_dynamodb_cdc_spark.worker_daemon"
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -33,9 +33,11 @@ with DYNAMIC partition overwrite (a per-write option; the session conf
 is never touched), so a replayed batch overwrites its own partition instead of
 appending duplicates; the claim-check side store does the same under
 `dt=<d>/batch_id=<n>` partitions and is written first, so a committed
-event never points at a missing blob. Both are projections of one read
-of the micro-batch. This is the standard file-sink exactly-once recipe
-when a transactional table format isn't available.
+event never points at a missing blob. The stream is tagged inside its
+own plan (`tag_records`, planned once per stream), so each micro-batch
+arrives tagged; both writes are projections of one persisted read of
+it. This is the standard file-sink exactly-once recipe when a
+transactional table format isn't available.
 
 Scale: the pipeline transform is shuffle-free (see operators/pipeline.py)
 so each micro-batch is embarrassingly parallel; stateful operators

@@ -159,3 +159,92 @@ def test_dumps_canonical_matches_json_dumps(v):
 def test_dumps_canonical_decimals(d):
     assert dumps_canonical(d) == canonical_decimal(d)
     assert dumps_canonical({"k": [d]}) == '{"k":[' + canonical_decimal(d) + "]}"
+
+
+# -- the kernel decodes an old attribute only where it changed -----------
+
+_NUMBERS = ["1", "1.0", "1E2", "100", "-0", "0.50", "0.5", "2.5"]
+_RESPELL = {"1": "1.0", "1.0": "1", "1E2": "100", "100": "1E2", "0.50": "0.5"}
+_names = st.sampled_from(["a", "b", "c", "d"])
+_av = st.recursive(
+    st.one_of(
+        st.builds(lambda s: {"S": s}, st.sampled_from(["x", "y", "", "é", "a:1,"])),
+        st.builds(lambda n: {"N": n}, st.sampled_from(_NUMBERS)),
+        st.builds(lambda b: {"BOOL": b}, st.booleans()),
+        st.just({"NULL": True}),
+        st.builds(lambda xs: {"SS": xs},
+                  st.lists(st.sampled_from("pqr"), min_size=1, max_size=3, unique=True)),
+        st.builds(lambda xs: {"NS": xs},
+                  st.lists(st.sampled_from(_NUMBERS), min_size=1, max_size=3, unique=True)),
+    ),
+    lambda kids: st.builds(lambda m: {"M": m}, st.dictionaries(_names, kids, max_size=3))
+    | st.builds(lambda xs: {"L": xs}, st.lists(kids, max_size=3)),
+    max_leaves=8,
+)
+# payloads the strict decoder rejects; several equal a valid one under ==
+_malformed = st.sampled_from([
+    {"BOOL": 1}, {"BOOL": 0.0}, {"NULL": 1}, {"NULL": False}, {"N": "abc"},
+    {"S": 5}, {"SS": "abc"}, {"X": "1"}, {"M": {"a": {"BOOL": 1}}}, 5, None, [1],
+])
+
+
+@st.composite
+def _variant(draw, av):
+    """``av`` as an old image may carry it: the same wire value, its
+    numbers respelled or set members reordered, a change nested in it,
+    another value, or a malformed one."""
+    kind = draw(st.sampled_from(["same", "respell", "nested", "other", "malformed"]))
+    if kind == "other":
+        return draw(_av)
+    if kind == "malformed":
+        return draw(_malformed)
+    if not isinstance(av, dict) or len(av) != 1:  # a malformed new attribute
+        return json.loads(json.dumps(av))
+    ((tag, payload),) = av.items()
+    if kind == "respell" and tag == "N":
+        return {"N": _RESPELL.get(payload, payload)}
+    if kind == "respell" and tag in ("SS", "NS"):
+        return {tag: [_RESPELL.get(v, v) for v in reversed(payload)]}
+    if kind == "nested" and tag == "M":
+        return {"M": {k: draw(_variant(v)) for k, v in payload.items()}}
+    if kind == "nested" and tag == "L":
+        return {"L": [draw(_variant(v)) for v in payload]}
+    return json.loads(json.dumps(av))  # equal, not the same object
+
+
+@st.composite
+def _records(draw):
+    new = draw(st.dictionaries(_names, _av, max_size=4))
+    if draw(st.integers(0, 9)) == 0:
+        new[draw(_names)] = draw(_malformed)
+    old = {k: draw(_variant(v)) for k, v in new.items() if draw(st.integers(0, 4))}
+    old.update(draw(st.dictionaries(st.sampled_from(["e", "f"]), _av | _malformed,
+                                    max_size=2)))
+    old = dict(draw(st.permutations(list(old.items()))))
+    operation = draw(st.sampled_from(["MODIFY", "MODIFY", "INSERT", "REMOVE"]))
+    new_raw = None if operation == "REMOVE" else json.dumps(new)
+    old_raw = draw(st.sampled_from([
+        json.dumps(old), json.dumps(old, indent=1), "null", "[1]", '"x"', "7",
+        "\ufeff{}", None,
+    ]))
+    return new_raw, old_raw, operation, draw(st.booleans())
+
+
+@given(_records())
+@settings(max_examples=500, deadline=None)
+def test_kernel_matches_the_full_decode_of_both_images(record):
+    """``_diff_record`` decodes an old attribute only where its wire value
+    differs from the new image's; its output, error text included, is
+    that of decoding both images whole."""
+    from unittest import mock
+
+    from cdk_dynamodb_cdc_spark.operators import pipeline
+
+    new_raw, old_raw, operation, claim = record
+    args = (new_raw, old_raw, None, "pk", "sk", operation, claim)
+    got = pipeline._diff_record(*args)
+    with mock.patch.object(
+        pipeline, "_unmarshall_old", lambda raw, *_: unmarshall(json.loads(raw))
+    ):
+        want = pipeline._diff_record(*args)
+    assert got == want

@@ -287,6 +287,69 @@ def test_stream_reads_each_batch_once(spark, tmp_path):
     assert side_ids == claimed == {"ev-big", "ev-zero-size"}
 
 
+def test_stream_with_reconstruction_matches_batch_lane(spark, tmp_path):
+    """NEW_IMAGE-only records: the stream's per-key reconstruction feeds
+    the tag pass in its plan, and its events equal the batch lane's
+    (lag over seq) across three triggers: a no-op, a REMOVE, an INSERT
+    after it, a claim-checked image and a nested change."""
+    import os
+    import time
+
+    from cdk_dynamodb_cdc_spark.streaming.stream import read_cdc_stream
+
+    t0 = datetime.datetime(2024, 1, 1, tzinfo=UTC)
+
+    def rec(eid, seq, op, pk, item, size=64):
+        new = json.dumps(item) if item is not None else None
+        return (eid, seq, t0 + datetime.timedelta(minutes=seq), op, pk, "S",
+                None, new, size)
+
+    a1 = {"v": {"N": "1"}, "m": {"M": {"x": {"N": "1"}, "y": {"S": "a"}}}}
+    a2 = {"v": {"N": "2"}, "m": {"M": {"x": {"N": "1"}, "y": {"S": "a"}}}}
+    b1 = {"tags": {"SS": ["p", "q"]}, "m": {"M": {"x": {"BOOL": True}}}}
+    b2 = {"tags": {"SS": ["p", "q"]}, "m": {"M": {"x": {"BOOL": False}}}}
+    files = [
+        [rec("a1", 1, "INSERT", "A", a1), rec("b1", 2, "INSERT", "B", b1),
+         rec("a2", 3, "MODIFY", "A", a2)],
+        [rec("a3", 4, "MODIFY", "A", a2), rec("b2", 5, "MODIFY", "B", b2),
+         rec("c1", 6, "INSERT", "C", a1, size=70_000),
+         rec("a4", 7, "REMOVE", "A", None)],
+        [rec("a5", 8, "INSERT", "A", a1), rec("c2", 9, "MODIFY", "C", a2),
+         rec("b3", 10, "MODIFY", "B", {**b2, "tags": {"SS": ["q", "p"]}})],
+    ]
+    src = tmp_path / "src"
+    src.mkdir()
+    now = time.time()
+    for i, rows in enumerate(files):
+        path = src / f"f{i}.json"
+        _write_records_file(path, rows)
+        os.utime(path, (now - 60 * (len(files) - i),) * 2)
+
+    side = str(tmp_path / "side")
+    pipe = CdcPipeline(reconstruct_missing_old=True, claim_check_base=side)
+    sink = str(tmp_path / "sink")
+    stream = read_cdc_stream(
+        spark, str(src), starting_position="trim_horizon", max_files_per_trigger=1
+    )
+    q = pipe.run_stream(stream, sink_path=sink, checkpoint_path=str(tmp_path / "ckpt"))
+    _run_until_done(q)
+    assert len(q.recentProgress) == 3
+
+    def by_id(df):
+        return {r.event_id: r.asDict() for r in df.drop("batch_id").collect()}
+
+    batch = by_id(pipe.events(spark.read.schema(CDC_RECORD_SCHEMA).json(str(src))))
+    pipe.close()
+    streamed = by_id(spark.read.parquet(sink))
+    assert set(batch) == {"a1", "b1", "a2", "b2", "c1", "a4", "a5", "c2"}
+    assert streamed == batch
+    # the REMOVE carries the previous version; the INSERT after it none
+    assert json.loads(batch["a4"]["old_image"]) == {"v": 2, "m": {"x": 1, "y": "a"}}
+    assert json.loads(batch["a5"]["before"]) == {}
+    assert json.loads(batch["c2"]["before"]) == {"v": 1}
+    assert batch["c1"]["images_url"] is not None
+
+
 def test_kafka_value_decoding_roundtrips_cdc_records(spark):
     """The Kafka lane's value decoder must round-trip the same JSON
     wire format the file lane reads — tested on a batch frame of Kafka
