@@ -240,19 +240,6 @@ def stratified_sample(
     )
 
 
-def duck_grams(ws_expr: str = "ws", k: int = DECONTAM_GRAM_WORDS) -> str:
-    """DuckDB twin of ``word_shingles(text, k)`` over an already-split
-    token array (bind ``string_split(text, ' ')`` to a CTE column and
-    pass its name)."""
-    concat = " || ' ' || ".join(
-        f"{ws_expr}[i+{j}]" if j else f"{ws_expr}[i]" for j in range(k)
-    )
-    return (
-        f"list_distinct(list_transform("
-        f"range(1, len({ws_expr}) - {k - 2}), i -> {concat}))"
-    )
-
-
 WEIGHTED_SAMPLE_SALT = "wsample-0"
 _U48 = float(1 << 48)
 

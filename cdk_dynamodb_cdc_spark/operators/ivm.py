@@ -11,15 +11,17 @@ is exact:
                new group — same-group modifies cancel to a pure value
                delta at aggregation time
 
-The minimal change-event format (changed-subtree `before`/`after`
-plus the conditionally inlined images) carries everything needed:
-a field absent from `before` did not change, so its old value IS its
-new value — :func:`aggregate_deltas` reconstructs both sides with
-coalesces and never needs the full old image for MODIFYs. The
+The changed-subtree `before`/`after` plus the new image carry
+everything needed: a field absent from `before` did not change, so
+its old value IS its new value — :func:`aggregate_deltas` reconstructs
+both sides with coalesces and never needs the full old image for
+MODIFYs. A published claim-checked event carries no images (they sit
+in the side store), so the streaming lane computes deltas from the
+tagged frame (``pipeline.tag_records``), whose ``event`` rows hold
+every event's new image and a claim-checked event's old image. The
 operator is lane-agnostic: deltas over typed-lane events
 (operators/typed_diff.py, zero Python) are pytest-pinned identical to
-the dynamic lane's, so the scale deployment runs IVM entirely in
-whole-stage codegen.
+the dynamic lane's for inlined events.
 
 Scale shape: deltas are a per-row projection (scan-speed); the merge
 is one shuffle keyed by group — aggregates per group are tiny, so a
@@ -55,6 +57,11 @@ def aggregate_deltas(
     changed (old value there); otherwise it is unchanged, so the new
     side's value doubles as the old one; REMOVEs carry the inlined
     `old_image`.
+
+    Published claim-checked events carry no images, only a pointer, so
+    a field outside the changed subtree reads null on both sides and
+    the event's rows drop. Feed such traffic as the ``event`` rows of
+    ``pipeline.tag_records``, which keep the images.
     """
     dec = "decimal(18,2)"
     new_g = F.coalesce(_field("new_image", group_field), _field("after", group_field))
@@ -131,13 +138,16 @@ def maintain_aggregate_stream(
     sinks. A pytest replays a full stream against the finished store
     and pins that totals do not move.
     """
-    from cdk_dynamodb_cdc_spark.operators.pipeline import cdc_change_events
+    from cdk_dynamodb_cdc_spark.operators.pipeline import tag_records
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        # the tagged event rows, not the published events: those of a
+        # claim-checked record carry no images
+        events = tag_records(batch_df).filter(F.col("disposition") == "event")
         deltas = (
             aggregate_deltas(
-                cdc_change_events(batch_df),
+                events,
                 group_field=group_field,
                 value_field=value_field,
             )

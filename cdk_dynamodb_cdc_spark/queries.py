@@ -65,29 +65,6 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
-# Retired driver-gate bisect probes (round 9): exact decompositions of
-# the two recursive queries whose oracles hash-failed in r7/r8. The bug
-# is root-caused (HUGEINT result-schema leak) and canary-guarded
-# class-wide in tools/check_correctness.py, so the probes don't earn
-# registry slots — they register HERE, never in QUERIES/ORACLES, and
-# stay exercised every CI run by tests/test_gate_probes.py
-# (stage-parity against the live queries).
-PROBES: dict[str, QueryFn] = {}
-PROBE_ORACLES: dict[str, str] = {}
-
-
-def probe(name: str, oracle: str | None = None):
-    """Like ``query`` but registers into the non-gated PROBES table."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        PROBES[name] = fn
-        if oracle is not None:
-            PROBE_ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
 def _dec(col, prec: int = 12, scale: int = 2):
     return F.col(col).cast(f"decimal({prec},{scale})")
 
@@ -16129,470 +16106,6 @@ def lineitem_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     for o in outs[1:]:
         out = out.unionByName(o)
     return out
-
-
-# ---------------------------------------------------------------------------
-# DRIVER-GATE BISECT PROBES (round 9). The r7/r8 driver gate failed
-# `holt_winters_revenue` and `session_kaplan_meier` on hash while rows
-# and schema matched, and the same code passes bit-exactly against the
-# local DuckDB oracle. Round 9's schema audit found the concrete
-# divergence candidate — both oracles (and only those two of 248)
-# leaked a HUGEINT column into the result schema, now fixed — but per
-# the r8 verdict the fix ships together with decomposition probes so
-# that, whatever the gate says, the divergence point is pinned to one
-# stage: inputs, init state, per-step arithmetic, unrolled recursion
-# steps, or pure WITH-RECURSIVE evaluation. Every probe emits an
-# all-BIGINT (plus DATE/INT) schema and each oracle is either
-# non-recursive or the minimal recursive construct under test.
-# ---------------------------------------------------------------------------
-
-# The Kaplan-Meier non-recursive scaffolding, shared verbatim by the
-# probes so they exercise exactly the pipeline the original uses
-# (sessionize -> spell labels -> risk table -> at-risk window).
-_KM_BASE_SQL = """
-    horizon AS (
-      SELECT MAX(ts) AS hmax FROM events
-    ), gaps AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN epoch_us(ts) - epoch_us(LAG(ts) OVER w)
-                       > 1800000000
-                  OR LAG(ts) OVER w IS NULL THEN 1 ELSE 0 END
-               AS new_session
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), sess AS (
-      SELECT user_id, ts,
-             SUM(new_session) OVER (PARTITION BY user_id
-                 ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS session_id
-      FROM gaps
-    ), lab AS (
-      SELECT user_id, session_id,
-             (epoch_us(MAX(ts)) - epoch_us(MIN(ts)))
-               // 60000000 AS t,
-             CASE WHEN epoch_us(MAX(ts))
-                       >= epoch_us(MAX(hmax)) - 3600000000
-                  THEN 1 ELSE 0 END AS censored
-      FROM sess CROSS JOIN horizon
-      GROUP BY user_id, session_id
-    ), risk AS (
-      SELECT t, CAST(SUM(1 - censored) AS BIGINT) AS d,
-             CAST(SUM(censored) AS BIGINT) AS c
-      FROM lab GROUP BY t
-    ), tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM lab),
-    ordered AS (
-      SELECT t, d, c,
-             CAST(n - COALESCE(SUM(d + c) OVER (ORDER BY t
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                 0) AS BIGINT) AS n_risk,
-             ROW_NUMBER() OVER (ORDER BY t) AS rn
-      FROM risk CROSS JOIN tot
-    )
-"""
-
-
-def _km_ordered_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark twin of ``_KM_BASE_SQL``'s ``ordered`` CTE.
-
-    Mirrors session_kaplan_meier's pre-recursion pipeline exactly
-    (same expressions) and adds the rn index the probes key on.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    horizon = ev.agg(_epoch_us(F.max("ts")).alias("hmax_us"))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_us = _epoch_us(F.col("ts")) - _epoch_us(F.lag("ts").over(w))
-    new_session = F.when(
-        gap_us.isNull() | (gap_us > 30 * 60 * 1_000_000), 1
-    ).otherwise(0)
-    wsum = Window.partitionBy("user_id").orderBy(
-        "ts", "event_id"
-    ).rowsBetween(Window.unboundedPreceding, 0)
-    sess = ev.withColumn("new_session", new_session).withColumn(
-        "session_id", F.sum("new_session").over(wsum)
-    )
-    spells = sess.groupBy("user_id", "session_id").agg(
-        _epoch_us(F.min("ts")).alias("start_us"),
-        _epoch_us(F.max("ts")).alias("end_us"),
-    )
-    lab = spells.crossJoin(F.broadcast(horizon)).select(
-        F.expr("(end_us - start_us) div 60000000").alias("t"),
-        F.when(
-            F.col("end_us") >= F.col("hmax_us") - 3_600_000_000,
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-        .alias("censored"),
-    )
-    risk = lab.groupBy("t").agg(
-        F.sum(1 - F.col("censored")).alias("d"),
-        F.sum("censored").alias("c"),
-    )
-    tot = lab.agg(F.count(F.lit(1)).alias("n"))
-    w_prev = Window.orderBy("t").rowsBetween(
-        Window.unboundedPreceding, -1
-    )  # distinct-durations-sized series: bounded unpartitioned window
-    w_rn = Window.orderBy("t")
-    return risk.crossJoin(F.broadcast(tot)).select(
-        "t",
-        "d",
-        "c",
-        (
-            F.col("n")
-            - F.coalesce(
-                F.sum(F.col("d") + F.col("c")).over(w_prev), F.lit(0)
-            )
-        ).alias("n_risk"),
-        F.row_number().over(w_rn).cast("long").alias("rn"),
-    )
-
-
-@probe(
-    "probe_km_risk_table",
-    oracle="WITH" + _KM_BASE_SQL + """
-    SELECT CAST(rn AS BIGINT) AS rn, CAST(t AS BIGINT) AS duration_min,
-           d AS n_deaths, c AS n_censored, n_risk AS n_at_risk
-    FROM ordered
-    """,
-)
-def probe_km_risk_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bisect stage 1: KM inputs — everything BEFORE the recursion."""
-    return _km_ordered_df(spark, sf_dir).select(
-        "rn",
-        F.col("t").alias("duration_min"),
-        F.col("d").alias("n_deaths"),
-        F.col("c").alias("n_censored"),
-        F.col("n_risk").alias("n_at_risk"),
-    )
-
-
-@probe(
-    "probe_km_step_factors",
-    oracle="WITH" + _KM_BASE_SQL + """
-    SELECT CAST(rn AS BIGINT) AS rn, CAST(t AS BIGINT) AS duration_min,
-           CAST((n0 - ((n0 % n_risk) + n_risk) % n_risk) // n_risk
-                AS BIGINT) AS factor_scaled
-    FROM (SELECT rn, t, n_risk,
-                 1000000000000 * (n_risk - d) AS n0
-          FROM ordered) a
-    """,
-)
-def probe_km_step_factors(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Bisect stage 2: KM per-step arithmetic, NO recursion.
-
-    The exact fixed-point factor floor(1e12 * (n_risk - d) / n_risk)
-    each recursion step multiplies by, computed per-row with the same
-    pmod exactly-divisible identity both engines use.
-    """
-    o = _km_ordered_df(spark, sf_dir)
-    num = (F.lit(10**12).cast("long") * (F.col("n_risk") - F.col("d"))
-           ).cast("decimal(38,0)")
-    den = F.col("n_risk").cast("decimal(19,0)")
-    return o.select(
-        "rn",
-        F.col("t").alias("duration_min"),
-        ((num - F.pmod(num, den)) / den)
-        .cast("long")
-        .alias("factor_scaled"),
-    )
-
-
-def _km_unrolled_oracle(depth: int = 3) -> str:
-    # The first `depth` recursion steps as plain chained CTEs — the
-    # identical BIGINT arithmetic, zero WITH RECURSIVE.
-    blocks = ["WITH" + _KM_BASE_SQL + """,
-    u1 AS (
-      SELECT rn, t,
-             (n0 - ((n0 % n_risk) + n_risk) % n_risk) // n_risk AS s
-      FROM (SELECT rn, t, n_risk,
-                   1000000000000 * (n_risk - d) AS n0
-            FROM ordered WHERE rn = 1) a
-    )"""]
-    for k in range(2, depth + 1):
-        blocks.append(f""",
-    u{k} AS (
-      SELECT rn, t,
-             (n1 - ((n1 % nr) + nr) % nr) // nr AS s
-      FROM (SELECT o.rn, o.t, o.n_risk AS nr,
-                   k.s * (o.n_risk - o.d) AS n1
-            FROM u{k - 1} k JOIN ordered o ON o.rn = {k}) b
-    )""")
-    union = " UNION ALL ".join(
-        f"SELECT * FROM u{k}" for k in range(1, depth + 1)
-    )
-    blocks.append(f"""
-    SELECT CAST(rn AS BIGINT) AS rn, CAST(t AS BIGINT) AS duration_min,
-           CAST(s AS BIGINT) AS surv_scaled
-    FROM ({union}) uu
-    """)
-    return "".join(blocks)
-
-
-@probe("probe_km_unrolled3", oracle=_km_unrolled_oracle(3))
-def probe_km_unrolled3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bisect stage 3: first 3 KM recursion steps, oracle unrolled.
-
-    Spark side runs the SAME fold the original uses and keeps the
-    first three emitted rows, so a red here with stages 1-2 green
-    indicts the chained-step arithmetic; green here with the original
-    red indicts WITH RECURSIVE evaluation itself (see stage 4).
-    """
-    km = session_kaplan_meier(spark, sf_dir)
-    w_rn = Window.orderBy("duration_min")
-    return (
-        km.select(
-            F.col("duration_min").cast("long").alias("duration_min"),
-            "surv_scaled",
-        )
-        .withColumn("rn", F.row_number().over(w_rn).cast("long"))
-        .filter(F.col("rn") <= 3)
-        .select("rn", "duration_min", "surv_scaled")
-    )
-
-
-@probe(
-    "probe_km_recursion_cumsum",
-    oracle="WITH RECURSIVE" + _KM_BASE_SQL + """,
-    rc AS (
-      SELECT rn, d AS cum_d FROM ordered WHERE rn = 1
-      UNION ALL
-      SELECT o.rn, r.cum_d + o.d
-      FROM rc r JOIN ordered o ON o.rn = r.rn + 1
-    )
-    SELECT CAST(rn AS BIGINT) AS rn,
-           CAST(cum_d AS BIGINT) AS cum_deaths
-    FROM rc
-    """,
-)
-def probe_km_recursion_cumsum(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Bisect stage 4: pure WITH-RECURSIVE evaluation over `ordered`.
-
-    The recursion carries only a BIGINT running sum — no division, no
-    rotation — so the Spark window cumsum is trivially the same
-    number. Red here means the driver's recursive-CTE evaluation (or
-    its join to the windowed CTE) diverges, independent of arithmetic.
-    """
-    o = _km_ordered_df(spark, sf_dir)
-    w_cum = Window.orderBy("rn").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    return o.select(
-        "rn", F.sum("d").over(w_cum).cast("long").alias("cum_deaths")
-    )
-
-
-# Holt-Winters shared scaffolding: the daily revenue series with its
-# day index, plus the BIGINT-cast first-week level init.
-_HW_BASE_SQL = """
-    daily AS (
-      SELECT CAST(ts AS DATE) AS day,
-             CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT)
-               AS y
-      FROM events GROUP BY day
-    ), idx AS (
-      SELECT day, y, ROW_NUMBER() OVER (ORDER BY day) AS rn FROM daily
-    ), base AS (
-      SELECT CAST((SUM(y) - ((SUM(y) % 7) + 7) % 7) // 7 AS BIGINT)
-               AS lv0
-      FROM idx WHERE rn <= 7
-    )
-"""
-
-
-def _hw_idx_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        (F.sum(F.col("value").cast("decimal(18,2)")) * 100)
-        .cast("long")
-        .alias("y")
-    )
-    w_rn = Window.orderBy("day")  # calendar-bounded series
-    return daily.withColumn(
-        "rn", F.row_number().over(w_rn).cast("long")
-    )
-
-
-@probe(
-    "probe_hw_daily_inputs",
-    oracle="WITH" + _HW_BASE_SQL + """
-    SELECT CAST(rn AS BIGINT) AS rn, day, y AS rev_cents,
-           lv0 AS level0_cents
-    FROM idx CROSS JOIN base
-    """,
-)
-def probe_hw_daily_inputs(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Bisect stage 1: Holt-Winters inputs — series + level init."""
-    idx = _hw_idx_df(spark, sf_dir)
-    first7 = idx.filter(F.col("rn") <= 7).agg(
-        F.sum("y").alias("sum7")
-    )
-    lv0 = (
-        (F.col("sum7") - F.pmod(F.col("sum7"), F.lit(7))) / 7
-    ).cast("long")
-    base = first7.select(lv0.alias("level0_cents"))
-    return idx.crossJoin(F.broadcast(base)).select(
-        "rn", "day", F.col("y").alias("rev_cents"), "level0_cents"
-    )
-
-
-@probe(
-    "probe_hw_init_state",
-    oracle="WITH" + _HW_BASE_SQL + """
-    SELECT lv0 AS level0_cents,
-           (SELECT y FROM idx WHERE rn = 1) - lv0 AS seas1_cents,
-           (SELECT y FROM idx WHERE rn = 2) - lv0 AS seas2_cents,
-           (SELECT y FROM idx WHERE rn = 3) - lv0 AS seas3_cents,
-           (SELECT y FROM idx WHERE rn = 4) - lv0 AS seas4_cents,
-           (SELECT y FROM idx WHERE rn = 5) - lv0 AS seas5_cents,
-           (SELECT y FROM idx WHERE rn = 6) - lv0 AS seas6_cents,
-           (SELECT y FROM idx WHERE rn = 7) - lv0 AS seas7_cents
-    FROM base
-    """,
-)
-def probe_hw_init_state(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Bisect stage 2: the HW init row (level + 7 seasonal slots).
-
-    The oracle keeps the original's scalar-subquery construct — a red
-    here with stage 1 green indicts scalar-subquery evaluation in the
-    driver's engine.
-    """
-    idx = _hw_idx_df(spark, sf_dir)
-    first7 = idx.filter(F.col("rn") <= 7)
-    piv = first7.groupBy().pivot("rn", list(range(1, 8))).sum("y")
-    sum7 = sum(F.col(f"{k}") for k in range(1, 8))
-    lv0 = ((sum7 - F.pmod(sum7, F.lit(7))) / 7).cast("long")
-    return piv.select(
-        lv0.alias("level0_cents"),
-        *[
-            (F.col(f"{k}") - lv0).alias(f"seas{k}_cents")
-            for k in range(1, 8)
-        ],
-    )
-
-
-def _hw_unrolled_oracle(depth: int = 3) -> str:
-    # Steps rn=8..7+depth unrolled as chained CTEs: per-step, the same
-    # fd(n, d) = (n - posmod(n, d)) // d floor divisions the recursion
-    # uses, with the 7-slot rotation spelled positionally.
-    def fd(n: str, d: int) -> str:
-        return f"({n} - ((({n}) % {d}) + {d}) % {d}) // {d}"
-
-    blocks = ["WITH" + _HW_BASE_SQL + """,
-    st7 AS (
-      SELECT 7 AS rn, lv0 AS lv, CAST(0 AS BIGINT) AS tr,
-             (SELECT y FROM idx WHERE rn = 1) - lv0 AS s1,
-             (SELECT y FROM idx WHERE rn = 2) - lv0 AS s2,
-             (SELECT y FROM idx WHERE rn = 3) - lv0 AS s3,
-             (SELECT y FROM idx WHERE rn = 4) - lv0 AS s4,
-             (SELECT y FROM idx WHERE rn = 5) - lv0 AS s5,
-             (SELECT y FROM idx WHERE rn = 6) - lv0 AS s6,
-             (SELECT y FROM idx WHERE rn = 7) - lv0 AS s7
-      FROM base
-    )"""]
-    for k in range(8, 8 + depth):
-        prev = f"st{k - 1}"
-        blocks.append(f""",
-    raw{k} AS (
-      SELECT i.rn, i.day, i.y, h.lv + h.tr + h.s1 AS fit,
-             h.lv AS lv_p, h.tr AS tr_p, h.s1 AS sh,
-             h.s2, h.s3, h.s4, h.s5, h.s6, h.s7,
-             {fd('(i.y - h.s1) + 4 * (h.lv + h.tr)', 5)} AS lv
-      FROM {prev} h JOIN idx i ON i.rn = {k}
-    ),
-    st{k} AS (
-      SELECT rn, day, y, fit, lv,
-             {fd('(lv - lv_p) + 9 * tr_p', 10)} AS tr,
-             {fd('(y - lv) + 4 * sh', 5)} AS s_new,
-             s2 AS s1, s3 AS s2, s4 AS s3, s5 AS s4, s6 AS s5,
-             s7 AS s6,
-             {fd('(y - lv) + 4 * sh', 5)} AS s7
-      FROM raw{k}
-    )""")
-    union = " UNION ALL ".join(
-        f"SELECT rn, day, y, fit, lv, tr, s_new FROM st{k}"
-        for k in range(8, 8 + depth)
-    )
-    blocks.append(f"""
-    SELECT CAST(rn AS BIGINT) AS rn, day, y AS rev_cents,
-           fit AS fit_cents, lv AS level_cents, tr AS trend_cents,
-           s_new AS seasonal_cents
-    FROM ({union}) uu
-    """)
-    return "".join(blocks)
-
-
-@probe("probe_hw_unrolled3", oracle=_hw_unrolled_oracle(3))
-def probe_hw_unrolled3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bisect stage 3: first 3 HW smoothing steps, oracle unrolled.
-
-    Spark side = the original fold's first three emitted rows; the
-    oracle repeats the identical arithmetic as plain chained CTEs
-    with zero recursion and zero LATERAL.
-    """
-    hw = holt_winters_revenue(spark, sf_dir)
-    w_rn = Window.orderBy("day")
-    return (
-        hw.withColumn(
-            "rn", (F.row_number().over(w_rn) + 7).cast("long")
-        )
-        .filter(F.col("rn") <= 10)
-        .select(
-            "rn",
-            "day",
-            "rev_cents",
-            "fit_cents",
-            "level_cents",
-            "trend_cents",
-            "seasonal_cents",
-        )
-    )
-
-
-@probe(
-    "probe_hw_recursion_cumsum",
-    oracle="WITH RECURSIVE" + _HW_BASE_SQL + """,
-    rc AS (
-      SELECT rn, day, y AS cum_y FROM idx WHERE rn = 1
-      UNION ALL
-      SELECT i.rn, i.day, r.cum_y + i.y
-      FROM rc r JOIN idx i ON i.rn = r.rn + 1
-    )
-    SELECT CAST(rn AS BIGINT) AS rn, day,
-           CAST(cum_y AS BIGINT) AS cum_rev_cents
-    FROM rc
-    """,
-)
-def probe_hw_recursion_cumsum(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Bisect stage 4: pure WITH-RECURSIVE over the day index.
-
-    BIGINT addition only — red here means recursive-CTE evaluation
-    in the driver's oracle engine diverges regardless of arithmetic.
-    """
-    idx = _hw_idx_df(spark, sf_dir)
-    w_cum = Window.orderBy("rn").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    return idx.select(
-        "rn",
-        "day",
-        F.sum("y").over(w_cum).cast("long").alias("cum_rev_cents"),
-    )
-
-
-# The eight bisect probes above register via @probe (see top of file):
-# they are exact decompositions of the two recursive queries, kept out
-# of the gated registry by construction so decorator count == registry
-# count for any reader auditing coverage.
 
 
 # ---------------------------------------------------------------------------

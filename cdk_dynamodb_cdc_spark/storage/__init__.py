@@ -8,7 +8,6 @@ from cdk_dynamodb_cdc_spark.storage.txlog import (  # noqa: F401
     optimize,
     read_txlog_feed,
     restore,
-    read_txlog_feed_bulk,
     scan,
     txlog_sink_writer,
 )

@@ -24,9 +24,11 @@ replaying at most ``checkpoint_interval`` action files — never the
 whole log. This is Delta's _delta_log design (JSON actions + periodic
 checkpoints); :meth:`TxTable.manifest` still RETURNS the full
 reconstructed state dict, so every consumer of the old full-list
-layout (snapshot, vacuum, scan, feeds, restore) is unchanged, and
-legacy full-list manifests (a ``live`` key in the version file) are
-still read as full-state resets for tables written by older code.
+layout (snapshot, vacuum, scan, feeds, restore) is unchanged. A
+version file may also hold the FULL-LIST form (a ``live`` key), read
+as a full-state reset: :func:`clone` writes every clone's version 0
+that way, so the clone's log never depends on the source's, and
+tables written by older code hold it too.
 
 ACID comes from two properties:
 
@@ -37,7 +39,10 @@ ACID comes from two properties:
   create; object stores use a conditional put) — two writers racing
   version N: one wins, the loser re-reads the new state and retries
   against version N+1. That is optimistic concurrency control, the
-  same protocol Delta runs.
+  same protocol Delta runs. Every version goes through one method,
+  :meth:`TxTable._publish`; appends and restores retry on a lost race,
+  rewrites whose read set changed (OPTIMIZE, DML, metadata upgrades)
+  raise instead.
 
 Exactly-once streaming: every manifest carries the per-app BATCH
 HIGH-WATER MARK (``txn: {app_id: max_batch_id}``, folded forward
@@ -56,7 +61,12 @@ import json
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F  # noqa: F401  (API symmetry)
+from pyspark.sql import functions as F
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceStreamReader,
+    InputPartition,
+)
 from pyspark.sql.types import StructType
 
 _LOG_DIR = "_txlog"
@@ -93,7 +103,8 @@ def _apply_action(state: dict, action: dict) -> None:
     """Fold one version's action file into the running state (mutates
     ``state`` = {"live": [...], "stats": {...}, "dv": {...}}).
 
-    * legacy full-list manifest (``live`` key): full-state reset;
+    * full-list form (``live`` key; a clone's version 0): full-state
+      reset;
     * ``mode == "stats"``: stats attached, live set untouched;
     * ``mode == "delete_dv"``: deletion-vector pointers merged, live
       set and stats untouched (a merge-on-read delete moves no data);
@@ -162,6 +173,25 @@ class TxTable:
             for st in self._fs.listStatus(p)
         ]
 
+    def _part_files(self, dir_path: str) -> list[str]:
+        """The ``part-`` files a Spark write left in ``dir_path``,
+        sorted (its ``_SUCCESS`` marker and CRCs are not data)."""
+        return sorted(
+            f
+            for f in self._ls(dir_path)
+            if f.rsplit("/", 1)[-1].startswith("part-")
+        )
+
+    def _stage(self, write, parent: str = _DATA_DIR) -> list[str]:
+        """Run ``write(dir)`` into a fresh directory under ``parent``
+        (``data/c-<uuid>`` or ``_dv/d-<uuid>``) and return its part
+        files — staged, invisible until a published version names
+        them."""
+        prefix = "d" if parent == _DV_DIR else "c"
+        stage_dir = f"{self.path}/{parent}/{prefix}-{uuid.uuid4().hex[:12]}"
+        write(stage_dir)
+        return self._part_files(stage_dir)
+
     def _read_text(self, file_path: str) -> str:
         stream = self._fs.open(self._jPath(file_path))
         try:
@@ -212,9 +242,9 @@ class TxTable:
         return vs[-1] if vs else None
 
     def _action(self, version: int) -> dict:
-        """The raw version file — an incremental action (or a legacy
-        full-list manifest). Schema and txn marks are carried in full
-        on every action, so the commit path never reconstructs."""
+        """The raw version file — an incremental action (or the
+        full-list form). Schema and txn marks are carried in full on
+        every action, so the commit path never reconstructs."""
         return json.loads(self._read_text(self._manifest_path(version)))
 
     def manifest(self, version: int) -> dict:
@@ -224,7 +254,7 @@ class TxTable:
         full-list manifest dict (live/schema/txn/mode/...), so every
         downstream consumer is layout-agnostic."""
         action = self._action(version)
-        if "live" in action:  # legacy full-list manifest: complete as-is
+        if "live" in action:  # full-list form (a clone's v0): complete as-is
             return action
         state = {"live": [], "stats": {}, "dv": {}}
         start = 0
@@ -278,6 +308,56 @@ class TxTable:
 
     # -- commits -------------------------------------------------------
 
+    def _base(self) -> tuple[int, dict]:
+        """The latest version and its manifest: the base a rewrite of
+        the current table reads and publishes on top of."""
+        latest = self.latest_version()
+        if latest is None:
+            raise ValueError(f"{self.path} has no commits")
+        return latest, self.manifest(latest)
+
+    def _publish(
+        self,
+        base: int | None,
+        fields: dict,
+        *,
+        prev: dict | None = None,
+        schema: str | None = None,
+        app_id: str | None = None,
+        batch_id: int | None = None,
+    ) -> int | None:
+        """Publish ``fields`` (the mode-specific keys) as the version
+        after ``base`` — version 0 when ``base`` is None — and
+        checkpoint on cadence. Returns that version, or None when a
+        concurrent writer took it first; each caller keeps its own race
+        policy (retry on the new state, or raise).
+
+        Every version carries ``schema`` (default: the base's), the
+        committing ``app_id``/``batch_id``, and ``txn``: the base's
+        per-app batch marks, folded forward with this commit's.
+        ``prev`` is the base's action or manifest when the caller has
+        it already (read otherwise)."""
+        if prev is None:
+            prev = self._action(base) if base is not None else {}
+        txn = dict(prev.get("txn", {}))
+        if app_id is not None and batch_id is not None:
+            txn[app_id] = batch_id
+        version = 0 if base is None else base + 1
+        action = {
+            "version": version,
+            **fields,
+            "schema": prev["schema"] if schema is None else schema,
+            "app_id": app_id,
+            "batch_id": batch_id,
+            "txn": txn,
+        }
+        if not self._create_exclusive(
+            self._manifest_path(version), json.dumps(action)
+        ):
+            return None
+        self._maybe_checkpoint(version)
+        return version
+
     def commit(
         self,
         df: DataFrame,
@@ -306,21 +386,23 @@ class TxTable:
         """
         if mode not in ("append", "overwrite"):
             raise ValueError(f"mode must be append|overwrite: {mode!r}")
-        if app_id is not None and batch_id is not None:
+
+        def replayed(prev: dict) -> bool:
             # O(1) replay detection: every manifest carries the per-app
             # high-water mark (batch ids are per-app monotone —
             # foreachBatch's contract), so one read of the LATEST
             # manifest decides. This is Delta's txnAppId/txnVersion
             # model; the old full-history scan was O(versions) per
             # commit.
+            mark = prev.get("txn", {}).get(app_id)
+            return None not in (batch_id, mark) and batch_id <= mark
+
+        def latest_action() -> tuple[int | None, dict]:
             latest = self.latest_version()
-            if latest is not None:
-                txn = self._action(latest).get("txn", {})
-                if (
-                    app_id in txn
-                    and batch_id <= txn[app_id]
-                ):
-                    return None
+            return latest, self._action(latest) if latest is not None else {}
+
+        if batch_id is not None and replayed(latest_action()[1]):
+            return None
         if expectations:
             from cdk_dynamodb_cdc_spark.operators.expect import check
 
@@ -334,21 +416,17 @@ class TxTable:
                     f"commit rejected by CHECK constraints: {violated}"
                 )
 
-        commit_dir = f"{self.path}/{_DATA_DIR}/c-{uuid.uuid4().hex[:12]}"
-        df.write.parquet(commit_dir)
-        new_files = sorted(
-            f
-            for f in self._ls(commit_dir)
-            if f.rsplit("/", 1)[-1].startswith("part-")
-        )
+        new_files = self._stage(df.write.parquet)
 
         for _ in range(max_retries):
-            latest = self.latest_version()
-            prev = self._action(latest) if latest is not None else {}
+            latest, prev = latest_action()
+            # a concurrent committer may have advanced the mark
+            if replayed(prev):
+                return None
             if mode == "append" and latest is not None:
                 # incremental append: O(files written), never O(files
                 # live) — the action names only this commit's files
-                add, remove = new_files, []
+                remove = []
                 schema_json = _evolve_schema(
                     prev["schema"], df.schema.json()
                 )
@@ -356,34 +434,21 @@ class TxTable:
                 # overwrite retires the current live set; that set is
                 # reconstructed (checkpoint + <=K actions), the action
                 # itself still only names touched files
-                add = list(new_files)
                 remove = (
                     self.manifest(latest)["live"]
                     if latest is not None and mode == "overwrite"
                     else []
                 )
                 schema_json = df.schema.json()
-            txn = dict(prev.get("txn", {}))
-            if app_id is not None and batch_id is not None:
-                # a concurrent committer may have advanced the mark
-                if app_id in txn and batch_id <= txn[app_id]:
-                    return None
-                txn[app_id] = batch_id
-            version = 0 if latest is None else latest + 1
-            action = {
-                "version": version,
-                "mode": mode,
-                "add": add,
-                "remove": remove,
-                "schema": schema_json,
-                "app_id": app_id,
-                "batch_id": batch_id,
-                "txn": txn,
-            }
-            if self._create_exclusive(
-                self._manifest_path(version), json.dumps(action)
-            ):
-                self._maybe_checkpoint(version)
+            version = self._publish(
+                latest,
+                {"mode": mode, "add": new_files, "remove": remove},
+                prev=prev,
+                schema=schema_json,
+                app_id=app_id,
+                batch_id=batch_id,
+            )
+            if version is not None:
                 return version
             # lost the race: a concurrent writer took this version —
             # fold in ITS result and retry on the next one.
@@ -437,12 +502,12 @@ class TxTable:
         """
         import time
 
-        candidates = []
-        for parent in (_DATA_DIR, _DV_DIR):
-            for commit_dir in self._ls(f"{self.path}/{parent}"):
-                for f in self._ls(commit_dir):
-                    if f.rsplit("/", 1)[-1].startswith("part-"):
-                        candidates.append(f)
+        candidates = [
+            f
+            for parent in (_DATA_DIR, _DV_DIR)
+            for commit_dir in self._ls(f"{self.path}/{parent}")
+            for f in self._part_files(commit_dir)
+        ]
         # manifests are read AFTER the listing (see docstring)
         vs = self.versions()
         keep = set()
@@ -498,7 +563,7 @@ def version_diff(
 ) -> tuple["DataFrame", "DataFrame"]:
     """Batch time-travel diff: the row-level changes between two
     committed versions, computed from CHANGED FILES ONLY — the batch
-    twin of the streaming change feed (TxLogFeedReader).
+    twin of the streaming change feed (:func:`read_txlog_feed`).
 
     Returns ``(inserted, deleted)`` DataFrames. Files live in both
     manifests contribute nothing and are never opened; rows carried
@@ -684,56 +749,36 @@ def optimize(
     """
     from cdk_dynamodb_cdc_spark.operators.layout import write_zordered
 
-    base_version = table.latest_version()
-    snap = table.snapshot(version=base_version)
+    base, m = table._base()
+    snap = table.snapshot(version=base)
     total = 0
-    for f in table.manifest(base_version)["live"]:
+    for f in m["live"]:
         total += table._fs.getFileStatus(table._jPath(f)).getLen()
     if total == 0:
         return None
     num_files = max(1, -(-total // target_file_bytes))
 
-    commit_dir = (
-        f"{table.path}/{_DATA_DIR}/c-{uuid.uuid4().hex[:12]}"
-    )
-    if zorder_cols:
-        write_zordered(
-            snap, commit_dir, zorder_cols, num_files=num_files
-        )
-    else:
-        snap.repartition(num_files).write.parquet(commit_dir)
+    def write(stage_dir: str) -> None:
+        if zorder_cols:
+            write_zordered(
+                snap, stage_dir, zorder_cols, num_files=num_files
+            )
+        else:
+            snap.repartition(num_files).write.parquet(stage_dir)
 
-    new_files = sorted(
-        f
-        for f in table._ls(commit_dir)
-        if f.rsplit("/", 1)[-1].startswith("part-")
+    new_files = table._stage(write)
+    version = table._publish(
+        base,
+        {"mode": "optimize", "add": new_files, "remove": m["live"]},
+        prev=m,
+        schema=snap.schema.json(),
     )
-    latest = table.latest_version()
-    if latest != base_version:
+    if version is None:
         raise RuntimeError(
-            f"optimize based on v{base_version} conflicts with "
-            f"concurrent commit v{latest}; re-run against the new state"
+            f"optimize based on v{base} lost the race for "
+            f"v{base + 1}; re-run against the new state"
         )
-    action = {
-        "version": base_version + 1,
-        "mode": "optimize",
-        "add": new_files,
-        "remove": table.manifest(base_version)["live"],
-        "schema": snap.schema.json(),
-        "app_id": None,
-        "batch_id": None,
-        # carry per-app replay marks across the rewrite
-        "txn": table._action(base_version).get("txn", {}),
-    }
-    if not table._create_exclusive(
-        table._manifest_path(base_version + 1), json.dumps(action)
-    ):
-        raise RuntimeError(
-            f"optimize based on v{base_version} lost the race for "
-            f"v{base_version + 1}; re-run against the new state"
-        )
-    table._maybe_checkpoint(base_version + 1)
-    return base_version + 1
+    return version
 
 
 # ---------------------------------------------------------------------------
@@ -742,13 +787,11 @@ def optimize(
 # emits the rows of files ADDED by versions in (start, end]: the
 # append-only change feed a downstream consumer tails, Delta-CDF
 # style (append rows only; overwrite/optimize versions rewrite
-# existing rows and are skipped by the feed).
+# existing rows and are skipped by the feed). Each poll plans ONE
+# INPUT PARTITION PER ADDED FILE and executors read their file
+# directly, so replaying a large backlog parallelizes across the
+# cluster instead of marshalling rows through the driver.
 # ---------------------------------------------------------------------------
-from pyspark.sql.datasource import (  # noqa: E402
-    DataSource as _DataSource,
-    SimpleDataSourceStreamReader as _SimpleReader,
-)
-
 FEED_SOURCE_NAME = "txlog_feed"
 
 
@@ -860,8 +903,10 @@ def _log_added_files(path: str, lo: int, hi: int) -> list[str]:
 
     Incremental logs answer this from the in-range action files alone
     (each append action names exactly its new files) — O(hi - lo)
-    opens, never O(versions). Logs containing legacy full-list append
-    manifests fall back to a full live-set replay."""
+    opens, never O(versions). An append version in the full-list form
+    (older code wrote appends that way; a clone's version 0 uses the
+    form too, but is no append) makes the range fall back to a full
+    live-set replay."""
     vs = _log_versions(path)
     in_range = [v for v in vs if lo < v <= hi]
     actions = {v: _log_action(path, v) for v in in_range}
@@ -889,12 +934,20 @@ def _log_added_files(path: str, lo: int, hi: int) -> list[str]:
     return added
 
 
-class TxLogFeedReader(_SimpleReader):
-    """Version-offset reader over a TxTable's manifest log. Pure
-    manifest arithmetic — no Spark session needed in the worker; rows
-    are read driver-side via pyarrow (the simple-reader contract), so
-    the feed suits control-plane-sized batches; a partition-planning
-    DataSourceStreamReader is the evolution for bulk replay.
+class _FeedFilePartition(InputPartition):
+    def __init__(
+        self,
+        path: str,
+        field_names: list[str],
+        tz_fields: dict | None = None,
+    ):
+        self.path = path
+        self.field_names = field_names
+        self.tz_fields = tz_fields or {}
+
+
+class TxLogBulkFeedReader(DataSourceStreamReader):
+    """Version offsets, file-grained partitions, executor-side reads.
 
     Rows are decoded BY NAME against the stream's declared schema
     (``field_names``), never positionally: files written before an
@@ -919,77 +972,60 @@ class TxLogFeedReader(_SimpleReader):
     def initialOffset(self) -> dict:
         return {"version": -1}
 
-    def _added_files(self, lo: int, hi: int) -> list[str]:
-        return _log_added_files(self.path, lo, hi)
+    def latestOffset(self) -> dict:
+        vs = self._versions()
+        return {"version": vs[-1] if vs else -1}
 
-    def _rows(self, files: list[str]) -> list[tuple]:
-        # Materialized (not a generator): the simple-reader contract
-        # pickles prefetched rows into the batch cache for replay.
+    def partitions(self, start: dict, end: dict):
+        added = _log_added_files(
+            self.path,
+            int(start.get("version", -1)),
+            int(end.get("version", -1)),
+        )
+        # one partition per file: executors read in parallel
+        names = self.field_names
+        tz = self.tz_fields
+        return [
+            _FeedFilePartition(_local(f), names, tz) for f in added
+        ] or [
+            # Spark requires >= 1 partition
+            _FeedFilePartition("", names, tz)
+        ]
+
+    def read(self, partition: _FeedFilePartition):
+        if not partition.path:
+            return iter([])
         import pyarrow.parquet as pq
 
-        rows: list[tuple] = []
-        names = self.field_names
-        for f in files:
-            # Hadoop reports local paths as file:/... or file:///...;
-            # strip the scheme, keep the absolute path.
-            local = "/" + f.split(":", 1)[1].lstrip("/") if ":" in f else f
-            for rec in pq.read_table(local).to_pylist():
-                # by-name decode: pre-evolution files lack the newer
-                # columns (pad with None); column order in the file is
-                # irrelevant. LTZ timestamps are localized to UTC
-                # (see _localize_feed_cell).
-                rows.append(
-                    tuple(
-                        _localize_feed_cell(
-                            rec.get(n), self.tz_fields.get(n)
-                        )
-                        for n in names
-                    )
-                )
-        return rows
-
-    def read(self, start: dict):
-        vs = self._versions()
-        hi = vs[-1] if vs else -1
-        lo = int(start.get("version", -1))
-        if hi <= lo:
-            return iter([]), {"version": lo}
-        return (
-            iter(self._rows(self._added_files(lo, hi))),
-            {"version": hi},
-        )
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        return iter(
-            self._rows(
-                self._added_files(
-                    int(start.get("version", -1)),
-                    int(end.get("version", -1)),
-                )
+        names = partition.field_names
+        tz = partition.tz_fields
+        rows = [
+            tuple(
+                _localize_feed_cell(rec.get(n), tz.get(n)) for n in names
             )
-        )
+            for rec in pq.read_table(partition.path).to_pylist()
+        ]
+        return iter(rows)
 
     def commit(self, end: dict) -> None:
         pass
 
 
-class TxLogFeedDataSource(_DataSource):
+class TxLogBulkFeedDataSource(DataSource):
     @classmethod
     def name(cls) -> str:
         return FEED_SOURCE_NAME
 
-    def schema(self) -> str:
+    def schema(self):
         path = self.options["path"].rstrip("/")
         vs = _log_versions(path)
         if not vs:
             raise ValueError(f"{path} has no commits to infer a schema")
         schema_json = _log_action(path, vs[-1])["schema"]
-        from pyspark.sql.types import StructType as _St
+        return StructType.fromJson(json.loads(schema_json))
 
-        return _St.fromJson(json.loads(schema_json))
-
-    def simpleStreamReader(self, schema) -> TxLogFeedReader:
-        return TxLogFeedReader(
+    def streamReader(self, schema) -> TxLogBulkFeedReader:
+        return TxLogBulkFeedReader(
             self.options,
             [f.name for f in schema.fields],
             _ltz_field_names(schema),
@@ -998,8 +1034,9 @@ class TxLogFeedDataSource(_DataSource):
 
 def read_txlog_feed(spark: SparkSession, path: str):
     """Open the table's change feed as a streaming DataFrame (rows of
-    files added by append commits, version offsets in the checkpoint)."""
-    spark.dataSource.register(TxLogFeedDataSource)
+    files added by append commits, version offsets in the checkpoint,
+    one executor-read partition per added file)."""
+    spark.dataSource.register(TxLogBulkFeedDataSource)
     return (
         spark.readStream.format(FEED_SOURCE_NAME)
         .option("path", path)
@@ -1082,27 +1119,22 @@ def attach_stats(table: TxTable, cols: list[str]) -> int:
     """Republish the CURRENT version's manifest content as a new
     version carrying per-file stats for ``cols`` (an in-place metadata
     upgrade — same live set, same schema). Returns the new version."""
-    base = table.latest_version()
-    m = table.manifest(base)
-    action = {
-        "version": base + 1,
-        "mode": "stats",
-        "add": [],
-        "remove": [],
-        "schema": m["schema"],
-        "app_id": None,
-        "batch_id": None,
-        "txn": table._action(base).get("txn", {}),
-        "stats": collect_stats(m["live"], cols),
-    }
-    if not table._create_exclusive(
-        table._manifest_path(base + 1), json.dumps(action)
-    ):
+    base, m = table._base()
+    version = table._publish(
+        base,
+        {
+            "mode": "stats",
+            "add": [],
+            "remove": [],
+            "stats": collect_stats(m["live"], cols),
+        },
+        prev=m,
+    )
+    if version is None:
         raise RuntimeError(
             f"attach_stats based on v{base} lost the race; re-run"
         )
-    table._maybe_checkpoint(base + 1)
-    return base + 1
+    return version
 
 
 def scan(
@@ -1186,84 +1218,89 @@ def _dv_frame(table: TxTable, m: dict):
     )
 
 
-def _subtract_dv(table: TxTable, m: dict, df: DataFrame) -> DataFrame:
-    """Apply ``m``'s deletion vectors to a frame freshly scanned from
-    (a subset of) its live files. No vectors -> the frame passes
-    through untouched with no metadata columns added."""
-    dv = _dv_frame(table, m)
-    if dv is None:
-        return df
+def _visible_tagged(table: TxTable, m: dict, df: DataFrame) -> DataFrame:
+    """``df`` (freshly scanned from ``m``'s live files) tagged with each
+    row's position, ``__fp`` = ``_metadata.file_path`` and ``__ri`` =
+    ``_metadata.row_index``, minus the rows ``m``'s deletion vectors
+    already delete."""
     tagged = df.select(
-        "*",
-        F.col("_metadata.file_path").alias("__dv_fp"),
-        F.col("_metadata.row_index").alias("__dv_ri"),
-    )
-    return (
-        tagged.join(
-            dv,
-            (tagged["__dv_fp"] == dv["file"])
-            & (tagged["__dv_ri"] == dv["pos"]),
-            "left_anti",
-        )
-        .drop("__dv_fp", "__dv_ri")
-    )
-
-
-def delete_where(table: TxTable, condition) -> tuple[int, int] | None:
-    """DELETE WHERE as a merge-on-read operation: record matched row
-    positions in a deletion vector and publish a metadata-only
-    version — no data file is read back, rewritten, or moved.
-    ``condition`` is a Column or SQL string over the table's columns.
-    Returns ``(version, n_deleted)``, or None when nothing matched
-    (no version is published for an empty delete).
-
-    The driver holds only the affected FILE LIST (bounded by live-set
-    size, same as the manifest itself); matched positions stream
-    executor-side into the dv parquet."""
-    latest = table.latest_version()
-    if latest is None:
-        raise ValueError(f"{table.path} has no commits")
-    m = table.manifest(latest)
-    if not m["live"]:
-        return None
-    schema = StructType.fromJson(json.loads(m["schema"]))
-    cond = F.expr(condition) if isinstance(condition, str) else condition
-    base = table.spark.read.schema(schema).parquet(*m["live"])
-    tagged = base.select(
         "*",
         F.col("_metadata.file_path").alias("__fp"),
         F.col("_metadata.row_index").alias("__ri"),
     )
-    old = _dv_frame(table, m)
-    if old is not None:
-        # rows a previous vector already deleted are not visible and
-        # must not count as deleted again
-        tagged = tagged.join(
-            old,
-            (tagged["__fp"] == old["file"])
-            & (tagged["__ri"] == old["pos"]),
-            "left_anti",
-        )
-    hits = (
-        tagged.filter(cond)
-        .select(
-            F.col("__fp").alias("file"), F.col("__ri").alias("pos")
-        )
-        # one corpus scan: materialized, then reused by the count,
-        # the consolidation write, and nothing else
-        .localCheckpoint(eager=True)
+    dv = _dv_frame(table, m)
+    if dv is None:
+        return tagged
+    return tagged.join(
+        dv,
+        (tagged["__fp"] == dv["file"]) & (tagged["__ri"] == dv["pos"]),
+        "left_anti",
     )
-    n_deleted = hits.count()
-    if n_deleted == 0:
+
+
+def _subtract_dv(table: TxTable, m: dict, df: DataFrame) -> DataFrame:
+    """Apply ``m``'s deletion vectors to a frame freshly scanned from
+    (a subset of) its live files. No vectors -> the frame passes
+    through untouched with no metadata columns added."""
+    if not m.get("dv"):
+        return df
+    return _visible_tagged(table, m, df).drop("__fp", "__ri")
+
+
+def _dv_rewrite(
+    table: TxTable,
+    op: str,
+    condition,
+    set_exprs: dict[str, str] | None = None,
+) -> tuple[int, int] | None:
+    """The deletion-vector step of :func:`delete_where` and
+    :func:`update_where`: shadow the visible rows matching
+    ``condition`` with one consolidated vector (old positions ∪ new
+    matches) and publish it as one version. With ``set_exprs`` the
+    matched rows' updated copies are appended in the same version
+    (``mode: "append"``); without, the version is metadata-only
+    (``mode: "delete_dv"``). Returns ``(version, n_matched)``, or None
+    when nothing matched (no version is published).
+
+    The driver holds only the affected FILE LIST (bounded by live-set
+    size, same as the manifest itself); matched positions stream
+    executor-side into the dv parquet."""
+    base, m = table._base()
+    if not m["live"]:
         return None
-    new_dv = hits if old is None else hits.unionByName(old).distinct()
-    dv_dir = f"{table.path}/{_DV_DIR}/d-{uuid.uuid4().hex[:12]}"
-    new_dv.write.parquet(dv_dir)
-    dv_files = sorted(
-        f
-        for f in table._ls(dv_dir)
-        if f.rsplit("/", 1)[-1].startswith("part-")
+    schema = StructType.fromJson(json.loads(m["schema"]))
+    cond = F.expr(condition) if isinstance(condition, str) else condition
+    # rows an earlier vector deleted are not visible and must not
+    # match (or count) again
+    matched = _visible_tagged(
+        table, m, table.spark.read.schema(schema).parquet(*m["live"])
+    ).filter(cond)
+    if set_exprs is None:
+        matched = matched.select("__fp", "__ri")
+    # one corpus scan: materialized, then reused by the count, the
+    # rewrite, and the consolidation write
+    matched = matched.localCheckpoint(eager=True)
+    n_matched = matched.count()
+    if n_matched == 0:
+        return None
+    add = []
+    if set_exprs is not None:
+        # the updated copies, in manifest-schema column order
+        updated = matched.select(
+            *[
+                F.expr(set_exprs[c]).cast(f.dataType).alias(c)
+                if c in set_exprs
+                else F.col(c)
+                for c, f in zip(schema.fieldNames(), schema.fields)
+            ]
+        )
+        add = table._stage(updated.write.parquet)
+    hits = matched.select(
+        F.col("__fp").alias("file"), F.col("__ri").alias("pos")
     )
+    old = _dv_frame(table, m)
+    new_dv = hits if old is None else hits.unionByName(old).distinct()
+    dv_files = table._stage(new_dv.write.parquet, _DV_DIR)
     # affected data files (normalized: _metadata paths are URIs, the
     # manifest stores Hadoop-FS forms)
     touched = {
@@ -1274,29 +1311,47 @@ def delete_where(table: TxTable, condition) -> tuple[int, int] | None:
         .distinct()
         .collect()
     }
-    dv_set = {
-        f: dv_files for f in m["live"] if _local(f) in touched
-    }
-    version = latest + 1
-    action = {
-        "version": version,
-        "mode": "delete_dv",
-        "add": [],
-        "remove": [],
-        "dv_set": dv_set,
-        "schema": m["schema"],
-        "app_id": None,
-        "batch_id": None,
-        "txn": table._action(latest).get("txn", {}),
-    }
-    if not table._create_exclusive(
-        table._manifest_path(version), json.dumps(action)
-    ):
-        raise RuntimeError(
-            f"delete_where based on v{latest} lost the race; re-run"
-        )
-    table._maybe_checkpoint(version)
-    return version, n_deleted
+    dv_set = {f: dv_files for f in m["live"] if _local(f) in touched}
+    version = table._publish(
+        base,
+        {
+            "mode": "delete_dv" if set_exprs is None else "append",
+            "add": add,
+            "remove": [],
+            "dv_set": dv_set,
+        },
+        prev=m,
+    )
+    if version is None:
+        raise RuntimeError(f"{op} based on v{base} lost the race; re-run")
+    return version, n_matched
+
+
+def delete_where(table: TxTable, condition) -> tuple[int, int] | None:
+    """DELETE WHERE as a merge-on-read operation: record matched row
+    positions in a deletion vector and publish a metadata-only
+    version — no data file is read back, rewritten, or moved.
+    ``condition`` is a Column or SQL string over the table's columns.
+    Returns ``(version, n_deleted)``, or None when nothing matched
+    (no version is published for an empty delete)."""
+    return _dv_rewrite(table, "delete_where", condition)
+
+
+def update_where(
+    table: TxTable,
+    condition,
+    set_exprs: dict[str, str],
+) -> tuple[int, int] | None:
+    """UPDATE WHERE as one atomic version: matched rows are shadowed
+    by a deletion vector and their updated copies are appended — the
+    single published action carries BOTH (``add`` + ``dv_set``), so
+    readers see pre-update or post-update state, never a mixture, and
+    unmatched files are never rewritten (write cost is O(matched
+    rows), not O(touched files) — the deletion-vector analogue of
+    Delta's UPDATE). ``set_exprs`` maps column name -> SQL expression
+    over the pre-update row. Returns ``(version, n_updated)`` or None
+    when nothing matched."""
+    return _dv_rewrite(table, "update_where", condition, set_exprs)
 
 
 def clone(
@@ -1327,125 +1382,22 @@ def clone(
     )
     if dest.latest_version() is not None:
         raise ValueError(f"{dest_path} already has commits")
-    manifest0 = {
-        "version": 0,
-        "mode": "clone",
-        "cloned_from": f"{src.path}@v{v}",
-        # full-list form: the fold treats this as a complete state
-        # reset, so the clone's log never depends on the source's
-        "live": list(m["live"]),
-        "stats": dict(m.get("stats", {})),
-        "dv": dict(m.get("dv", {})),
-        "schema": m["schema"],
-        "app_id": None,
-        "batch_id": None,
-        "txn": {},
-    }
-    if not dest._create_exclusive(
-        dest._manifest_path(0), json.dumps(manifest0)
-    ):
+    published = dest._publish(
+        None,
+        {
+            "mode": "clone",
+            "cloned_from": f"{src.path}@v{v}",
+            # full-list form: the fold treats this as a complete state
+            # reset, so the clone's log never depends on the source's
+            "live": list(m["live"]),
+            "stats": dict(m.get("stats", {})),
+            "dv": dict(m.get("dv", {})),
+        },
+        schema=m["schema"],
+    )
+    if published is None:
         raise RuntimeError(f"clone lost the race creating {dest_path}")
     return dest
-
-
-def update_where(
-    table: TxTable,
-    condition,
-    set_exprs: dict[str, str],
-) -> tuple[int, int] | None:
-    """UPDATE WHERE as one atomic version: matched rows are shadowed
-    by a deletion vector and their updated copies are appended — the
-    single published action carries BOTH (``add`` + ``dv_set``), so
-    readers see pre-update or post-update state, never a mixture, and
-    unmatched files are never rewritten (write cost is O(matched
-    rows), not O(touched files) — the deletion-vector analogue of
-    Delta's UPDATE). ``set_exprs`` maps column name -> SQL expression
-    over the pre-update row. Returns ``(version, n_updated)`` or None
-    when nothing matched."""
-    latest = table.latest_version()
-    if latest is None:
-        raise ValueError(f"{table.path} has no commits")
-    m = table.manifest(latest)
-    if not m["live"]:
-        return None
-    schema = StructType.fromJson(json.loads(m["schema"]))
-    cond = F.expr(condition) if isinstance(condition, str) else condition
-    base = table.spark.read.schema(schema).parquet(*m["live"])
-    tagged = base.select(
-        "*",
-        F.col("_metadata.file_path").alias("__fp"),
-        F.col("_metadata.row_index").alias("__ri"),
-    )
-    old = _dv_frame(table, m)
-    if old is not None:
-        tagged = tagged.join(
-            old,
-            (tagged["__fp"] == old["file"])
-            & (tagged["__ri"] == old["pos"]),
-            "left_anti",
-        )
-    matched = tagged.filter(cond).localCheckpoint(eager=True)
-    n_updated = matched.count()
-    if n_updated == 0:
-        return None
-    # the updated copies, in manifest-schema column order
-    updated = matched.select(
-        *[
-            F.expr(set_exprs[c]).cast(f.dataType).alias(c)
-            if c in set_exprs
-            else F.col(c)
-            for c, f in zip(schema.fieldNames(), schema.fields)
-        ]
-    )
-    commit_dir = f"{table.path}/{_DATA_DIR}/c-{uuid.uuid4().hex[:12]}"
-    updated.write.parquet(commit_dir)
-    new_files = sorted(
-        f
-        for f in table._ls(commit_dir)
-        if f.rsplit("/", 1)[-1].startswith("part-")
-    )
-    hits = matched.select(
-        F.col("__fp").alias("file"), F.col("__ri").alias("pos")
-    )
-    new_dv = hits if old is None else hits.unionByName(old).distinct()
-    dv_dir = f"{table.path}/{_DV_DIR}/d-{uuid.uuid4().hex[:12]}"
-    new_dv.write.parquet(dv_dir)
-    dv_files = sorted(
-        f
-        for f in table._ls(dv_dir)
-        if f.rsplit("/", 1)[-1].startswith("part-")
-    )
-    touched = {
-        _local(r["file"])
-        for r in table.spark.read.schema("file string, pos long")
-        .parquet(*dv_files)
-        .select("file")
-        .distinct()
-        .collect()
-    }
-    dv_set = {
-        f: dv_files for f in m["live"] if _local(f) in touched
-    }
-    version = latest + 1
-    action = {
-        "version": version,
-        "mode": "append",
-        "add": new_files,
-        "remove": [],
-        "dv_set": dv_set,
-        "schema": m["schema"],
-        "app_id": None,
-        "batch_id": None,
-        "txn": table._action(latest).get("txn", {}),
-    }
-    if not table._create_exclusive(
-        table._manifest_path(version), json.dumps(action)
-    ):
-        raise RuntimeError(
-            f"update_where based on v{latest} lost the race; re-run"
-        )
-    table._maybe_checkpoint(version)
-    return version, n_updated
 
 
 # ---------------------------------------------------------------------------
@@ -1546,8 +1498,7 @@ def attach_blooms(
     """Republish the current manifest with per-file Bloom filters for
     ``cols`` merged into the stats channel (existing range stats for
     the same files are preserved). Returns the new version."""
-    base = table.latest_version()
-    m = table.manifest(base)
+    base, m = table._base()
     stats = {f: dict(per) for f, per in m.get("stats", {}).items()}
     blooms = collect_blooms(
         m["live"], cols, bits_per_key=bits_per_key, k=k
@@ -1557,25 +1508,16 @@ def attach_blooms(
         merged = dict(entry.get("__bloom__", {}))
         merged.update(per_col)
         entry["__bloom__"] = merged
-    action = {
-        "version": base + 1,
-        "mode": "stats",
-        "add": [],
-        "remove": [],
-        "schema": m["schema"],
-        "app_id": None,
-        "batch_id": None,
-        "txn": table._action(base).get("txn", {}),
-        "stats": stats,
-    }
-    if not table._create_exclusive(
-        table._manifest_path(base + 1), json.dumps(action)
-    ):
+    version = table._publish(
+        base,
+        {"mode": "stats", "add": [], "remove": [], "stats": stats},
+        prev=m,
+    )
+    if version is None:
         raise RuntimeError(
             f"attach_blooms based on v{base} lost the race; re-run"
         )
-    table._maybe_checkpoint(base + 1)
-    return base + 1
+    return version
 
 
 def scan_point(
@@ -1612,127 +1554,6 @@ def scan_point(
     return df, len(keep), len(m["live"])
 
 
-# ---------------------------------------------------------------------------
-# Bulk change feed: the partition-planned evolution of the simple
-# feed. Offsets are still table versions, but each poll plans ONE
-# INPUT PARTITION PER ADDED FILE and executors read their file
-# directly — replaying a large backlog parallelizes across the
-# cluster instead of marshalling rows through the driver. Use
-# format("txlog_feed_bulk") when catching a consumer up through many
-# versions; the simple feed remains the lighter tail-following lane.
-# ---------------------------------------------------------------------------
-from pyspark.sql.datasource import (  # noqa: E402
-    DataSourceStreamReader as _FullReader,
-    InputPartition as _InputPartition,
-)
-
-BULK_FEED_SOURCE_NAME = "txlog_feed_bulk"
-
-
-class _FeedFilePartition(_InputPartition):
-    def __init__(
-        self,
-        path: str,
-        field_names: list[str],
-        tz_fields: dict | None = None,
-    ):
-        self.path = path
-        self.field_names = field_names
-        self.tz_fields = tz_fields or {}
-
-
-class TxLogBulkFeedReader(_FullReader):
-    """Version offsets, file-grained partitions, executor-side reads.
-    Like the simple feed, rows decode BY NAME against the stream's
-    declared schema (pre-evolution files pad missing columns with
-    None; file-local column order never leaks into the stream)."""
-
-    def __init__(
-        self,
-        options: dict,
-        field_names: list[str],
-        tz_fields: dict | None = None,
-    ):
-        self.path = options["path"].rstrip("/")
-        self.field_names = field_names
-        self.tz_fields = tz_fields or {}
-
-    def _versions(self) -> list[int]:
-        return _log_versions(self.path)
-
-    def initialOffset(self) -> dict:
-        return {"version": -1}
-
-    def latestOffset(self) -> dict:
-        vs = self._versions()
-        return {"version": vs[-1] if vs else -1}
-
-    def partitions(self, start: dict, end: dict):
-        added = _log_added_files(
-            self.path,
-            int(start.get("version", -1)),
-            int(end.get("version", -1)),
-        )
-        # one partition per file: executors read in parallel
-        names = self.field_names
-        tz = self.tz_fields
-        return [
-            _FeedFilePartition(_local(f), names, tz) for f in added
-        ] or [
-            # Spark requires >= 1 partition
-            _FeedFilePartition("", names, tz)
-        ]
-
-    def read(self, partition: _FeedFilePartition):
-        if not partition.path:
-            return iter([])
-        import pyarrow.parquet as pq
-
-        names = partition.field_names
-        tz = partition.tz_fields
-        rows = [
-            tuple(
-                _localize_feed_cell(rec.get(n), tz.get(n)) for n in names
-            )
-            for rec in pq.read_table(partition.path).to_pylist()
-        ]
-        return iter(rows)
-
-    def commit(self, end: dict) -> None:
-        pass
-
-
-class TxLogBulkFeedDataSource(_DataSource):
-    @classmethod
-    def name(cls) -> str:
-        return BULK_FEED_SOURCE_NAME
-
-    def schema(self):
-        path = self.options["path"].rstrip("/")
-        vs = _log_versions(path)
-        if not vs:
-            raise ValueError(f"{path} has no commits to infer a schema")
-        schema_json = _log_action(path, vs[-1])["schema"]
-        return StructType.fromJson(json.loads(schema_json))
-
-    def streamReader(self, schema) -> TxLogBulkFeedReader:
-        return TxLogBulkFeedReader(
-            self.options,
-            [f.name for f in schema.fields],
-            _ltz_field_names(schema),
-        )
-
-
-def read_txlog_feed_bulk(spark: SparkSession, path: str):
-    """Open the bulk (executor-parallel) change feed."""
-    spark.dataSource.register(TxLogBulkFeedDataSource)
-    return (
-        spark.readStream.format(BULK_FEED_SOURCE_NAME)
-        .option("path", path)
-        .load()
-    )
-
-
 def restore(table: TxTable, version: int) -> int:
     """RESTORE: make an earlier version's content the CURRENT table
     state, published as a new overwrite version (history intact — the
@@ -1755,28 +1576,26 @@ def restore(table: TxTable, version: int) -> int:
             f"(first: {missing[0]})"
         )
     for _ in range(10):
-        latest = table.latest_version()
-        action = {
-            "version": latest + 1,
-            "mode": "restore",
-            "restored_from": version,
-            # restore = retire the whole current live set, re-add the
-            # restored one (the action names both explicitly so log
-            # replay never needs the restored-from version's state)
-            "add": m["live"],
-            "remove": table.manifest(latest)["live"],
-            # the restored version's deletion vectors come back with
-            # it (fold order: retired files drop vectors, then
-            # dv_set reinstates the restored pointers)
-            "dv_set": m.get("dv", {}),
-            "schema": m["schema"],
-            "app_id": None,
-            "batch_id": None,
-            "txn": table._action(latest).get("txn", {}),
-        }
-        if table._create_exclusive(
-            table._manifest_path(latest + 1), json.dumps(action)
-        ):
-            table._maybe_checkpoint(latest + 1)
-            return latest + 1
+        latest, current = table._base()
+        published = table._publish(
+            latest,
+            {
+                "mode": "restore",
+                "restored_from": version,
+                # restore = retire the whole current live set, re-add
+                # the restored one (the action names both explicitly
+                # so log replay never needs the restored-from
+                # version's state)
+                "add": m["live"],
+                "remove": current["live"],
+                # the restored version's deletion vectors come back
+                # with it (fold order: retired files drop vectors,
+                # then dv_set reinstates the restored pointers)
+                "dv_set": m.get("dv", {}),
+            },
+            prev=current,
+            schema=m["schema"],
+        )
+        if published is not None:
+            return published
     raise RuntimeError("restore lost 10 optimistic-concurrency races")

@@ -695,9 +695,10 @@ def test_aggregate_store_maintains_group_totals_and_survives_replay(
 ):
     """IVM streaming lane: per-group totals stay equal to a batch
     recompute across multi-batch INSERT/MODIFY/REMOVE traffic
-    (including a cross-group MODIFY), and replaying the whole stream
-    against the finished store (fresh checkpoint, same state) applies
-    nothing twice — the per-bucket applied_batch_id guard."""
+    (including a cross-group MODIFY and a claim-checked MODIFY), and
+    replaying the whole stream against the finished store (fresh
+    checkpoint, same state) applies nothing twice — the per-bucket
+    applied_batch_id guard."""
     import decimal
 
     from cdk_dynamodb_cdc_spark.operators.ivm import (
@@ -715,6 +716,7 @@ def test_aggregate_store_maintains_group_totals_and_survives_replay(
         ("e1", 1, t0, "INSERT", "U#1", "S", None, img("a", "10.50"), 64),
         ("e2", 1, t0, "INSERT", "U#2", "S", None, img("a", "2.00"), 64),
         ("e3", 1, t0, "INSERT", "U#3", "S", None, img("b", "5.25"), 64),
+        ("e7", 1, t0, "INSERT", "U#4", "S", None, img("c", "10.00"), 64),
     ]
     b2 = [
         # value-only modify; cross-group modify a->b; delete
@@ -723,6 +725,10 @@ def test_aggregate_store_maintains_group_totals_and_survives_replay(
         ("e5", 2, t0, "MODIFY", "U#2", "S", img("a", "2.00"),
          img("b", "2.00"), 64),
         ("e6", 2, t0, "REMOVE", "U#3", "S", img("b", "5.25"), None, 64),
+        # claim-checked (no size): its published event carries no
+        # images, and the group field is outside the changed subtree
+        ("e8", 2, t0, "MODIFY", "U#4", "S", img("c", "10.00"),
+         img("c", "25.00"), None),
     ]
     src = tmp_path / "src"
     src.mkdir()
@@ -756,6 +762,7 @@ def test_aggregate_store_maintains_group_totals_and_survives_replay(
     want = {
         "a": (1, decimal.Decimal("11.00")),       # U#1 only
         "b": (1, decimal.Decimal("2.00")),        # U#2 moved in, U#3 removed
+        "c": (1, decimal.Decimal("25.00")),       # claim-checked modify
     }
     assert totals() == want
 

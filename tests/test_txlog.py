@@ -263,6 +263,78 @@ def test_optimize_aborts_on_concurrent_commit(spark, tmp_path, monkeypatch):
     assert sorted(r["id"] for r in t.snapshot().collect()) == [1, 2, 99]
 
 
+@pytest.mark.parametrize(
+    "op", ["delete_where", "update_where", "attach_stats", "attach_blooms"]
+)
+def test_rewrites_losing_the_version_race_raise(
+    spark, tmp_path, monkeypatch, op
+):
+    """A concurrent writer takes version base + 1 just before the
+    operation publishes: the operation raises RuntimeError instead of
+    retrying on a state it never read, the rogue version stays latest,
+    and nothing of the loser is visible."""
+    from cdk_dynamodb_cdc_spark.storage import txlog as mod
+
+    t = TxTable(spark, str(tmp_path / "tbl"))
+    t.commit(_df(spark, [1, 2, 3]))
+    base = t.latest_version()
+    rogue = {
+        "version": base + 1,
+        "mode": "append",
+        "add": [],
+        "remove": [],
+        "schema": _df(spark, [0]).schema.json(),
+        "app_id": "rogue",
+        "batch_id": None,
+        "txn": {},
+    }
+    rogue_path = t._manifest_path(base + 1)
+    real_create = TxTable._create_exclusive
+
+    def rogue_first(self, file_path, text):
+        # the rival publishes its version an instant before we do
+        if file_path == rogue_path and not self._fs.exists(
+            self._jPath(rogue_path)
+        ):
+            assert real_create(self, rogue_path, json.dumps(rogue))
+        return real_create(self, file_path, text)
+
+    monkeypatch.setattr(TxTable, "_create_exclusive", rogue_first)
+    call = {
+        "delete_where": lambda: mod.delete_where(t, "id = 2"),
+        "update_where": lambda: mod.update_where(
+            t, "id = 2", {"s": "'changed'"}
+        ),
+        "attach_stats": lambda: mod.attach_stats(t, ["id"]),
+        "attach_blooms": lambda: mod.attach_blooms(t, ["id"]),
+    }[op]
+    with pytest.raises(RuntimeError, match="lost the race"):
+        call()
+    monkeypatch.setattr(TxTable, "_create_exclusive", real_create)
+
+    assert t.versions() == [base, base + 1]
+    assert t._action(base + 1) == rogue
+    m = t.manifest(base + 1)
+    assert not m.get("dv") and not m.get("stats")
+    assert sorted((r["id"], r["s"]) for r in t.snapshot().collect()) == [
+        (1, "r1"),
+        (2, "r2"),
+        (3, "r3"),
+    ]
+
+
+@pytest.mark.parametrize("op", ["attach_stats", "attach_blooms"])
+def test_metadata_rewrites_on_an_empty_table_raise_no_commits(
+    spark, tmp_path, op
+):
+    from cdk_dynamodb_cdc_spark.storage import txlog as mod
+
+    t = TxTable(spark, str(tmp_path / "tbl"))
+    with pytest.raises(ValueError, match="has no commits"):
+        getattr(mod, op)(t, ["id"])
+    assert t.latest_version() is None
+
+
 def test_change_feed_streams_appended_versions(spark, tmp_path):
     from cdk_dynamodb_cdc_spark.storage.txlog import read_txlog_feed
 
@@ -515,10 +587,10 @@ def test_streaming_contract_quarantines_to_dead_letter_table(
 
 
 def test_bulk_feed_replays_backlog_with_file_partitions(spark, tmp_path):
-    """The partition-planned feed reads the same rows as the simple
-    feed, with executor-side file reads; restart resumes from the
+    """The partition-planned feed skips rewrites and reads appended
+    rows with executor-side file reads; restart resumes from the
     checkpointed version offset."""
-    from cdk_dynamodb_cdc_spark.storage.txlog import read_txlog_feed_bulk
+    from cdk_dynamodb_cdc_spark.storage.txlog import read_txlog_feed
 
     tbl = str(tmp_path / "tbl")
     out = str(tmp_path / "out")
@@ -531,7 +603,7 @@ def test_bulk_feed_replays_backlog_with_file_partitions(spark, tmp_path):
 
     def run_once():
         q = (
-            read_txlog_feed_bulk(spark, tbl)
+            read_txlog_feed(spark, tbl)
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
@@ -607,14 +679,11 @@ def test_vacuum_retention_window_spares_young_unreferenced_files(
 def test_feeds_decode_by_name_across_evolution_and_reorder(
     spark, tmp_path
 ):
-    """Both change feeds must decode rows BY NAME against the stream
+    """The change feed must decode rows BY NAME against the stream
     schema: files older than an additive evolution pad the new columns
     with NULL, and a commit whose DataFrame column order differs from
     the manifest order must not swap same-typed values."""
-    from cdk_dynamodb_cdc_spark.storage.txlog import (
-        read_txlog_feed,
-        read_txlog_feed_bulk,
-    )
+    from cdk_dynamodb_cdc_spark.storage.txlog import read_txlog_feed
 
     tbl = str(tmp_path / "tbl")
     t = TxTable(spark, tbl)
@@ -633,30 +702,26 @@ def test_feeds_decode_by_name_across_evolution_and_reorder(
         )
     )
 
-    for reader, tag in (
-        (read_txlog_feed, "simple"),
-        (read_txlog_feed_bulk, "bulk"),
-    ):
-        out = str(tmp_path / f"out_{tag}")
-        ckpt = str(tmp_path / f"ckpt_{tag}")
-        q = (
-            reader(spark, tbl)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        rows = {
-            r["id"]: (r["s"], r["t"])
-            for r in spark.read.parquet(out).collect()
-        }
-        assert rows == {
-            1: ("r1", None),  # pre-evolution file: t padded NULL
-            2: ("r2", "x2"),
-            3: ("s3", "t3"),  # by-name, not by position
-        }, tag
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    q = (
+        read_txlog_feed(spark, tbl)
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    rows = {
+        r["id"]: (r["s"], r["t"])
+        for r in spark.read.parquet(out).collect()
+    }
+    assert rows == {
+        1: ("r1", None),  # pre-evolution file: t padded NULL
+        2: ("r2", "x2"),
+        3: ("s3", "t3"),  # by-name, not by position
+    }
 
 
 def test_temporal_stats_serialize_and_prune(spark, tmp_path):
@@ -693,14 +758,14 @@ def test_temporal_stats_serialize_and_prune(spark, tmp_path):
 
 
 def test_bulk_feed_restore_composition_at_scale(spark, tmp_path):
-    """Composition pin: the bulk (executor-parallel) feed over a
+    """Composition pin: the executor-parallel change feed over a
     multi-hundred-file table, with a RESTORE mid-stream. The restore
     publishes as new history (time-travelable version) but emits
     NOTHING on the appends feed — its rows were already streamed when
     first appended — and the feed resumes cleanly past it, offsets
     advancing through the restore version."""
     from cdk_dynamodb_cdc_spark.storage.txlog import (
-        read_txlog_feed_bulk,
+        read_txlog_feed,
         restore,
     )
 
@@ -719,7 +784,7 @@ def test_bulk_feed_restore_composition_at_scale(spark, tmp_path):
 
     def run_once():
         q = (
-            read_txlog_feed_bulk(spark, tbl)
+            read_txlog_feed(spark, tbl)
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
@@ -1114,14 +1179,11 @@ def test_ltz_localize_recurses_into_nested_types():
 
 
 def test_change_feed_handles_nested_timestamps(spark, tmp_path):
-    """End-to-end: nested-timestamp columns stream through both feeds
-    without the tz-naive arrow rejection, values intact."""
+    """End-to-end: nested-timestamp columns stream through the change
+    feed without the tz-naive arrow rejection, values intact."""
     import datetime as dt
 
-    from cdk_dynamodb_cdc_spark.storage.txlog import (
-        read_txlog_feed,
-        read_txlog_feed_bulk,
-    )
+    from cdk_dynamodb_cdc_spark.storage.txlog import read_txlog_feed
 
     tbl = str(tmp_path / "tbl")
     t = TxTable(spark, tbl)
@@ -1137,22 +1199,21 @@ def test_change_feed_handles_nested_timestamps(spark, tmp_path):
     )
     t.commit(spark.createDataFrame(rows, schema))
 
-    for reader, tag in [(read_txlog_feed, "s"), (read_txlog_feed_bulk, "b")]:
-        out = str(tmp_path / f"out_{tag}")
-        q = (
-            reader(spark, tbl)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", str(tmp_path / f"ckpt_{tag}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = {r["id"]: r for r in spark.read.parquet(out).collect()}
-        assert got[1]["ts"] == t0.replace(tzinfo=None) or got[1][
-            "ts"
-        ] == t0  # session-UTC collect yields naive-UTC datetimes
-        assert got[1]["meta"]["created"] is not None
-        assert got[1]["history"][0] is not None
-        assert got[1]["tags"]["k"] is not None
-        assert got[2]["ts"] is None and got[2]["meta"]["created"] is None
+    out = str(tmp_path / "out")
+    q = (
+        read_txlog_feed(spark, tbl)
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = {r["id"]: r for r in spark.read.parquet(out).collect()}
+    assert got[1]["ts"] == t0.replace(tzinfo=None) or got[1][
+        "ts"
+    ] == t0  # session-UTC collect yields naive-UTC datetimes
+    assert got[1]["meta"]["created"] is not None
+    assert got[1]["history"][0] is not None
+    assert got[1]["tags"]["k"] is not None
+    assert got[2]["ts"] is None and got[2]["meta"]["created"] is None
