@@ -132,20 +132,6 @@ def main() -> int:
         else None
     )
     cal_post = calibration()
-    # Calibration-normalized total (r14, verdict item 3): the r12/r13
-    # rounds proved the driver window can sit on a host contended up
-    # to 2.4x on a fixed single-thread spin, so raw wall-clock alone
-    # can read as an engine regression when it's machine state. The
-    # fixed-work spin is proportional to CPU-time dilution, so
-    # raw * (QUIET_SPIN / measured_spin) estimates the quiet-window
-    # total. The factor is clipped at 1.0 — normalization may only
-    # CORRECT a contended window, never flatter a fast one — and both
-    # raw and normalized travel in the driver tail so a future reader
-    # compares like with like.
-    QUIET_SPIN = 0.306  # BENCH_LOCAL_r13 quiet-window probe (secs)
-    spin_mean = (cal_pre["spin_1t_sec"] + cal_post["spin_1t_sec"]) / 2
-    cal_factor = min(1.0, QUIET_SPIN / spin_mean) if spin_mean > 0 else 1.0
-    total_norm = round(total * cal_factor, 3)
     # FULL named per-query map + env fingerprint -> sidecar file (the
     # committed BENCH_LOCAL artifacts are produced from this).
     full = {
@@ -159,9 +145,6 @@ def main() -> int:
         "sf": sf,
         "env": engine_env(spark),
         "calibration": {"pre": cal_pre, "post": cal_post},
-        "quiet_spin_baseline_sec": QUIET_SPIN,
-        "cal_factor": round(cal_factor, 4),
-        "value_cal_norm": total_norm,
         # hypervisor steal attributed per query window (jiffies across
         # all CPUs, USER_HZ=100: /100 = stolen cpu-seconds). A query
         # whose time looks regressed but whose steal entry is hot was
@@ -201,10 +184,8 @@ def main() -> int:
         "metric": "total_query_wall_sec",
         "value": total,
         "unit": "sec",
-        # host-contention correction: raw * min(1, quiet_spin/spin);
-        # cal_spin = [pre, post] fixed-work probe seconds (quiet
-        # baseline 0.306 s) — see bench.py for the full derivation
-        "value_cal_norm": total_norm,
+        # [pre, post] fixed-work single-thread spin (seconds): a slow
+        # spin flags a contended host window
         "cal_spin": [
             cal_pre["spin_1t_sec"],
             cal_post["spin_1t_sec"],

@@ -52,6 +52,7 @@ from pyspark.sql import types as T
 from cdk_dynamodb_cdc_spark.operators.claim_check import (
     presign_claim_urls,
     side_store_projection,
+    with_write_date,
     write_batch,
 )
 from cdk_dynamodb_cdc_spark.operators.pipeline import (
@@ -208,7 +209,9 @@ class CdcPipeline:
         built once per stream,
 
           1. the claim-checked events' images go to the side store
-             under `dt=<d>/batch_id=<n>/` (when there is a side store),
+             under `dt=<d>/batch_id=<n>/` (when there is a side store;
+             `d` is the date of the micro-batch's logged timestamp, so
+             a replay rewrites the same partition),
           2. the change events, after presign and the custom transform
              exactly as in the batch lane, go to
              `sink_path/batch_id=<n>/`;
@@ -238,6 +241,8 @@ class CdcPipeline:
         if self.reconstruct_missing_old:
             records = reconstruct_old_images_stream(records)
         tagged = tag_records(records, self.pk_filters, self.claim_check_threshold)
+        # dated in the streaming plan, so `dt` is the logged batch timestamp
+        tagged = with_write_date(tagged)
         side_store = side_store_path or self.claim_check_base
         side_rows = side_store_projection()
         event_rows = projection("event", claim_check_base=side_store)

@@ -76,7 +76,6 @@ def cms_cells(
 
 HLL_REGISTERS = 256  # p = 8
 _HLL_HASH_BITS = 60  # token_hash60
-_HLL_W_BITS = _HLL_HASH_BITS - 8  # 52 suffix bits feed rho
 
 
 def hll_registers(
@@ -201,26 +200,6 @@ def kmv_hashes(
     )
     return (
         df.select(h.alias("h")).distinct().orderBy("h").limit(k)
-    )
-
-
-def kmv_cardinality(hashes: DataFrame, *, k: int = KMV_K) -> DataFrame:
-    """Distinct-count estimate from a KMV sketch: one row
-    ``(n_hashes, estimate)``. An unfull sketch (fewer than ``k``
-    distinct values existed) IS the exact distinct count; a full one
-    estimates ``(k - 1) / (kth_min / 2^60)``. Everything before the
-    single final division is md5 integer arithmetic — oracle-exact."""
-    return hashes.agg(
-        F.count(F.lit(1)).alias("n_hashes"),
-        F.max("h").alias("kth"),
-    ).select(
-        "n_hashes",
-        F.when(F.col("n_hashes") < k, F.col("n_hashes").cast("double"))
-        .otherwise(
-            F.lit(float(k - 1))
-            / (F.col("kth").cast("double") / F.lit(_KMV_SPACE))
-        )
-        .alias("estimate"),
     )
 
 
@@ -387,12 +366,13 @@ def bloom_contains(
     columns). False positives pass (bounded rate); members always
     pass (no false negatives).
 
-    The packed table rides as ONE array ``Literal`` (``F.lit(list)``),
-    not a ``CreateArray`` of m/64 scalar literals: the element-wise
-    form is rebuilt per evaluation site in generated code (1024
-    assignments per probe for the 64 Kbit filter, 4 probes per key),
-    which measured ~3-4x slower than the single-literal form on the
-    decontamination gram stream — r14 optimization round."""
+    The packed table rides as ``F.lit(list)``, which Spark analyzes to
+    a ``CreateArray`` of m/64 scalar literals, the same expression as
+    an element-wise ``F.array``. The decontamination speedup measured
+    in the r14 optimization round came from restructuring its caller
+    into a single pass (one shingle array per document feeding both
+    the size count and the filtered gram stream, one join instead of
+    two), not from the literal's form."""
     words_lit = F.lit([int(w) for w in words])
     out = None
     for s in range(k):

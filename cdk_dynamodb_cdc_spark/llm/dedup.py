@@ -49,47 +49,6 @@ SIMHASH_CHUNK_BITS = 15
 SIMHASH_MAX_HAMMING = SIMHASH_CHUNKS - 1  # pigeonhole guarantee
 
 
-def tune_lsh_bands(
-    threshold: float,
-    *,
-    n_perms: int = MINHASH_PERMS,
-    min_recall: float = 0.9,
-) -> tuple[int, int]:
-    """Pick ``(bands, rows_per_band)`` for a target Jaccard threshold.
-
-    The LSH S-curve gives a pair of Jaccard ``s`` probability
-    ``1 - (1 - s^rows)^bands`` of landing in at least one shared
-    bucket. Among the divisor factorizations of ``n_perms``, choose
-    the one with the MOST rows per band (fewest candidates — band
-    cost is what scales with the corpus) whose capture probability AT
-    the threshold still clears ``min_recall``; if none does, fall
-    back to the most-selective factorization that maximizes capture.
-    Deterministic pure arithmetic — callers pass the result straight
-    into a banding layout, and a tuning change shows up in plans as a
-    different explode width, never different verify semantics (the
-    exact-Jaccard verify step downstream is unconditional).
-    """
-    if not (0.0 < threshold < 1.0):
-        raise ValueError(f"threshold must be in (0, 1): {threshold}")
-    options = [
-        (n_perms // r, r)
-        for r in range(1, n_perms + 1)
-        if n_perms % r == 0
-    ]
-
-    def capture(bands: int, rows: int) -> float:
-        return 1.0 - (1.0 - threshold**rows) ** bands
-
-    ok = [
-        (bands, rows)
-        for bands, rows in options
-        if capture(bands, rows) >= min_recall
-    ]
-    if ok:
-        return max(ok, key=lambda br: br[1])
-    return max(options, key=lambda br: capture(*br))
-
-
 def word_shingles(text, k: int = SHINGLE_WORDS, *, distinct: bool = True):
     """Word k-gram shingles (space-joined) of a text column, distinct
     by default (set semantics for Jaccard).

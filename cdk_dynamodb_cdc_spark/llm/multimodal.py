@@ -9,9 +9,8 @@ The container has no image/audio codecs, so the DECODE step is a
 deterministic fake (documented below) while everything Spark-side —
 BinaryType schema, Arrow batch shape, multi-row emission
 (frame sampling), partition-preserving plumbing — is real and tested.
-`decode_media` is the real-codec hook and ALWAYS raises
-NotImplementedError in this environment; `fake_decode` derives
-metadata purely from the byte length so oracles can replicate it.
+`fake_decode` derives metadata purely from the byte length so oracles
+can replicate it; a real deployment swaps in a codec call there.
 
 Scale: both UDF stages are per-row / per-batch (no shuffle, no state);
 a 100 TB media corpus streams through executors at Arrow-batch
@@ -29,9 +28,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = (
-    "doc_id bigint, media_type string, payload binary"
-)
 DECODED_SCHEMA = (
     "doc_id bigint, media_type string, n_bytes bigint, "
     "width int, height int, n_frames int"
@@ -68,18 +64,6 @@ def fake_decode(payload: bytes) -> tuple[int, int, int, int]:
     n = len(payload)
     w, h, fr = _fake_dims(n)
     return n, w, h, fr
-
-
-def decode_media(payload: bytes, media_type: str):
-    """Real-codec decode hook. STUB: this ALWAYS raises — the container
-    ships no codec libraries and nothing is conditionally wired. A real
-    deployment replaces this function with Pillow / soundfile / pyav
-    calls; the Arrow plumbing around it (decode_media_batches and the
-    schemas above) is real and oracle-tested via fake_decode."""
-    raise NotImplementedError(
-        "media codec decode not wired in this environment; "
-        "use fake_decode for the deterministic test path"
-    )
 
 
 def decode_media_batches(

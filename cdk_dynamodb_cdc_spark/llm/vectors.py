@@ -432,9 +432,9 @@ def ivf_build(
     assignment join.
 
     The returned DataFrame is the INDEX — the thing to persist. Write
-    it once, bucketed by `cell` (colocate.write_bucketed), and every
-    subsequent :func:`ivf_search` reads only the probed cells with no
-    assignment work at all. Re-deriving it per query (what
+    it once, bucketed by `cell` (`bucketBy(n, "cell").saveAsTable`),
+    and every subsequent :func:`ivf_search` reads only the probed
+    cells with no assignment work at all. Re-deriving it per query (what
     :func:`ivf_cosine_topk` does for the oracle-checkable single-plan
     form) re-scans the corpus — fine at test scale, wasteful at 100 TB.
     """

@@ -23,8 +23,11 @@ a committed event never points at a missing blob, and a replayed
 micro-batch overwrites its own partitions — exactly-once across
 checkpoint retries, same recipe as the main sink.
 
-Retention (reference A13: 24 h S3 lifecycle, ``dynamo.ts:111-116``) is
-:func:`vacuum_side_store` — a partition-drop by write date.
+Retention (reference A13: 24 h S3 lifecycle from creation,
+``dynamo.ts:111-116``) is :func:`vacuum_side_store` — a partition-drop
+by ``dt``, which is the write date in both lanes
+(:func:`with_write_date`), so a backfill of old records keeps its
+blobs for the full window.
 
 The presigned-GET half of the reference's contract
 (``dynamo-stream-handler.ts:154-165``) is :func:`presign_claim_urls` /
@@ -43,27 +46,38 @@ from pyspark.sql import functions as F
 from cdk_dynamodb_cdc_spark.operators.pipeline import tag_records
 
 
-def side_store_projection() -> Callable[[DataFrame], DataFrame]:
-    """The side-store projection of a :func:`tag_records` frame: its
-    claim-checked events as ``(event_id, old_image, new_image, dt)``.
+def with_write_date(tagged: DataFrame) -> DataFrame:
+    """``tagged`` plus the side store's partition column ``dt``:
+    ``current_date()``, i.e. the date of the write, never of the
+    record. In a batch query that is one date for the whole write.
+    In a streaming plan it is the date of the micro-batch's timestamp,
+    kept in the checkpoint's offset log, so a replay lands in the same
+    partition; inside ``foreachBatch`` it would be the wall clock
+    instead, which is why the stream adds this column in its own plan.
+    The stream substitutes a date literal, not a timestamp one, so the
+    micro-batches of one day share their generated code."""
+    return tagged.withColumn("dt", F.current_date())
 
-    ``dt`` partitions the store so retention is a cheap partition drop
-    instead of a per-object scan. Like ``pipeline.projection``, its
-    Columns are built once, for any number of tagged frames.
+
+def side_store_projection() -> Callable[[DataFrame], DataFrame]:
+    """The side-store projection of a :func:`tag_records` frame that
+    carries ``dt`` (:func:`with_write_date`): its claim-checked events
+    as ``(event_id, old_image, new_image, dt)``.
+
+    ``dt`` is the write date, so retention by ``dt`` is a cheap
+    partition drop that never removes a fresh blob, whatever the
+    records' event dates. Like ``pipeline.projection``, its Columns are
+    built once, for any number of tagged frames.
     """
     where = (F.col("disposition") == "event") & F.col("claim")
-    cols = [
-        "event_id",
-        "old_image",
-        "new_image",
-        F.to_date(F.coalesce(F.col("ts"), F.current_timestamp())).alias("dt"),
-    ]
+    cols = ["event_id", "old_image", "new_image", "dt"]
     return lambda tagged: tagged.filter(where).select(*cols)
 
 
 def side_store_writes(tagged: DataFrame) -> DataFrame:
-    """:func:`side_store_projection` applied to ``tagged``."""
-    return side_store_projection()(tagged)
+    """:func:`side_store_projection` of ``tagged``, dated by this
+    write."""
+    return side_store_projection()(with_write_date(tagged))
 
 
 def write_batch(df: DataFrame, path: str, batch_id: int, *partition_by: str) -> None:
@@ -82,7 +96,7 @@ def write_batch(df: DataFrame, path: str, batch_id: int, *partition_by: str) -> 
 
 def write_side_store(records: DataFrame, base_path: str) -> None:
     """Append the claim-checked images of ``records`` (CDC_RECORD_SCHEMA)
-    to the side store, partitioned by date.
+    to the side store, partitioned by the write date.
 
     The rows come from ``tag_records(records)``, so while a
     ``CdcPipeline`` holds the persisted pass of the same ``records``

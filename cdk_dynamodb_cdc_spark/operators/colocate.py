@@ -1,16 +1,9 @@
-"""Join co-location utilities: bucketed (pre-shuffled) tables and
-manual skew salting (SURVEY.md §2B "Partitioning & shuffle").
+"""Join skew utilities: manual skew salting and a key-skew profile
+(SURVEY.md §2B "Partitioning & shuffle").
 
-Two complementary tools for the 100 TB join problem:
-
-* :func:`write_bucketed` / :func:`read_bucketed` — persist a table
-  hash-bucketed (and sorted) by its join key. Two tables bucketed the
-  same way join with ZERO exchange: Spark's scan reports the bucket
-  partitioning, the sort-merge join consumes it directly, and at
-  100 TB the single biggest cost of a fact-fact join (re-shuffling
-  both sides) disappears from every subsequent query. This is the
-  batch analogue of the reference's GSI (dynamo.ts:75-83): a stored
-  alternate physical layout paid for once at write time.
+Pre-shuffled (bucketed) tables need no helper here: Spark's own
+``bucketBy(...).saveAsTable`` / ``spark.table`` persist and read one,
+and two tables bucketed the same way join with zero exchange.
 
 * :func:`salted_join` — explicit salt-and-replicate for joins whose
   key distribution is too skewed even for AQE's skew-join splitting
@@ -27,36 +20,8 @@ a profile shows the shuffle or a straggler task dominating.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    path: str,
-    *,
-    keys: list[str],
-    num_buckets: int,
-    sort: bool = True,
-) -> None:
-    """Persist `df` as an external parquet table hash-bucketed by
-    `keys` (optionally sorted within buckets, which lets the
-    sort-merge join skip its sort as well). `num_buckets` must match
-    between tables that will join; pick it so a bucket of the LARGER
-    table fits an executor core's working memory at target scale."""
-    writer = df.write.mode("overwrite").option("path", path).bucketBy(
-        num_buckets, *keys
-    )
-    if sort:
-        writer = writer.sortBy(*keys)
-    writer.saveAsTable(table)
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Read a bucketed table; the scan carries the bucket partitioning
-    into the plan, which is what eliminates the join exchange."""
-    return spark.table(table)
 
 
 def salted_join(

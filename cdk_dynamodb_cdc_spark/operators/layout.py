@@ -141,44 +141,3 @@ def write_zordered(
         .parquet(path)
     )
 
-
-def optimize_table(
-    spark,
-    src_path: str,
-    dst_path: str,
-    *,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    zorder_cols: list[str] | None = None,
-    bits: int = 8,
-) -> int:
-    """OPTIMIZE-style maintenance: rewrite ``src_path`` into
-    ``dst_path`` as ~``target_file_bytes``-sized parquet files,
-    optionally Z-order clustered. Returns the file count written.
-
-    Streaming sinks and incremental upserts accrete small files; scan
-    cost at 100 TB is dominated by file-open overhead and lost
-    row-group pruning long before raw bytes. The file count comes from
-    the table's actual on-disk size (Hadoop FileSystem content
-    summary, so it works on any scheme — HDFS/S3A/local), not a row
-    estimate. The rewrite lands in a NEW directory: readers of
-    ``src_path`` are never racing the rewrite, and the swap (rename or
-    metastore location flip) is the caller's atomic commit point —
-    the same publish discipline a transactional table format performs
-    internally.
-    """
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(src_path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    total_bytes = fs.getContentSummary(hpath).getLength()
-    num_files = max(1, -(-total_bytes // target_file_bytes))
-
-    df = spark.read.parquet(src_path)
-    if zorder_cols:
-        write_zordered(
-            df, dst_path, zorder_cols, num_files=num_files, bits=bits
-        )
-    else:
-        df.repartition(num_files).write.mode("overwrite").parquet(
-            dst_path
-        )
-    return num_files

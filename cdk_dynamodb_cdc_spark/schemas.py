@@ -46,15 +46,4 @@ CHANGE_EVENT_SCHEMA = T.StructType(
     ]
 )
 
-# Published-event envelope (EventBridge PutEvents analogue,
-# dynamo-stream-handler.ts:168-177): routing attributes + JSON detail.
-PUBLISHED_EVENT_SCHEMA = T.StructType(
-    [
-        T.StructField("source", T.StringType(), False),
-        T.StructField("detail_type", T.StringType(), False),
-        T.StructField("detail", T.StringType(), False),
-    ]
-)
-
-DETAIL_TYPE_ITEM_CHANGED = "dynamo.item.changed"
 CLAIM_CHECK_THRESHOLD = 64 * 1024  # dynamo-stream-handler.ts:130

@@ -104,6 +104,9 @@ def get_spark(
         # 4 for a 6-record file. Filters still run right after the scan.
         .config("spark.sql.json.filterPushdown.enabled", "false")
         .config("spark.ui.enabled", "false")
+        # `[Stage n:> ...]` bars on stdout would otherwise sit ahead of
+        # the one JSON line a caller parses from the tail of a run's stdout.
+        .config("spark.ui.showConsoleProgress", "false")
         # Modest heap on purpose: measured on the 32-core/128 GiB test
         # VM, a 64g heap runs the allocation-heavy interpreted
         # expression paths (higher-order-function folds) 2-6x SLOWER

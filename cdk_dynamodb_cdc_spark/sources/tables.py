@@ -60,10 +60,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # (fewer byte-splits than cores). Real deployments read thousands
     # of row groups per table, scan partitions >= cores, and this
     # branch never triggers — no shuffle is added at 100 TB.
-    if os.environ.get("SPARK_GRAFT_NO_SCAN_SHIM") != "1":
-        cores = spark.sparkContext.defaultParallelism
-        if _estimated_scan_partitions(spark, f"{sf_dir}/{name}.parquet") < cores:
-            df = df.repartition(cores)
+    cores = spark.sparkContext.defaultParallelism
+    if _estimated_scan_partitions(spark, f"{sf_dir}/{name}.parquet") < cores:
+        df = df.repartition(cores)
     return df
 
 

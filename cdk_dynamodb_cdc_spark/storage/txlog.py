@@ -737,7 +737,7 @@ def optimize(
     boundary, and the small files remain time-travelable until
     :meth:`TxTable.vacuum`. This is the storage-lane composition of
     the engine's two maintenance tools: txlog gives the atomic swap
-    that `operators/layout.optimize_table` leaves to its caller.
+    around `operators/layout.write_zordered`.
 
     Returns the new version, or None if the table is empty. Raises
     RuntimeError if a concurrent writer commits after the rewrite's

@@ -1,14 +1,12 @@
-"""Structured Streaming CDC consumer (reference operator A1 + §2B
-streaming rows).
+"""Structured Streaming CDC consumer (reference operator A1).
 
 The reference is a *stream* processor: a Lambda subscribed to a
-DynamoDB change stream (`/root/reference/lib/constructs/dynamo.ts:153-155,193`
-— `DynamoEventSource`, `StartingPosition.LATEST`, NEW_AND_OLD_IMAGES
-view at `dynamo.ts:69`). This module holds the Spark-native sources
-and stateful stream operators; the record -> event stream itself is
-`CdcPipeline.run_stream` (api.py), which runs the batch-tested record
-transform per micro-batch via `foreachBatch`, configured by the same
-pipeline as the batch lane:
+DynamoDB change stream (`dynamo.ts:153-155,193` — `DynamoEventSource`,
+`StartingPosition.LATEST`, NEW_AND_OLD_IMAGES view at `dynamo.ts:69`).
+This module holds the file source and the snapshot maintainer; the
+record -> event stream itself is `CdcPipeline.run_stream` (api.py),
+which runs the batch-tested record transform per micro-batch via
+`foreachBatch`, configured by the same pipeline as the batch lane:
 
     read_cdc_stream     — `readStream` over a file/CDC-record source
                           (A1; `latest` start maps to processing only
@@ -18,14 +16,14 @@ pipeline as the batch lane:
                           checkpoint without reading it (zero-scan
                           `latest` start; read_cdc_stream calls it on
                           first subscription when given the checkpoint)
-    dedup_within_watermark — at-least-once -> exactly-once semantics on
-                          a keyed stream (`dropDuplicatesWithinWatermark`)
-    windowed_change_counts — event-time tumbling-window aggregation with
-                          watermarked late-data handling
     maintain_snapshot_stream — materialized-table maintenance: per-batch
                           winner per key upserted into a bucket-
                           partitioned parquet state store (dynamic
                           partition overwrite of touched buckets only)
+
+Watermarked dedup, windowed counts and stream-stream joins are one
+Structured Streaming call each (`dropDuplicatesWithinWatermark`,
+`groupBy(window(...))`, a time-bounded `join`) and need no wrapper.
 
 Exactly-once story (`run_stream`): the checkpoint tracks source
 offsets per micro batch; the main sink writes `batch_id=<n>` partitions
@@ -40,9 +38,7 @@ it. This is the standard file-sink exactly-once recipe when a
 transactional table format isn't available.
 
 Scale: the pipeline transform is shuffle-free (see operators/pipeline.py)
-so each micro-batch is embarrassingly parallel; stateful operators
-(dedup, windows) shuffle on their keys with state pruned by watermark —
-state size is bounded by (keys active within the watermark horizon).
+so each micro-batch is embarrassingly parallel.
 """
 
 from __future__ import annotations
@@ -78,69 +74,6 @@ def initialize_latest_checkpoint(
         .start()
     )
     q.awaitTermination()
-
-
-def parse_cdc_kafka_records(raw: DataFrame) -> DataFrame:
-    """Decode a Kafka-shaped frame (binary ``value``, plus
-    ``partition``/``offset``) into CDC_RECORD_SCHEMA rows.
-
-    The wire format is the same JSON the file lane reads — one record
-    per message. Kafka's per-partition order backs the per-key `seq`
-    contract the same way shard order does in the reference
-    (`dynamo.ts:153-155`): a producer keyed by `pk` lands each item's
-    changes in one partition, in order. Pure Column logic, shared by
-    the streaming lane and this function's batch-DataFrame tests.
-    """
-    return raw.select(
-        F.from_json(
-            F.col("value").cast("string"), CDC_RECORD_SCHEMA
-        ).alias("r")
-    ).select("r.*")
-
-
-def read_cdc_kafka_stream(
-    spark: SparkSession,
-    *,
-    bootstrap_servers: str,
-    topic: str,
-    starting_position: str = "latest",
-) -> DataFrame:
-    """A1 over a SEEKABLE source: subscribe to a Kafka topic of CDC
-    records. `latest` maps directly to `startingOffsets=latest` — the
-    broker seeks past the backlog, so unlike the file lane there is no
-    checkpoint-initialization pass and no listing cost at all;
-    `trim_horizon` maps to `earliest`.
-
-    Requires the spark-sql-kafka connector jars, which this container
-    does not ship — the source lookup fails at `.load()` and is
-    re-raised with guidance (documented environment stub, pytest-
-    pinned). The value-decoding logic is
-    :func:`parse_cdc_kafka_records`, which IS tested, on batch frames
-    of Kafka shape.
-    """
-    if starting_position not in ("latest", "trim_horizon"):
-        raise ValueError(
-            f"starting_position must be 'latest' or 'trim_horizon', "
-            f"got {starting_position!r}"
-        )
-    offsets = "latest" if starting_position == "latest" else "earliest"
-    try:
-        raw = (
-            spark.readStream.format("kafka")
-            .option("kafka.bootstrap.servers", bootstrap_servers)
-            .option("subscribe", topic)
-            .option("startingOffsets", offsets)
-            .load()
-        )
-    except Exception as exc:
-        raise ModuleNotFoundError(
-            "read_cdc_kafka_stream needs the spark-sql-kafka connector "
-            "(absent in this environment); add the "
-            "org.apache.spark:spark-sql-kafka-0-10 package to the "
-            "session, or use the file lane (read_cdc_stream) whose "
-            "checkpoint-initialized 'latest' gives the same semantics"
-        ) from exc
-    return parse_cdc_kafka_records(raw)
 
 
 def read_cdc_stream(
@@ -198,191 +131,6 @@ def read_cdc_stream(
             f"got {starting_position!r}"
         )
     return reader.json(source_path)
-
-
-def dedup_within_watermark(
-    records: DataFrame,
-    *,
-    key_cols: list[str] | None = None,
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """§2B stateful op: collapse at-least-once redelivery to
-    exactly-once within the watermark horizon.
-
-    State is one entry per key seen within `watermark` of the max event
-    time — pruned continuously, so it is bounded at any corpus size by
-    the key arrival rate, not the stream length.
-    """
-    return records.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        key_cols or ["event_id"]
-    )
-
-
-def windowed_change_counts(
-    records: DataFrame,
-    *,
-    window_duration: str = "5 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """§2B streaming window: per-operation counts in event-time tumbling
-    windows; rows later than `watermark` behind the max seen `ts` are
-    dropped (late-data policy), letting the window state finalize."""
-    return (
-        records.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window_duration), F.col("operation"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "operation",
-            "n_events",
-        )
-    )
-
-
-TEMPORAL_TAGGED_SCHEMA = (
-    "k string, t timestamp, seq long, side int, v string"
-)
-TEMPORAL_ENRICHED_SCHEMA = "k string, t timestamp, seq long, v string"
-_TEMPORAL_STATE_SCHEMA = "v string, open boolean"
-
-
-def _temporal_enrich_group(key, batches, state):
-    import pandas as pd
-
-    v, is_open = state.get if state.exists else (None, False)
-    for pdf in batches:
-        pdf = pdf.sort_values(["t", "side", "seq"])
-        out_t, out_seq, out_v = [], [], []
-        for t, seq, side, val in zip(
-            pdf["t"], pdf["seq"], pdf["side"], pdf["v"]
-        ):
-            if side == 0:
-                # dim event: a value opens a new version (replacing the
-                # current one — at equal t, log order wins, matching the
-                # batch lane's widest-valid_to rule); a null value is a
-                # tombstone closing the key
-                if isinstance(val, str):
-                    v, is_open = val, True
-                else:
-                    v, is_open = None, False
-            else:
-                out_t.append(t)
-                out_seq.append(seq)
-                out_v.append(v if is_open else None)
-        if out_t:
-            yield pd.DataFrame(
-                {
-                    "k": key[0],
-                    "t": out_t,
-                    "seq": out_seq,
-                    "v": pd.array(out_v, dtype=object),
-                }
-            )
-    state.update((v, is_open))
-
-
-def temporal_enrich_stream(tagged: DataFrame) -> DataFrame:
-    """Streaming SCD2 temporal enrichment — the continuous form of
-    :func:`~cdk_dynamodb_cdc_spark.operators.asof.temporal_join`: a
-    single keyed stream interleaves dimension-version events (side 0:
-    a value opens a version, a NULL value is a tombstone) and fact
-    probes (side 1); each fact emits with the version open AT its
-    timestamp, NULL inside tombstone holes. Input columns
-    ``TEMPORAL_TAGGED_SCHEMA``, output ``TEMPORAL_ENRICHED_SCHEMA``.
-
-    State per key is ONE (value, open) cell — not the version history
-    — because enrichment only ever needs the current version when
-    facts arrive in per-key time order, the same per-key ordering
-    guarantee the CDC source provides (SURVEY.md §4) and that
-    ``reconstruct_old_images_stream`` already leans on; each
-    micro-batch additionally sorts its own rows by (t, side, seq) so
-    intra-batch interleavings are deterministic. A batch-parity pytest
-    pins this lane to ``temporal_join`` on the same rows.
-
-    Scale: state size = live keys x one value, incrementally
-    checkpointed; each micro-batch is one shuffle on the key. This is
-    the operator a 100-TB training-data join runs continuously —
-    enriching an event firehose with slowly-changing dimensions
-    without ever re-reading the dimension history.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return tagged.groupBy("k").applyInPandasWithState(
-        _temporal_enrich_group,
-        outputStructType=TEMPORAL_ENRICHED_SCHEMA,
-        stateStructType=_TEMPORAL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def interval_join_streams(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    key: str,
-    left_time: str,
-    right_time: str,
-    max_delay: str = "30 minutes",
-    watermark: str = "10 minutes",
-    how: str = "inner",
-) -> DataFrame:
-    """§2B stream-stream join: right-side rows within (0, max_delay]
-    AFTER a left row with the same key.
-
-    Both sides carry watermarks and the join condition bounds
-    right_time to a closed interval of left_time — the two facts Spark
-    needs to prune join state: each side retains only rows younger
-    than watermark + max_delay, so state is bounded by arrival rate,
-    not stream length. Without the time bound, a stream-stream inner
-    join would buffer both streams forever.
-
-    `how="left_outer"` additionally emits unmatched left rows
-    null-padded — but only once the watermark has passed a row's join
-    horizon (left_time + max_delay), since until then a match could
-    still arrive. A pytest pins parity with the batch left join;
-    tail-of-stream rows whose horizon the final watermark never
-    crosses stay buffered, which is correct streaming semantics, so
-    finite-input tests advance the watermark with a late flush row.
-
-    `how="left_semi"` emits each matched left row exactly once (no
-    right columns, no fan-out on multiple matches) — the streaming
-    EXISTS filter; the same watermark horizon governs when a left row
-    can be dropped unmatched. Spark's stream-stream left_anti is not
-    supported; express NOT EXISTS as left_outer + IS NULL on a right
-    column once the horizon passes.
-
-    `how="full_outer"` completes the how-surface: unmatched rows from
-    BOTH sides emit null-padded at their watermark horizons — the
-    left side's horizon is `left_time + max_delay` (a match could
-    arrive that long after), the right side's is `right_time` itself
-    (its potential partners all precede it, so once the left
-    watermark passes `right_time` no match can appear). Same bounded
-    state, same batch-parity contract as the other lanes.
-    `how="right_outer"` is the right-side-only restriction of that
-    emission (unmatched RIGHT rows null-pad at the `right_time`
-    horizon; unmatched left rows drop).
-    """
-    if how not in (
-        "inner",
-        "left_outer",
-        "left_semi",
-        "full_outer",
-        "right_outer",
-    ):
-        raise ValueError(
-            f"how must be inner|left_outer|left_semi|full_outer|"
-            f"right_outer, got {how!r}"
-        )
-    lw = left.withWatermark(left_time, watermark)
-    rw = right.withWatermark(right_time, watermark)
-    cond = (
-        (lw[key] == rw[key])
-        & (rw[right_time] > lw[left_time])
-        & (rw[right_time] <= lw[left_time] + F.expr(f"INTERVAL {max_delay}"))
-    )
-    return lw.join(rw, cond, how)
 
 
 def read_snapshot_store(spark: SparkSession, state_path: str) -> DataFrame:

@@ -375,7 +375,6 @@ def test_triangle_count_hand_graphs(spark):
 
 def test_kmv_unfull_exact_full_estimates_and_mergeable(spark):
     from cdk_dynamodb_cdc_spark.functions.sketches import (
-        kmv_cardinality,
         kmv_hashes,
         kmv_set_ops,
     )
@@ -383,14 +382,17 @@ def test_kmv_unfull_exact_full_estimates_and_mergeable(spark):
     small = spark.createDataFrame(
         [(f"s{i % 10}",) for i in range(100)], "k string"
     )
-    # unfull sketch: estimate IS the exact distinct count
-    [r] = kmv_cardinality(kmv_hashes(small, "k", k=32), k=32).collect()
-    assert (r.n_hashes, r.estimate) == (10, 10.0)
+    # unfull sketch: the union estimate of a sketch with itself IS the
+    # exact distinct count
+    h = kmv_hashes(small, "k", k=32)
+    [r] = kmv_set_ops(h, h, k=32).collect()
+    assert (r.n_merged, r.union_est, r.jaccard_est) == (10, 10.0, 1.0)
 
     big_rows = [(f"b{i}",) for i in range(3000)]
     big = spark.createDataFrame(big_rows, "k string")
-    [r] = kmv_cardinality(kmv_hashes(big, "k", k=64), k=64).collect()
-    assert abs(r.estimate - 3000) / 3000 < 0.5  # ~12.7% sigma, 4x slack
+    h = kmv_hashes(big, "k", k=64)
+    [r] = kmv_set_ops(h, h, k=64).collect()
+    assert abs(r.union_est - 3000) / 3000 < 0.5  # ~12.7% sigma, 4x slack
     # mergeability: k-min of concatenated sketches == sketch of union
     h1 = kmv_hashes(
         spark.createDataFrame(big_rows[:2000], "k string"), "k", k=64

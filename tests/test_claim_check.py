@@ -69,9 +69,31 @@ def test_vacuum_keeps_partitions_inside_window(spark, tmp_path):
     base = str(tmp_path / "side")
     records = cdc_fixture_df(spark)
     write_side_store(records, base)
-    # fixture ts is 2024-01-01 -> far past the 1-day default retention;
     # with a huge retain_days nothing may be deleted
     assert vacuum_side_store(spark, base, retain_days=10_000) == []
+
+
+def test_backfilled_blobs_outlive_vacuum(spark, tmp_path):
+    """A backfill of records dated two or more days ago keeps its blobs
+    through the 1-day retention: `dt` is the write date, not the
+    event date, so no presigned pointer dangles seconds after the
+    write."""
+    base = str(tmp_path / "side")
+    records = cdc_fixture_df(spark)
+    before = datetime.datetime.now(UTC).date()
+    assert records.filter(
+        F.to_date("ts") > F.lit(before - datetime.timedelta(days=2))
+    ).count() == 0
+    write_side_store(records, base)
+    after = datetime.datetime.now(UTC).date()
+
+    assert vacuum_side_store(spark, base, retain_days=1) == []
+    rows = spark.read.parquet(base).collect()
+    assert {r.event_id for r in rows} == {"ev-big", "ev-zero-size"}
+    assert {r.dt for r in rows} <= {before, after}
+    # a cutoff one day past the write date (as a run two days on with
+    # retain_days=1 would use) drops them
+    assert len(vacuum_side_store(spark, base, retain_days=-1)) == 1
 
 
 def test_vacuum_missing_store_is_noop(spark, tmp_path):
@@ -133,23 +155,3 @@ def test_presigned_claim_urls_validate_and_expire(spark):
         assert r.ok, r
         assert not r.expired_ok and not r.wrong_key_ok and not r.tampered_ok, r
 
-
-def test_gsi_projection_clusters_by_alternate_key(spark, tmp_path):
-    from cdk_dynamodb_cdc_spark.operators.gsi import gsi_projection, write_gsi_copy
-
-    df = spark.createDataFrame(
-        [(i, f"g{i % 3}", f"s{i}") for i in range(30)],
-        "id long, gsipk string, gsisk string",
-    )
-    out = gsi_projection(df, "gsipk", "gsisk", num_partitions=3)
-    # each gsipk value lands wholly inside one partition
-    per_part = out.withColumn(
-        "part", __import__("pyspark").sql.functions.spark_partition_id()
-    ).select("gsipk", "part").distinct()
-    counts = per_part.groupBy("gsipk").count().collect()
-    assert all(r["count"] == 1 for r in counts)
-
-    path = str(tmp_path / "gsi")
-    write_gsi_copy(df, path, "gsipk", "gsisk", buckets=4)
-    back = spark.read.parquet(path)
-    assert back.count() == 30 and "__bucket" in back.columns

@@ -11,38 +11,6 @@ from cdk_dynamodb_cdc_spark.sources.tables import load_table
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    od = load_table(spark, SF_DIR, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    li = load_table(spark, SF_DIR, "lineitem").select(
-        "l_orderkey", "l_quantity"
-    )
-    colocate.write_bucketed(
-        od, "orders_b", str(tmp_path / "orders_b"), keys=["o_orderkey"], num_buckets=8
-    )
-    colocate.write_bucketed(
-        li, "lineitem_b", str(tmp_path / "li_b"), keys=["l_orderkey"], num_buckets=8
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        a = colocate.read_bucketed(spark, "orders_b")
-        b = colocate.read_bucketed(spark, "lineitem_b")
-        joined = a.join(b, a["o_orderkey"] == b["l_orderkey"])
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        # co-located: the scan's bucket partitioning feeds the join —
-        # no hash-repartition exchange on either side
-        assert "Exchange hashpartitioning" not in plan, plan
-        # results identical to the plain (shuffled) join
-        expected = od.join(li, od["o_orderkey"] == li["l_orderkey"]).count()
-        assert joined.count() == expected
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS orders_b")
-        spark.sql("DROP TABLE IF EXISTS lineitem_b")
-
-
 def test_salted_join_matches_plain_join(spark):
     od = load_table(spark, SF_DIR, "orders").select("o_orderkey", "o_custkey")
     cu = load_table(spark, SF_DIR, "customer").select("c_custkey", "c_mktsegment")

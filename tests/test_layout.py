@@ -99,58 +99,6 @@ def test_zorder_key_is_deterministic_and_bounded(spark):
     assert 0 <= rows["lo"] <= rows["hi"] < 2**8  # 2 cols * 4 bits
 
 
-def test_optimize_table_compacts_small_files(spark, tmp_path):
-    from cdk_dynamodb_cdc_spark.operators.layout import optimize_table
-
-    src = str(tmp_path / "fragmented")
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    li.repartition(64).write.mode("overwrite").parquet(src)
-    assert len(glob.glob(f"{src}/part-*.parquet")) == 64
-
-    # Pick a target that should land the table in 2-6 files.
-    total = sum(
-        __import__("os").path.getsize(f)
-        for f in glob.glob(f"{src}/part-*.parquet")
-    )
-    dst = str(tmp_path / "optimized")
-    n = optimize_table(
-        spark, src, dst, target_file_bytes=max(1, total // 4)
-    )
-    files = glob.glob(f"{dst}/part-*.parquet")
-    assert len(files) == n
-    assert 2 <= n <= 6
-    assert (
-        spark.read.parquet(dst).count() == li.count()
-    )
-
-
-def test_optimize_table_with_zorder_clusters_both_columns(
-    spark, tmp_path
-):
-    from cdk_dynamodb_cdc_spark.operators.layout import optimize_table
-
-    src = str(tmp_path / "fragmented_z")
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey", "l_suppkey"
-    )
-    li.repartition(32).write.mode("overwrite").parquet(src)
-    total = sum(
-        __import__("os").path.getsize(f)
-        for f in glob.glob(f"{src}/part-*.parquet")
-    )
-    dst = str(tmp_path / "optimized_z")
-    optimize_table(
-        spark,
-        src,
-        dst,
-        target_file_bytes=max(1, total // 8),
-        zorder_cols=["l_partkey", "l_suppkey"],
-    )
-    assert _avg_normalized_span(dst, "l_partkey") <= 0.6
-    assert _avg_normalized_span(dst, "l_suppkey") <= 0.8
-    assert spark.read.parquet(dst).count() == li.count()
-
-
 def test_zorder_supports_string_and_timestamp_columns(spark, tmp_path):
     """Order-preserving images let strings and timestamps cluster:
     after z-ordering lineitem by (l_returnflag, l_shipdate), each file

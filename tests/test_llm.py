@@ -181,11 +181,6 @@ def test_media_frame_sample_emits_per_frame_rows(spark):
     ]
 
 
-def test_real_decode_is_stubbed():
-    with pytest.raises(NotImplementedError, match="codec"):
-        multimodal.decode_media(b"bytes", "image")
-
-
 # --- text ----------------------------------------------------------------
 
 def test_lang_id_precedence_and_und(spark):
@@ -260,20 +255,17 @@ def test_ivf_index_persist_and_search_matches_direct(spark, tmp_path):
     must equal the single-plan ivf_cosine_topk, and the stored-index
     search plan must not re-assign cells (no crossJoin against the
     corpus side)."""
-    from cdk_dynamodb_cdc_spark.operators import colocate
-
     emb = load_table(spark, SF_DIR, "embeddings")
     qids = [0, 1, 2, 3, 4]
     direct = {(r.qid, r.rk, r.neighbor_id)
               for r in vectors.ivf_cosine_topk(emb, qids, 10).collect()}
 
     index = vectors.ivf_build(emb)
-    colocate.write_bucketed(
-        index, "ivf_index_t", str(tmp_path / "ivf"),
-        keys=["cell"], num_buckets=8, sort=False,
-    )
+    index.write.mode("overwrite").option(
+        "path", str(tmp_path / "ivf")
+    ).bucketBy(8, "cell").saveAsTable("ivf_index_t")
     try:
-        stored = colocate.read_bucketed(spark, "ivf_index_t")
+        stored = spark.table("ivf_index_t")
         via_store = {(r.qid, r.rk, r.neighbor_id)
                      for r in vectors.ivf_search(stored, qids, 10).collect()}
         assert via_store == direct
@@ -1562,39 +1554,6 @@ def test_semantic_decontaminate_flags_planted_neighbor(spark):
         for r in semantic_decontaminate(corpus, ev, threshold=0.9).collect()
     }
     assert got == {0: (1, True), 1: (0, False), 2: (0, False)}
-
-
-def test_tune_lsh_bands_s_curve_properties():
-    """Band tuning: always a valid factorization of n_perms; clears
-    the recall floor at the threshold when any factorization can;
-    higher thresholds never pick FEWER rows per band (more selective
-    banding is affordable when pairs must be more similar)."""
-    import pytest as _pytest
-
-    from cdk_dynamodb_cdc_spark.llm.dedup import (
-        MINHASH_PERMS,
-        tune_lsh_bands,
-    )
-
-    def capture(s, bands, rows):
-        return 1.0 - (1.0 - s**rows) ** bands
-
-    prev_rows = 0
-    for t in (0.3, 0.5, 0.7, 0.8, 0.9, 0.95):
-        bands, rows = tune_lsh_bands(t)
-        assert bands * rows == MINHASH_PERMS
-        assert capture(t, bands, rows) >= 0.9
-        assert rows >= prev_rows
-        prev_rows = rows
-        # clearly-similar pairs are overwhelmingly captured, clearly-
-        # dissimilar ones mostly not (the S separation)
-        assert capture(min(t + 0.15, 0.99), bands, rows) > 0.97
-    # the engine's default banding (32 x 4) is what tuning picks for a
-    # ~0.7 threshold; looser thresholds trade rows for recall
-    assert tune_lsh_bands(0.7) == (32, 4)
-    assert tune_lsh_bands(0.5) == (64, 2)
-    with _pytest.raises(ValueError, match="threshold"):
-        tune_lsh_bands(1.5)
 
 
 def test_bpe_merge_replace_equals_greedy_fold_random(spark):

@@ -17,11 +17,7 @@ from pyspark.sql import functions as F
 from cdk_dynamodb_cdc_spark import CdcPipeline
 from cdk_dynamodb_cdc_spark.schemas import CDC_RECORD_SCHEMA
 from cdk_dynamodb_cdc_spark.sources.fixtures import fixture_rows
-from cdk_dynamodb_cdc_spark.streaming import (
-    dedup_within_watermark,
-    read_cdc_stream,
-    windowed_change_counts,
-)
+from cdk_dynamodb_cdc_spark.streaming import read_cdc_stream
 
 UTC = datetime.timezone.utc
 
@@ -149,6 +145,51 @@ def test_side_store_replay_overwrites_instead_of_duplicating(spark, tmp_path):
     ids = [r.event_id for r in out.select("event_id").collect()]
     assert sorted(ids) == sorted(set(ids))
     assert {"ev-big", "ev-zero-size"} <= set(ids)
+
+
+def test_killed_batch_replays_into_its_logged_dt_partition(spark, tmp_path):
+    """A micro-batch killed after its side-store write replays into the
+    same `dt=` partition, and that partition is the date of the batch
+    timestamp kept in `checkpoint/offsets/<n>`: the stream dates its
+    blobs in its own plan, not with the wall clock of the replay."""
+    import os
+
+    src = tmp_path / "src"
+    src.mkdir()
+    _write_records_file(src / "part-0.json", fixture_rows())
+    sink, ckpt, side = (str(tmp_path / d) for d in ("sink", "ckpt", "side"))
+
+    def killed(events, batch_id):
+        raise RuntimeError("killed after the side-store write")
+
+    def run(sink_writer):
+        return CdcPipeline().run_stream(
+            read_cdc_stream(
+                spark, str(src), starting_position="trim_horizon"
+            ),
+            sink_path=sink,
+            checkpoint_path=ckpt,
+            side_store_path=side,
+            sink_writer=sink_writer,
+        )
+
+    with pytest.raises(Exception, match="killed after the side-store"):
+        run(killed).awaitTermination(120)
+    first = sorted(d for d in os.listdir(side) if d.startswith("dt="))
+    _run_until_done(run(None))
+
+    with open(os.path.join(ckpt, "offsets", "0")) as fh:
+        meta = json.loads(fh.read().splitlines()[1])
+    logged = datetime.datetime.fromtimestamp(
+        meta["batchTimestampMs"] / 1000, UTC
+    ).date()
+    dts = sorted(d for d in os.listdir(side) if d.startswith("dt="))
+    assert first == dts == [f"dt={logged.isoformat()}"]
+    parts = [d for d in os.listdir(os.path.join(side, dts[0]))
+             if d.startswith("batch_id=")]
+    assert parts == ["batch_id=0"]
+    ids = [r.event_id for r in spark.read.parquet(side).collect()]
+    assert sorted(ids) == ["ev-big", "ev-zero-size"]
 
 
 def test_latest_skips_backlog_trim_horizon_reads_it(spark, tmp_path):
@@ -350,54 +391,6 @@ def test_stream_with_reconstruction_matches_batch_lane(spark, tmp_path):
     assert batch["c1"]["images_url"] is not None
 
 
-def test_kafka_value_decoding_roundtrips_cdc_records(spark):
-    """The Kafka lane's value decoder must round-trip the same JSON
-    wire format the file lane reads — tested on a batch frame of Kafka
-    shape (binary value, partition, offset), since the connector jars
-    are absent here."""
-    from cdk_dynamodb_cdc_spark.streaming import parse_cdc_kafka_records
-
-    payload = json.dumps(
-        {
-            "event_id": "ev-k1",
-            "seq": 7,
-            "ts": "2026-01-01T00:00:00.000000+0000",
-            "operation": "MODIFY",
-            "pk": "user#1",
-            "sk": "profile",
-            "old_image": "{}",
-            "new_image": '{"a":{"N":"1"}}',
-            "size_bytes": 42,
-        }
-    )
-    raw = spark.createDataFrame(
-        [(bytearray(payload.encode()), 0, 123)],
-        "value binary, partition int, offset long",
-    )
-    row = parse_cdc_kafka_records(raw).collect()[0]
-    assert (row.event_id, row.seq, row.operation, row.pk, row.size_bytes) == (
-        "ev-k1", 7, "MODIFY", "user#1", 42
-    )
-
-
-def test_kafka_stream_is_honestly_stubbed(spark):
-    """Without the spark-sql-kafka jars the seekable lane must fail at
-    construction with guidance, not with a raw classpath error."""
-    from cdk_dynamodb_cdc_spark.streaming import read_cdc_kafka_stream
-
-    with pytest.raises(ModuleNotFoundError, match="spark-sql-kafka"):
-        read_cdc_kafka_stream(
-            spark, bootstrap_servers="localhost:9092", topic="cdc"
-        )
-    with pytest.raises(ValueError, match="starting_position"):
-        read_cdc_kafka_stream(
-            spark,
-            bootstrap_servers="localhost:9092",
-            topic="cdc",
-            starting_position="earliest",
-        )
-
-
 def test_custom_sink_writer_replaces_default_sink(spark, tmp_path):
     """The sink_writer hook (the transactional-format plug point) must
     receive the transformed change events per batch and fully replace
@@ -424,230 +417,6 @@ def test_custom_sink_writer_replaces_default_sink(spark, tmp_path):
     import os
 
     assert not os.path.exists(sink)  # default sink fully replaced
-
-
-def test_dedup_within_watermark_collapses_redelivery(spark, tmp_path):
-    src = tmp_path / "src"
-    src.mkdir()
-    rows = fixture_rows()[:2]
-    _write_records_file(src / "a.json", rows + rows)  # redelivered twice
-
-    stream = read_cdc_stream(spark, str(src), starting_position="trim_horizon")
-    deduped = dedup_within_watermark(stream, watermark="1 hour")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _run_until_done(q)
-    out = spark.sql("SELECT event_id FROM dedup_out").collect()
-    ids = [r.event_id for r in out]
-    assert sorted(ids) == ["ev-insert", "ev-scalar"]
-
-
-def test_windowed_counts_drop_late_data(spark, tmp_path):
-    src = tmp_path / "src"
-    src.mkdir()
-    t0 = datetime.datetime(2024, 1, 1, 12, 0, tzinfo=UTC)
-
-    def rec(eid, minutes, op="INSERT"):
-        return (
-            eid, 1, t0 + datetime.timedelta(minutes=minutes), op,
-            "PK", "SK", None, json.dumps({"v": {"N": "1"}}), 64,
-        )
-
-    # file 1: events up to 12:30 -> watermark advances to 12:20
-    _write_records_file(src / "f1.json", [rec("e1", 0), rec("e2", 1), rec("e3", 30)])
-    # file 2: watermark 12:20 finalizes + emits the 12:00 window
-    _write_records_file(src / "f2.json", [rec("e4", 31)])
-    # file 3: an event at 12:02 — 28 min late, beyond the 10-min
-    # watermark, arriving AFTER its window's state was evicted. (Spark
-    # still merges late rows into windows whose state is open; the
-    # watermark guarantee is only that finalized windows stay final.)
-    _write_records_file(src / "f3.json", [rec("late", 2), rec("e5", 32)])
-    # distinct mtimes: the file source orders batches by modification
-    # time, and sub-second writes can tie
-    import os
-    import time
-
-    now = time.time()
-    for i, name in enumerate(["f1.json", "f2.json", "f3.json"]):
-        os.utime(src / name, (now - 60 + 30 * i, now - 60 + 30 * i))
-
-    stream = read_cdc_stream(
-        spark, str(src), starting_position="trim_horizon", max_files_per_trigger=1
-    )
-    counts = windowed_change_counts(stream, window_duration="5 minutes", watermark="10 minutes")
-    q = (
-        counts.writeStream.format("memory")
-        .queryName("win_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _run_until_done(q)
-    out = {
-        (r.window_start.strftime("%H:%M"), r.n_events)
-        for r in spark.sql("SELECT * FROM win_out").collect()
-    }
-    # the finalized 12:00 window counts e1+e2 but NOT the late arrival
-    assert ("12:00", 2) in out
-
-
-def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
-    """Stream-stream interval join (watermarked, state-bounded) must
-    produce exactly the rows the equivalent batch join produces."""
-    import datetime
-
-    from cdk_dynamodb_cdc_spark.streaming.stream import interval_join_streams
-
-    UTC = datetime.timezone.utc
-    t0 = datetime.datetime(2024, 1, 1, tzinfo=UTC)
-
-    def rec(eid, minutes, op, pk):
-        return {
-            "event_id": eid, "seq": minutes,
-            "ts": (t0 + datetime.timedelta(minutes=minutes)).strftime(
-                "%Y-%m-%dT%H:%M:%S.%f%z"),
-            "operation": op, "pk": pk, "sk": "SK",
-            "old_image": None, "new_image": "{}", "size_bytes": 64,
-        }
-
-    rows = [
-        rec("i1", 0, "INSERT", "A"),
-        rec("m1", 10, "MODIFY", "A"),   # within 30 min of i1 -> pair
-        rec("m2", 50, "MODIFY", "A"),   # too late -> no pair
-        rec("i2", 45, "INSERT", "A"),   # m2 within 5 min of i2 -> pair
-        rec("m3", 20, "MODIFY", "B"),   # no INSERT for B -> no pair
-    ]
-    src = tmp_path / "src"
-    src.mkdir()
-    import json as _json
-    (src / "data.json").write_text(
-        "\n".join(_json.dumps(r) for r in rows) + "\n")
-
-    def split(df):
-        ins = df.filter(F.col("operation") == "INSERT").select(
-            F.col("pk"), F.col("ts").alias("ins_ts"),
-            F.col("event_id").alias("ins_id"))
-        mods = df.filter(F.col("operation") == "MODIFY").select(
-            F.col("pk"), F.col("ts").alias("mod_ts"),
-            F.col("event_id").alias("mod_id"))
-        return ins, mods
-
-    # batch expectation
-    batch_df = spark.read.schema(CDC_RECORD_SCHEMA).json(str(src))
-    bi, bm = split(batch_df)
-    expected = {
-        (r.ins_id, r.mod_id)
-        for r in bi.join(
-            bm,
-            (bi["pk"] == bm["pk"])
-            & (bm["mod_ts"] > bi["ins_ts"])
-            & (bm["mod_ts"] <= bi["ins_ts"] + F.expr("INTERVAL 30 MINUTES")),
-        ).collect()
-    }
-    assert expected == {("i1", "m1"), ("i2", "m2")}
-
-    # streaming
-    stream = spark.readStream.schema(CDC_RECORD_SCHEMA).json(str(src))
-    si, sm = split(stream)
-    joined = interval_join_streams(
-        si, sm, key="pk", left_time="ins_ts", right_time="mod_ts",
-        max_delay="30 minutes",
-    ).select("ins_id", "mod_id")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ssj_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_ssj"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert not q.isActive
-    got = {
-        (r.ins_id, r.mod_id)
-        for r in spark.sql("SELECT * FROM ssj_out").collect()
-    }
-    assert got == expected
-
-
-def test_stream_stream_left_outer_interval_join_emits_unmatched(
-    spark, tmp_path
-):
-    """left_outer lane: unmatched left rows must emit null-padded once
-    the watermark passes their join horizon. Finite input, so a far-
-    future flush row on a throwaway key advances both branches'
-    watermarks past every core row's horizon."""
-    import datetime
-    import json as _json
-
-    from cdk_dynamodb_cdc_spark.streaming.stream import interval_join_streams
-
-    t0 = datetime.datetime(2024, 1, 1, tzinfo=UTC)
-
-    def rec(eid, minutes, op, pk):
-        return {
-            "event_id": eid, "seq": minutes,
-            "ts": (t0 + datetime.timedelta(minutes=minutes)).strftime(
-                "%Y-%m-%dT%H:%M:%S.%f%z"),
-            "operation": op, "pk": pk, "sk": "SK",
-            "old_image": None, "new_image": "{}", "size_bytes": 64,
-        }
-
-    rows = [
-        rec("i1", 0, "INSERT", "A"),
-        rec("m1", 10, "MODIFY", "A"),    # pair
-        rec("i3", 5, "INSERT", "C"),     # no MODIFY in window -> null row
-        # flush: throwaway key, MODIFY before its INSERT so they can't
-        # pair; both event-time branches advance past every horizon
-        rec("zi", 1000, "INSERT", "ZZ"),
-        rec("zm", 900, "MODIFY", "ZZ"),
-    ]
-    src = tmp_path / "src"
-    src.mkdir()
-    (src / "data.json").write_text(
-        "\n".join(_json.dumps(r) for r in rows) + "\n")
-
-    stream = spark.readStream.schema(CDC_RECORD_SCHEMA).json(str(src))
-    ins = stream.filter(F.col("operation") == "INSERT").select(
-        F.col("pk"), F.col("ts").alias("ins_ts"),
-        F.col("event_id").alias("ins_id"))
-    mods = stream.filter(F.col("operation") == "MODIFY").select(
-        F.col("pk"), F.col("ts").alias("mod_ts"),
-        F.col("event_id").alias("mod_id"))
-    joined = interval_join_streams(
-        ins, mods, key="pk", left_time="ins_ts", right_time="mod_ts",
-        max_delay="30 minutes", how="left_outer",
-    ).select("ins_id", "mod_id")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ssj_outer")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_ssj_outer"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert not q.isActive
-    got = {
-        (r.ins_id, r.mod_id)
-        for r in spark.sql("SELECT * FROM ssj_outer").collect()
-        if r.ins_id != "zi"  # flush key horizon never flushes itself
-    }
-    assert got == {("i1", "m1"), ("i3", None)}
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="how"):
-        interval_join_streams(
-            ins, mods, key="pk", left_time="ins_ts", right_time="mod_ts",
-            how="left_anti",  # stream-stream anti join is unsupported
-        )
 
 
 def test_stream_static_join_enriches_records(spark, tmp_path):
@@ -881,184 +650,6 @@ def test_snapshot_store_delete_only_bucket_purges_key(spark, tmp_path):
     assert [r.operation for r in raw] == ["REMOVE"]
 
 
-def test_stream_stream_left_semi_interval_join_matches_batch(
-    spark, tmp_path
-):
-    """left_semi stream-stream interval join: each matched left row
-    exactly once (no fan-out on multiple matches), equal to the batch
-    semi join."""
-    import datetime
-    import json as _json
-
-    from cdk_dynamodb_cdc_spark.streaming.stream import (
-        interval_join_streams,
-    )
-
-    UTC = datetime.timezone.utc
-    t0 = datetime.datetime(2024, 1, 1, tzinfo=UTC)
-
-    def rec(eid, minutes, op, pk):
-        return {
-            "event_id": eid, "seq": minutes,
-            "ts": (t0 + datetime.timedelta(minutes=minutes)).strftime(
-                "%Y-%m-%dT%H:%M:%S.%f%z"),
-            "operation": op, "pk": pk, "sk": "SK",
-            "old_image": None, "new_image": "{}", "size_bytes": 64,
-        }
-
-    rows = [
-        rec("i1", 0, "INSERT", "A"),
-        rec("m1", 5, "MODIFY", "A"),    # match for i1
-        rec("m2", 10, "MODIFY", "A"),   # SECOND match: no fan-out
-        rec("i2", 100, "INSERT", "A"),  # no mod in window -> dropped
-        rec("i3", 0, "INSERT", "B"),    # no mods at all -> dropped
-    ]
-    src = tmp_path / "src"
-    src.mkdir()
-    (src / "data.json").write_text(
-        "\n".join(_json.dumps(r) for r in rows) + "\n")
-
-    def split(df):
-        ins = df.filter(F.col("operation") == "INSERT").select(
-            F.col("pk"), F.col("ts").alias("ins_ts"),
-            F.col("event_id").alias("ins_id"))
-        mods = df.filter(F.col("operation") == "MODIFY").select(
-            F.col("pk"), F.col("ts").alias("mod_ts"),
-            F.col("event_id").alias("mod_id"))
-        return ins, mods
-
-    batch_df = spark.read.schema(CDC_RECORD_SCHEMA).json(str(src))
-    bi, bm = split(batch_df)
-    expected = sorted(
-        r.ins_id
-        for r in bi.join(
-            bm,
-            (bi["pk"] == bm["pk"])
-            & (bm["mod_ts"] > bi["ins_ts"])
-            & (bm["mod_ts"] <= bi["ins_ts"] + F.expr("INTERVAL 30 MINUTES")),
-            "left_semi",
-        ).collect()
-    )
-    assert expected == ["i1"]
-
-    stream = spark.readStream.schema(CDC_RECORD_SCHEMA).json(str(src))
-    si, sm = split(stream)
-    joined = interval_join_streams(
-        si, sm, key="pk", left_time="ins_ts", right_time="mod_ts",
-        max_delay="30 minutes", how="left_semi",
-    ).select("ins_id")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ssj_semi_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_semi"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(
-        r.ins_id for r in spark.sql("SELECT * FROM ssj_semi_out").collect()
-    )
-    assert got == expected
-
-
-def test_stream_stream_full_outer_interval_join_matches_batch(
-    spark, tmp_path
-):
-    """full_outer stream-stream interval join: matches join, unmatched
-    LEFT rows null-pad once the watermark passes ins_ts + delay,
-    unmatched RIGHT rows null-pad once it passes mod_ts — equal to the
-    batch full outer join (flush rows excluded)."""
-    import datetime
-    import json as _json
-
-    from cdk_dynamodb_cdc_spark.streaming.stream import (
-        interval_join_streams,
-    )
-
-    UTC = datetime.timezone.utc
-    t0 = datetime.datetime(2024, 1, 1, tzinfo=UTC)
-
-    def rec(eid, minutes, op, pk):
-        return {
-            "event_id": eid, "seq": minutes,
-            "ts": (t0 + datetime.timedelta(minutes=minutes)).strftime(
-                "%Y-%m-%dT%H:%M:%S.%f%z"),
-            "operation": op, "pk": pk, "sk": "SK",
-            "old_image": None, "new_image": "{}", "size_bytes": 64,
-        }
-
-    rows = [
-        rec("i1", 0, "INSERT", "A"),
-        rec("m1", 5, "MODIFY", "A"),     # matches i1
-        rec("i2", 100, "INSERT", "A"),   # unmatched left
-        rec("m2", 200, "MODIFY", "A"),   # unmatched right (precedes no ins)
-        rec("i3", 0, "INSERT", "B"),     # unmatched left (no B mods)
-        rec("m3", 3, "MODIFY", "C"),     # unmatched right (no C inserts)
-        # flush: push both watermarks far past every horizon above
-        rec("i_flush", 100000, "INSERT", "Z"),
-        rec("m_flush", 100000, "MODIFY", "Z"),
-    ]
-    src = tmp_path / "src"
-    src.mkdir()
-    (src / "data.json").write_text(
-        "\n".join(_json.dumps(r) for r in rows) + "\n")
-
-    def split(df):
-        ins = df.filter(F.col("operation") == "INSERT").select(
-            F.col("pk"), F.col("ts").alias("ins_ts"),
-            F.col("event_id").alias("ins_id"))
-        mods = df.filter(F.col("operation") == "MODIFY").select(
-            F.col("pk"), F.col("ts").alias("mod_ts"),
-            F.col("event_id").alias("mod_id"))
-        return ins, mods
-
-    def pairs(df):
-        return sorted(
-            (
-                (r.ins_id, r.mod_id)
-                for r in df.collect()
-                if (r.ins_id or "") != "i_flush"
-                and (r.mod_id or "") != "m_flush"
-            ),
-            key=lambda p: (p[0] or "", p[1] or ""),
-        )
-
-    batch_df = spark.read.schema(CDC_RECORD_SCHEMA).json(str(src))
-    bi, bm = split(batch_df)
-    expected = pairs(
-        bi.join(
-            bm,
-            (bi["pk"] == bm["pk"])
-            & (bm["mod_ts"] > bi["ins_ts"])
-            & (bm["mod_ts"] <= bi["ins_ts"] + F.expr("INTERVAL 30 MINUTES")),
-            "full_outer",
-        ).select("ins_id", "mod_id")
-    )
-    assert (None, "m2") in expected and (None, "m3") in expected
-    assert ("i2", None) in expected and ("i3", None) in expected
-    assert ("i1", "m1") in expected
-
-    stream = spark.readStream.schema(CDC_RECORD_SCHEMA).json(str(src))
-    si, sm = split(stream)
-    joined = interval_join_streams(
-        si, sm, key="pk", left_time="ins_ts", right_time="mod_ts",
-        max_delay="30 minutes", how="full_outer",
-    )
-    q = (
-        joined.select("ins_id", "mod_id")
-        .writeStream.format("memory")
-        .queryName("ssj_fo_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_fo"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = pairs(spark.sql("SELECT * FROM ssj_fo_out"))
-    assert got == expected
-
-
 def test_streaming_cms_maintenance_folds_to_batch_sketch(
     spark, tmp_path
 ):
@@ -1256,99 +847,6 @@ def test_streaming_drift_profile_folds_and_alarms(spark, tmp_path):
     assert alarms == [("flag", "BOOL"), ("v", "S")]
 
 
-def test_stream_stream_right_outer_interval_join_matches_batch(
-    spark, tmp_path
-):
-    """right_outer: matches join, unmatched RIGHT rows null-pad at
-    their right_time horizon, unmatched left rows drop — equal to the
-    batch right outer join (flush rows excluded)."""
-    import datetime
-    import json as _json
-
-    from cdk_dynamodb_cdc_spark.streaming.stream import (
-        interval_join_streams,
-    )
-
-    UTC = datetime.timezone.utc
-    t0 = datetime.datetime(2024, 1, 1, tzinfo=UTC)
-
-    def rec(eid, minutes, op, pk):
-        return {
-            "event_id": eid, "seq": minutes,
-            "ts": (t0 + datetime.timedelta(minutes=minutes)).strftime(
-                "%Y-%m-%dT%H:%M:%S.%f%z"),
-            "operation": op, "pk": pk, "sk": "SK",
-            "old_image": None, "new_image": "{}", "size_bytes": 64,
-        }
-
-    rows = [
-        rec("i1", 0, "INSERT", "A"),
-        rec("m1", 5, "MODIFY", "A"),     # matches i1
-        rec("i2", 100, "INSERT", "A"),   # unmatched left -> dropped
-        rec("m2", 200, "MODIFY", "A"),   # unmatched right -> kept
-        rec("m3", 3, "MODIFY", "C"),     # unmatched right -> kept
-        rec("i_flush", 100000, "INSERT", "Z"),
-        rec("m_flush", 100000, "MODIFY", "Z"),
-    ]
-    src = tmp_path / "src"
-    src.mkdir()
-    (src / "data.json").write_text(
-        "\n".join(_json.dumps(r) for r in rows) + "\n")
-
-    def split(df):
-        ins = df.filter(F.col("operation") == "INSERT").select(
-            F.col("pk"), F.col("ts").alias("ins_ts"),
-            F.col("event_id").alias("ins_id"))
-        mods = df.filter(F.col("operation") == "MODIFY").select(
-            F.col("pk"), F.col("ts").alias("mod_ts"),
-            F.col("event_id").alias("mod_id"))
-        return ins, mods
-
-    def pairs(df):
-        return sorted(
-            (
-                (r.ins_id, r.mod_id)
-                for r in df.collect()
-                if (r.ins_id or "") != "i_flush"
-                and (r.mod_id or "") != "m_flush"
-            ),
-            key=lambda p: (p[0] or "", p[1] or ""),
-        )
-
-    batch_df = spark.read.schema(CDC_RECORD_SCHEMA).json(str(src))
-    bi, bm = split(batch_df)
-    expected = pairs(
-        bi.join(
-            bm,
-            (bi["pk"] == bm["pk"])
-            & (bm["mod_ts"] > bi["ins_ts"])
-            & (bm["mod_ts"] <= bi["ins_ts"] + F.expr("INTERVAL 30 MINUTES")),
-            "right_outer",
-        ).select("ins_id", "mod_id")
-    )
-    assert (None, "m2") in expected and (None, "m3") in expected
-    assert ("i1", "m1") in expected and ("i2", None) not in expected
-
-    stream = spark.readStream.schema(CDC_RECORD_SCHEMA).json(str(src))
-    si, sm = split(stream)
-    joined = interval_join_streams(
-        si, sm, key="pk", left_time="ins_ts", right_time="mod_ts",
-        max_delay="30 minutes", how="right_outer",
-    )
-    q = (
-        joined.select("ins_id", "mod_id")
-        .writeStream.format("memory")
-        .queryName("ssj_ro_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_ro"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = pairs(spark.sql("SELECT * FROM ssj_ro_out"))
-    assert got == expected
-
-
 def test_streaming_inverted_index_maintenance(spark, tmp_path):
     """Search-index maintenance as a running pipeline: each micro-batch
     of documents appends its posting rows (term, doc_id, tf) to a
@@ -1427,99 +925,3 @@ def test_streaming_inverted_index_maintenance(spark, tmp_path):
     assert got == want
     assert {d for d, _, _ in got} == {0, 4, 5}
 
-
-def test_temporal_enrich_stream_matches_batch_temporal_join(
-    spark, tmp_path
-):
-    """Streaming SCD2 enrichment (one (value, open) state cell per
-    key) equals the batch temporal_join on the same interleaved rows,
-    including tombstone holes, a version arriving in a later
-    micro-batch, and a same-instant version replacement."""
-    import datetime
-    import json as _json
-
-    from pyspark.sql import Window
-
-    from cdk_dynamodb_cdc_spark.operators.asof import temporal_join
-    from cdk_dynamodb_cdc_spark.streaming.stream import (
-        TEMPORAL_TAGGED_SCHEMA,
-        temporal_enrich_stream,
-    )
-
-    UTC = datetime.timezone.utc
-    t0 = datetime.datetime(2024, 1, 1, tzinfo=UTC)
-
-    def rec(k, minutes, seq, side, v):
-        return {
-            "k": k, "seq": seq, "side": side, "v": v,
-            "t": (t0 + datetime.timedelta(minutes=minutes)).strftime(
-                "%Y-%m-%dT%H:%M:%S.%f%z"),
-        }
-
-    batch0 = [
-        rec("A", 0, 1, 0, "v1"),
-        rec("A", 5, 2, 1, None),     # fact -> v1
-        rec("A", 10, 3, 0, "v2"),
-        rec("A", 10, 4, 1, None),    # fact AT the open instant -> v2
-        rec("A", 15, 5, 0, None),    # tombstone
-        rec("A", 20, 6, 1, None),    # fact in the hole -> NULL
-        rec("B", 7, 12, 1, None),    # key with no dim at all -> NULL
-    ]
-    batch1 = [
-        rec("A", 25, 7, 0, "v3"),    # reopens in a LATER micro-batch
-        rec("A", 30, 8, 1, None),    # fact -> v3
-        rec("A", 40, 9, 0, "v4"),
-        rec("A", 40, 10, 0, "v5"),   # same-instant replacement
-        rec("A", 40, 11, 1, None),   # fact -> v5 (log order wins)
-    ]
-    src = tmp_path / "src"
-    src.mkdir()
-    (src / "b0.json").write_text(
-        "\n".join(_json.dumps(r) for r in batch0) + "\n")
-    (src / "b1.json").write_text(
-        "\n".join(_json.dumps(r) for r in batch1) + "\n")
-
-    # batch reference: SCD2 intervals via lead over (t, seq) incl.
-    # tombstones, then the batch temporal join
-    tagged = spark.read.schema(TEMPORAL_TAGGED_SCHEMA).json(str(src))
-    w = Window.partitionBy("k").orderBy("t", "seq")
-    dim = (
-        tagged.filter(F.col("side") == 0)
-        .withColumn("valid_to", F.lead("t").over(w))
-        .filter(F.col("v").isNotNull())
-        .select("k", F.col("v").alias("state_v"),
-                F.col("t").alias("valid_from"), "valid_to")
-    )
-    facts = tagged.filter(F.col("side") == 1).select("k", "t", "seq")
-    expected = {
-        (r.k, r.seq): r.state_v
-        for r in temporal_join(
-            facts, dim, fact_time="t", keys=("k",),
-            value_cols=("state_v",),
-        ).collect()
-    }
-    assert expected == {
-        ("A", 2): "v1", ("A", 4): "v2", ("A", 6): None,
-        ("A", 8): "v3", ("A", 11): "v5", ("B", 12): None,
-    }
-
-    stream = (
-        spark.readStream.schema(TEMPORAL_TAGGED_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    q = (
-        temporal_enrich_stream(stream)
-        .writeStream.format("memory")
-        .queryName("temporal_enrich_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.k, r.seq): r.v
-        for r in spark.sql("SELECT * FROM temporal_enrich_out").collect()
-    }
-    assert got == expected

@@ -14,6 +14,7 @@ by a solo sweep can be merged via SF1_PREVERIFIED_GLOB instead of
 re-running inside a chunk.
 
 Usage: python tools/run_sf1_full.py [out.json] [chunk_size]
+(``out.json`` defaults to ``correctness.json`` in the chunk directory.)
 """
 
 from __future__ import annotations
@@ -46,7 +47,8 @@ TMP = "/tmp/sf1_full"
 
 
 def main() -> int:
-    out = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/CORRECTNESS_SF1_r12.json"
+    # no default in the repo: a committed artifact is named by its caller
+    out = sys.argv[1] if len(sys.argv) > 1 else os.path.join(TMP, "correctness.json")
     chunk_size = int(sys.argv[2]) if len(sys.argv) > 2 else 28
     names = list(entrymod.queries())
     os.makedirs(TMP, exist_ok=True)
